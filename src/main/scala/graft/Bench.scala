@@ -1,6 +1,15 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
+  /** The contract line's parallelism fields. `cpus` stays a JSON number
+    * when it is one; any other width (`SPARK_GRAFT_CPUS="*"`) is written
+    * as a string so the line still parses.
+    */
+  private[graft] def parallelismJson(cpus: String, defaultParallelism: Int, master: String): String = {
+    def str(v: String) = "\"" + v.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+    s""""cpus":${cpus.toIntOption.fold(str(cpus))(_.toString)},"default_parallelism":$defaultParallelism,"master":${str(master)}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -168,7 +177,7 @@ object Bench {
     // and the context's own defaultParallelism so the probe can
     // distinguish "ignores the env" from "overhead-bound at this SF"
     val parallelism =
-      s""""cpus":$cpus,"default_parallelism":${spark.sparkContext.defaultParallelism},"master":"${spark.sparkContext.master}""""
+      parallelismJson(cpus, spark.sparkContext.defaultParallelism, spark.sparkContext.master)
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec",$parallelism,$subtotals,"vs_prev_round":$vsPrev,"queries":$qs,"errors":$errJson,"sf":"$sfDir","loadavg_start":"$loadStart","loadavg_end":"$loadEnd","load_warn":$loadWarn,"samples":$samplesJson}"""
     // the JSON line is the contract; also land it as a file so the result

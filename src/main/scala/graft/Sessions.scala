@@ -1,5 +1,9 @@
 package graft
 
+import java.lang.management.ManagementFactory
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 
 /** Shared master-selection plumbing for the runtime mains and the test
@@ -25,22 +29,28 @@ object Sessions {
 
   def master(default: String): String = sys.env.getOrElse(MasterEnv, default)
 
-  /** The JDK-17 module opens Spark needs in EVERY JVM it owns. The
-    * driver gets them from build.sbt's `javaOptions`; local-cluster
-    * executor JVMs are launched by the Worker and inherit nothing from
-    * sbt, so they must carry them via `spark.executor.extraJavaOptions`.
-    * Mirrors org.apache.spark.launcher.JavaModuleOptions (what
-    * spark-submit injects).
+  /** The running JVM's launch arguments that `keep` selects. Under sbt
+    * these come from build.sbt's `javaOptions`, the one list of JVM
+    * options; under spark-submit, from the launcher.
     */
-  private val jdk17Opens: String = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-  ).map(p => s"--add-opens=$p=ALL-UNNAMED").mkString(" ")
+  private def inherited(keep: String => Boolean): Seq[String] =
+    ManagementFactory.getRuntimeMXBean.getInputArguments.asScala.toSeq.filter(keep)
+
+  /** The JDK-17 module opens (`--add-opens=…`) Spark needs in every JVM
+    * it owns, as the running JVM carries them.
+    */
+  private def moduleOpens: Seq[String] = inherited(_.startsWith("--add-opens"))
+
+  /** The command line of a driver JVM started by hand (a second driver
+    * racing a fence, a chaos harness, a victim to kill) that runs `main`
+    * on this JVM's classpath: the running JVM's module opens and
+    * `-Dspark.*` settings, so the child runs with the same Spark
+    * settings, and a 3 GiB heap of its own.
+    */
+  def childJvm(main: String, args: String*): Seq[String] =
+    Seq(s"${sys.props("java.home")}/bin/java") ++ moduleOpens ++
+      inherited(_.startsWith("-Dspark.")) ++
+      Seq("-Xmx3g", "-cp", sys.props("java.class.path"), main) ++ args
 
   /** Apply the master (env override or `default`) plus, for
     * `local-cluster`, the executor-process wiring: the driver's full
@@ -62,7 +72,9 @@ object Sessions {
     if (!m.startsWith("local-cluster")) withM
     else withM
       .config("spark.executor.extraClassPath", sys.props("java.class.path"))
-      .config("spark.executor.extraJavaOptions", jdk17Opens)
+      // opens only: Spark rejects -Dspark.* and -Xmx in extraJavaOptions;
+      // executors take spark.* settings from the driver's SparkConf
+      .config("spark.executor.extraJavaOptions", moduleOpens.mkString(" "))
       // PIN (not change) standalone's executor-retry bound (VERDICT r13
       // + round-14 self-review): 10 IS Spark 4.1.2's default — setting
       // it documents the dependence and guards upstream default drift,

@@ -110,11 +110,11 @@ private[graft] object StoreDirs {
       val from = Paths.get(src)
       val to = Paths.get(dst)
       import scala.jdk.CollectionConverters._
-      Files.walk(from).iterator().asScala.foreach { p =>
+      scala.util.Using.resource(Files.walk(from))(_.iterator().asScala.foreach { p =>
         val t = to.resolve(from.relativize(p))
         if (Files.isDirectory(p)) Files.createDirectories(t)
         else { Files.createDirectories(t.getParent); Files.copy(p, t) }
-      }
+      })
     } else require(org.apache.hadoop.fs.FileUtil.copy(fs, sp, fs,
       new org.apache.hadoop.fs.Path(dst), false, conf),
       s"could not copy base store $src to $dst")
@@ -644,7 +644,7 @@ private[graft] object StoreDirs {
   private[graft] def deleteRecursively(root: Path): Unit =
     if (Files.exists(root)) {
       import scala.jdk.CollectionConverters._
-      Files.walk(root).iterator().asScala.toSeq.reverse
+      scala.util.Using.resource(Files.walk(root))(_.iterator().asScala.toSeq.reverse)
         .foreach(p => Files.deleteIfExists(p))
     }
 }

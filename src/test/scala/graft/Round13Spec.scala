@@ -276,18 +276,7 @@ class Round13Spec extends SparkSpec {
     val go = s"$root/go"
     val outcome = s"$root/outcome"
     val log = new java.io.File(s"$root/subprocess.log")
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar",
-    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-    val cmd = Seq(s"${sys.props("java.home")}/bin/java") ++ addOpens ++ Seq(
-      "-Xmx3g", "-cp", sys.props("java.class.path"),
-      "graft.FenceRaceMain", dir, store, ready, go, outcome)
+    val cmd = Sessions.childJvm("graft.FenceRaceMain", dir, store, ready, go, outcome)
     val proc = new ProcessBuilder(cmd: _*)
       .redirectErrorStream(true)
       .redirectOutput(log)

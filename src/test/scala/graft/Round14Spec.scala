@@ -168,17 +168,7 @@ class Round14Spec extends SparkSpec {
     val root = tmpDir("r14-chaos")
     val outcome = s"$root/outcome.json"
     val log = new java.io.File(s"$root/chaos.log")
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar",
-    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-    val cmd = Seq(s"${sys.props("java.home")}/bin/java") ++ addOpens ++ Seq(
-      "-Xmx3g", "-cp", sys.props("java.class.path"),
+    val cmd = Sessions.childJvm(
       "graft.ChaosMain", "/root/testdata/sf0.1", outcome)
     val pb = new ProcessBuilder(cmd: _*)
       .redirectErrorStream(true)

@@ -24,16 +24,6 @@ class Round15ChaosSpec extends SparkSpec {
 
   private val chaosSf = "/root/testdata/sf0.01"
 
-  private val addOpens = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-
   private def readLog(f: java.io.File): String =
     try new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
     catch { case _: Throwable => "<no log>" }
@@ -53,8 +43,7 @@ class Round15ChaosSpec extends SparkSpec {
     */
   private def killVictim(logFile: java.io.File, args: Seq[String])
                         (trigger: () => Boolean): Boolean = {
-    val cmd = Seq(s"${sys.props("java.home")}/bin/java") ++ addOpens ++ Seq(
-      "-Xmx3g", "-cp", sys.props("java.class.path"), "graft.DriverVictim") ++ args
+    val cmd = Sessions.childJvm("graft.DriverVictim", args: _*)
     val proc = new ProcessBuilder(cmd: _*)
       .redirectErrorStream(true).redirectOutput(logFile).start()
     val deadline = System.currentTimeMillis() + 180000L
