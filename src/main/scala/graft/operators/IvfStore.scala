@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.Tables
+import graft.operators.GenStore.Gen
 
 /** [EXT] Materialized IVF ANN INDEX — the [[LabelStore]] generational
   * discipline applied to [[Similarity.x3AnnIvf]]'s index half, with
@@ -32,22 +32,22 @@ import graft.engine.Tables
   *   - `storeDir/lists/__batch=<j>/c_id=<c>/` — the inverted lists
   *     (vec_id, e, norm), a SHARED dataset outside the generation dirs
   *     (the LabelStore index idiom): a full rebuild writes batch k and
-  *     publishes base=k; an append writes only its own batch directory
-  *     (idempotent under crash-retry — the batch number is the
-  *     unpublished generation's, so a retry deletes and rewrites its
-  *     own orphan) and publishes base=previous base. Probes filter
-  *     `__batch ∈ [b, k]` AND the probed `c_id`s — both partition
-  *     columns, so the scan reads only the probed cells of the live
-  *     batches (partition pruning, asserted in Round8Spec).
+  *     publishes base=k; an append writes only its own batch and
+  *     publishes base=previous base. Probes filter `__batch ∈ [b, k]`
+  *     AND the probed `c_id`s — both partition columns, so the scan
+  *     reads only the probed cells of the live batches (partition
+  *     pruning, asserted in Round8Spec).
   *   - `storeDir/digests/__batch=<j>/` — (vec_id, h) per batch, the
   *     append-detection key: appended = corpus digests − stored digests;
   *     any stored digest missing from the corpus means mutation/delete →
   *     full rebuild (validity by measurement, as everywhere).
+  *   - `storeDir/tombs/__batch=<j>/` — (vec_id, c_id) tombstones, the
+  *     FAISS `remove_ids` analogue; `c_id` (from the narrow id scan at
+  *     delete time) lets the imbalance gauges subtract per-cell dead
+  *     counts without touching vector data.
   *
-  * Retirement keeps the newest two generations' batch ranges live (the
-  * BandStore reader contract: resolve-again recovers), retiring older
-  * generation dirs by dot-rename and deleting list/digest batches no
-  * live generation references.
+  * Generations, claims, publish, retirement, the ingest floor and the
+  * tombstone mask follow [[GenStore]].
   *
   * Determinism: the full build is bit-deterministic (md5 seed order,
   * exact decimal centroid means), assignment is per-vector pure, and
@@ -76,183 +76,33 @@ object IvfStore {
   private def digestsOf(emb: DataFrame): DataFrame =
     emb.select(col("vec_id"), xxhash64(col("vec_id"), col("embedding")).as("h"))
 
-  private def fingerprintOf(dg: DataFrame): (Long, Long) = {
-    val r = dg.agg(count(lit(1)), expr("bit_xor(h)")).head
-    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-  }
-
   /** (row count, order-insensitive digest) over the embeddings table —
     * xxhash64 spans vec_id and the float array, so any vector edit
     * invalidates.
     */
   private[graft] def fingerprint(s: SparkSession, dir: String): (Long, Long) =
-    fingerprintOf(digestsOf(Tables.embeddings(s, dir)))
+    GenStore.fingerprint(digestsOf(Tables.embeddings(s, dir)))
 
-  private case class Gen(k: Long, n: Long, fp: Long, base: Long, path: Path)
-
-  private def fsOf(s: SparkSession, p: Path) =
-    p.getFileSystem(s.sparkContext.hadoopConfiguration)
-
-  private val GenName = """gen=(\d+)__n=(\d+)__fp=([0-9a-f]+)__b=(\d+)""".r
-
-  private def listGens(s: SparkSession, storeDir: String): Seq[Gen] = {
-    val root = new Path(storeDir)
-    val fs = fsOf(s, root)
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq.collect {
-      case st if st.isDirectory => st.getPath.getName match {
-        case GenName(k, n, fp, b) =>
-          Some(Gen(k.toLong, n.toLong, java.lang.Long.parseUnsignedLong(fp, 16),
-            b.toLong, st.getPath))
-        case _ => None
-      }
-    }.flatten.sortBy(_.k)
-  }
-
-  private def listsDir(storeDir: String) = s"$storeDir/lists"
-  private def digestsDir(storeDir: String) = s"$storeDir/digests"
-  private def tombsDir(storeDir: String) = s"$storeDir/tombs"
-
-  /** Tombstones visible to generation `gen` —
-    * `tombs/__batch=<j>/ (vec_id, c_id)`, the FAISS `remove_ids`
-    * analogue under the batch discipline: a delete lands its tombstone
-    * batch numbered with the generation it publishes with, so the
-    * published range filter `[base, k]` that gates every list/digest
-    * read gates tombstones identically — a crashed (never-published)
-    * delete attempt's batch sits outside the live range and the retry
-    * overwrites it. `c_id` (from the narrow id scan at delete time) lets
-    * later imbalance gauges subtract per-cell dead counts without ever
-    * touching vector data.
-    */
-  private def tombstonesOf(s: SparkSession, storeDir: String,
-                           gen: Gen): Option[DataFrame] = {
-    val p = new Path(tombsDir(storeDir))
-    if (!StoreDirs.hasBatchDirs(fsOf(s, p), p)) None
-    else Some(readBatches(s, tombsDir(storeDir), gen.base, gen.k))
-  }
-
-  /** Drop rows a tombstone masks: a row is dead iff some visible
-    * tombstone for its vec_id is STRICTLY newer than the row's batch —
-    * batch-aware so a vector RE-ADDED after deletion (landing in a later
-    * batch) stays live. Strict `>` rather than `>=`: the pure-delete
-    * path lands no data rows in its tombstone's batch (the two are
-    * equivalent there), and the log-driven RESTATE path
-    * ([[appendVectors]]) lands the replacing row in the SAME batch as
-    * the tombstone that kills its predecessor — one publish, and only
-    * the strict comparison lets the replacement survive it. Tombstone
-    * volume is bounded by the compaction trigger, so the anti-join's
-    * build side stays small.
-    */
   private def maskDead(df: DataFrame, ts: Option[DataFrame]): DataFrame =
-    ts.fold(df) { t =>
-      val k = t.select(col("vec_id").as("__ts_id"), col("__batch").as("__ts_b"))
-      df.join(k, df("vec_id") === k("__ts_id") && k("__ts_b") > df("__batch"),
-        "left_anti")
-    }
+    GenStore.maskDead(df, ts, "vec_id")
 
-  /** Write one batch of a shared partitioned dataset into its own
-    * `__batch=<k>` directory — idempotent under crash-retry. Batch
-    * `batch` is always UNPUBLISHED (no generation references it until
-    * the publish rename), so the whole `__batch` directory is deleted
-    * first: a crashed earlier attempt could have landed partitions
-    * (e.g. `c_id`s) this retry no longer produces — those orphans would
-    * go live with the publish and serve phantom rows (ADVICE r9,
-    * medium).
+  private def store(s: SparkSession, storeDir: String) =
+    new GenStore(s, storeDir, "IvfStore", Seq(Lists, Digests, Tombs))
+
+  private val Lists = "lists"
+  private val Digests = "digests"
+  private val Tombs = "tombs"
+
+  /** Publish `centroids` as generation `next` over batches
+    * `[base, next]`; batches below the range of both it and `prev` (the
+    * generation it supersedes) are deleted.
     */
-  private def writeBatch(df: DataFrame, batch: Long, parts: Seq[String],
-                         dir: String): Unit = {
-    val batchDir = new Path(dir, s"__batch=$batch")
-    val fs = fsOf(df.sparkSession, batchDir)
-    if (fs.exists(batchDir)) fs.delete(batchDir, true)
-    // write DIRECTLY into the batch's own `__batch=<k>` directory (the
-    // partition value comes from the dir name at read time, exactly as
-    // the partitionBy form landed it) instead of a dynamic-partition
-    // overwrite of the whole dataset: the batch is unpublished until the
-    // generation rename so no reader can see the in-flight dir, the
-    // delete above already makes retries idempotent, and the dynamic
-    // committer's stage-and-move machinery was pure per-write overhead
-    // (the LabelStore.writeOne discipline — measured there at ~2 s per
-    // small write; here ~0.5 s per digests/tombs/lists write at sf0.1).
-    val w = df.write.mode(SaveMode.Overwrite)
-    (if (parts.isEmpty) w else w.partitionBy(parts: _*)).parquet(batchDir.toString)
-  }
-
-  private def readBatches(s: SparkSession, dir: String, from: Long, to: Long): DataFrame =
-    s.read.parquet(dir).filter(col("__batch") >= from && col("__batch") <= to)
-
-  /** Publish centroids as generation `next` with batch range
-    * `[base, next]`, then retire: all but the newest two generation dirs
-    * dot-rename away, and list/digest batches below the oldest live
-    * generation's base are deleted (no live reader can reference them).
-    */
-  /** The last streaming micro-batch id this store has absorbed — the
-    * exactly-once floor for [[appendVectors]]; carried forward through
-    * every later publish (corpus-driven ones included) so a replayed
-    * micro-batch stays a skip across mixed maintenance.
-    */
-  private def readIngestId(s: SparkSession, gen: Gen): Option[Long] = {
-    val p = new Path(s"${gen.path}/ingest")
-    val fs = fsOf(s, p)
-    if (!fs.exists(p)) None
-    // a scalar is driver metadata, not a dataset: the pre-r17 layout
-    // stored it as a 1-row parquet, costing a full Spark job (listing +
-    // footer + scan + collect, ~0.1-0.4 s) per exactly-once floor check
-    // — several times per ingest lane. Plain text file now; the
-    // directory form is the legacy layout, still readable.
-    else if (fs.getFileStatus(p).isDirectory)
-      Some(s.read.parquet(p.toString).collect().head.getLong(0))
-    else {
-      val in = fs.open(p)
-      try Some(new String(in.readAllBytes,
-        java.nio.charset.StandardCharsets.UTF_8).trim.toLong)
-      finally in.close()
-    }
-  }
-
-  private def publishGen(s: SparkSession, storeDir: String, next: Long, n: Long,
-                         fp: Long, base: Long, centroids: DataFrame,
-                         ingestId: Option[Long] = None): Unit = {
-    val root = new Path(storeDir)
-    val fs = fsOf(s, root)
-    fs.mkdirs(root)
-    val gens = listGens(s, storeDir)
-    // CAS half of the concurrent-writer guard (the caller holds the
-    // generation fence)
-    StoreDirs.requireUnadvanced("IvfStore",
-      gens.lastOption.map(_.k).getOrElse(0L), next)
-    val staging = new Path(root, s".staging-$next")
-    // Stale-dir discipline (same as writeBatch): a crashed prior attempt
-    // at this generation may have left `$staging/ingest` behind; with
-    // carried=None it would never be overwritten and a never-committed
-    // micro-batch id would ride into the new generation, turning the
-    // stream's retry of that batch into a silent skip.
-    if (fs.exists(staging)) fs.delete(staging, true)
-    centroids.write.mode(SaveMode.Overwrite).parquet(s"$staging/centroids")
-    locally {
-      val carried = (gens.lastOption.flatMap(readIngestId(s, _)) ++ ingestId)
-        .reduceOption(_ max _)
-      carried.foreach { id =>
-        // scalar metadata as a plain file (see readIngestId): the 1-row
-        // parquet form cost a Spark write job per publish
-        val out = fs.create(new Path(s"$staging/ingest"), true)
-        try out.write(id.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-      }
-    }
-    StoreDirs.publishStaged(fs, root, next, staging,
-      new Path(root,
-        s"gen=${next}__n=${n}__fp=${java.lang.Long.toHexString(fp)}__b=${base}"),
-      gens.dropRight(1).map(_.path), "IvfStore")
-    val keepFrom = math.min(base, gens.lastOption.map(_.base).getOrElse(base))
-    Seq(listsDir(storeDir), digestsDir(storeDir), tombsDir(storeDir)).foreach { d =>
-      val dp = new Path(d)
-      if (fs.exists(dp)) fs.listStatus(dp).foreach { st =>
-        st.getPath.getName match {
-          case s"__batch=$b" if b.toLongOption.exists(_ < keepFrom) =>
-            fs.delete(st.getPath, true)
-          case _ => ()
-        }
-      }
+  private def publish(gs: GenStore, prev: Option[Gen], next: Long, n: Long,
+                      fp: Long, base: Long, centroids: DataFrame,
+                      ingestId: Option[Long]): Unit = {
+    val keepFrom = prev.fold(base)(g => math.min(base, g.base))
+    gs.publish(next, n, fp, Some(base), None, ingestId, _ >= keepFrom) { staging =>
+      centroids.write.mode(SaveMode.Overwrite).parquet(s"$staging/centroids")
     }
   }
 
@@ -269,9 +119,9 @@ object IvfStore {
   private[graft] def buildVecs(emb: DataFrame, storeDir: String,
                                ingestId: Option[Long] = None,
                                owner: Option[String] = None): Unit = {
-    val s = emb.sparkSession
+    val gs = store(emb.sparkSession, storeDir)
     val dg = digestsOf(emb)
-    val (n, fp) = fingerprintOf(dg)
+    val (n, fp) = GenStore.fingerprint(dg)
     // NOT persisted (VERDICT r14 #1, the 8 GiB heap bound): the corpus
     // is scanned exactly twice — the bounded training-sample TakeOrdered
     // inside ivfIndex and the single list-assignment pass — and pinning
@@ -281,14 +131,12 @@ object IvfStore {
     val e = Similarity.normedOf(emb)
     val (cent, lists, smp) = Similarity.ivfIndexWithSample(e)
     try {
-      val next = listGens(s, storeDir).lastOption.map(_.k).getOrElse(0L) + 1
-      val root = new Path(storeDir)
-      val fs = fsOf(s, root)
-      StoreDirs.withGenFence(fs, root, next, owner) {
-        writeBatch(lists.repartition(Similarity.IvfNList, col("c_id")), next, Seq("c_id"), listsDir(storeDir))
-        writeBatch(dg, next, Seq.empty, digestsDir(storeDir))
-        publishGen(s, storeDir, next, n, fp, base = next, centroids = cent,
-          ingestId = ingestId)
+      val prev = gs.latest
+      val next = prev.fold(1L)(_.k + 1)
+      gs.claim(next, owner) {
+        gs.writeBatch(lists.repartition(Similarity.IvfNList, col("c_id")), Lists, next, Seq("c_id"))
+        gs.writeBatch(dg, Digests, next, Seq.empty)
+        publish(gs, prev, next, n, fp, base = next, cent, ingestId)
       }
     } finally { cent.unpersist(); smp.unpersist() }
   }
@@ -298,7 +146,7 @@ object IvfStore {
     */
   def ensureCurrent(s: SparkSession, dir: String, storeDir: String): Boolean = {
     val (n, fp) = fingerprint(s, dir)
-    listGens(s, storeDir).lastOption match {
+    store(s, storeDir).latest match {
       case Some(g) if g.n == n && g.fp == fp => false
       case _ => build(s, dir, storeDir); true
     }
@@ -326,16 +174,16 @@ object IvfStore {
 
   private[graft] def ensureIncrementalVecs(emb: DataFrame, storeDir: String): String = {
     val s = emb.sparkSession
+    val gs = store(s, storeDir)
     val dg = digestsOf(emb).persist()
     try {
-      val (n, fp) = fingerprintOf(dg)
-      val gens = listGens(s, storeDir)
-      if (gens.lastOption.exists(g => g.n == n && g.fp == fp)) return "noop"
-      val gen = gens.lastOption.getOrElse { buildVecs(emb, storeDir); return "full" }
-      val dgPath = new Path(digestsDir(storeDir))
-      if (!fsOf(s, dgPath).exists(dgPath)) { buildVecs(emb, storeDir); return "full" }
-      val ts = tombstonesOf(s, storeDir, gen)
-      val stored = maskDead(readBatches(s, digestsDir(storeDir), gen.base, gen.k), ts)
+      val (n, fp) = GenStore.fingerprint(dg)
+      val latest = gs.latest
+      if (latest.exists(g => g.n == n && g.fp == fp)) return "noop"
+      val gen = latest.getOrElse { buildVecs(emb, storeDir); return "full" }
+      if (!gs.hasDataset(Digests)) { buildVecs(emb, storeDir); return "full" }
+      val ts = gs.tombstones(Tombs, gen)
+      val stored = maskDead(gs.readBatches(Digests, gen), ts)
         .select(col("vec_id"), col("h").as("h_idx"))
       // ONE full-outer digest pass classifies the delta (the LabelStore
       // discipline): corpus-only rows are appends; index-only rows are
@@ -372,7 +220,7 @@ object IvfStore {
         // the live corpus, probes pay more masking than a rebuild costs
         val priorDead = ts.map(_.count()).getOrElse(0L)
         if (priorDead + nDel > 0.5 * n) { buildVecs(emb, storeDir); return "full" }
-        val live = maskDead(readBatches(s, listsDir(storeDir), gen.base, gen.k)
+        val live = maskDead(gs.readBatches(Lists, gen)
           .select(col("vec_id"), col("c_id"), col("__batch")), ts)
         val newTombs = live.join(deleted, Seq("vec_id"), "left_semi")
           .select(col("vec_id"), col("c_id")).localCheckpoint()
@@ -386,17 +234,11 @@ object IvfStore {
         if (maxCell > ImbalanceFactor * n / Similarity.IvfNList) {
           buildVecs(emb, storeDir); return "full"
         }
-        // tombstones land as batch `next` BEFORE the publish: outside the
-        // published range until the rename, so a crash in between leaves
-        // the old generation serving unmasked and the retry (which still
-        // sees the deletes in the stored digests) overwrites the batch
-        locally {
-          val root = new Path(storeDir)
-          val fs = fsOf(s, root)
-          StoreDirs.withGenFence(fs, root, next) {
-            writeBatch(newTombs.coalesce(8), next, Seq.empty, tombsDir(storeDir))
-            publishGen(s, storeDir, next, n, fp, base = gen.base, centroids = cent)
-          }
+        // a crash before the publish leaves the old generation serving
+        // unmasked, and the retry still sees the deletes in the digests
+        gs.claim(next, None) {
+          gs.writeBatch(newTombs.coalesce(8), Tombs, next, Seq.empty)
+          publish(gs, Some(gen), next, n, fp, base = gen.base, cent, None)
         }
         return "incremental-delete"
       }
@@ -409,7 +251,7 @@ object IvfStore {
       // The stored side is a count over the lists' partition columns —
       // columnar metadata, no vector data crosses the wire — minus the
       // per-cell dead counts the tombstones carry.
-      val oldCells = readBatches(s, listsDir(storeDir), gen.base, gen.k)
+      val oldCells = gs.readBatches(Lists, gen)
         .groupBy(col("c_id")).agg(count(lit(1)).as("cnt"))
       val deadCells = ts.map(_.groupBy(col("c_id")).agg((-count(lit(1))).as("cnt")))
       val newCells = assigned.groupBy(col("c_id")).agg(count(lit(1)).as("cnt"))
@@ -422,24 +264,13 @@ object IvfStore {
       if (maxCell > ImbalanceFactor * n / Similarity.IvfNList) {
         buildVecs(emb, storeDir); return "full"
       }
-      locally {
-        val root = new Path(storeDir)
-        val fs = fsOf(s, root)
-        StoreDirs.withGenFence(fs, root, next) {
-          writeBatch(assigned.repartition(Similarity.IvfNList, col("c_id")), next, Seq("c_id"), listsDir(storeDir))
-          writeBatch(dg.join(appended, Seq("vec_id"), "left_semi"), next,
-            Seq.empty, digestsDir(storeDir))
-          publishGen(s, storeDir, next, n, fp, base = gen.base, centroids = cent)
-        }
+      gs.claim(next, None) {
+        gs.writeBatch(assigned.repartition(Similarity.IvfNList, col("c_id")), Lists, next, Seq("c_id"))
+        gs.writeBatch(dg.join(appended, Seq("vec_id"), "left_semi"), Digests, next, Seq.empty)
+        publish(gs, Some(gen), next, n, fp, base = gen.base, cent, None)
       }
       "incremental"
     } finally dg.unpersist()
-  }
-
-  private def latest(s: SparkSession, storeDir: String): Gen = {
-    val gens = listGens(s, storeDir)
-    require(gens.nonEmpty, s"IvfStore: no published generation under $storeDir")
-    gens.last
   }
 
   /** The query half of [[Similarity.x3AnnIvf]] served from the store:
@@ -461,7 +292,8 @@ object IvfStore {
     */
   private[graft] def probeInputs(s: SparkSession, dir: String, storeDir: String,
                                  maxQueryId: Long = 10L): (DataFrame, DataFrame) = {
-    val gen = latest(s, storeDir)
+    val gs = store(s, storeDir)
+    val gen = gs.newest
     val cent = s.read.parquet(s"${gen.path}/centroids")
     val queries = Similarity.normed(s, dir).filter(col("vec_id") < maxQueryId)
       .select(col("vec_id").as("q_id"), col("e").as("qe"), col("norm").as("qnorm"))
@@ -472,9 +304,8 @@ object IvfStore {
     // mask: the anti-join's probe side is already pruned to the probed
     // cells and its build side is delete-sized
     val lists = maskDead(
-        readBatches(s, listsDir(storeDir), gen.base, gen.k)
-          .filter(col("c_id").isin(probed: _*)),
-        tombstonesOf(s, storeDir, gen))
+        gs.readBatches(Lists, gen).filter(col("c_id").isin(probed: _*)),
+        gs.tombstones(Tombs, gen))
       .select(col("vec_id"), col("e"), col("norm"), col("c_id"))
     (qCells, lists)
   }
@@ -487,9 +318,9 @@ object IvfStore {
     * a corpus file the store has since diverged from.
     */
   private[graft] def liveVectors(s: SparkSession, storeDir: String): DataFrame = {
-    val gen = latest(s, storeDir)
-    maskDead(readBatches(s, listsDir(storeDir), gen.base, gen.k),
-      tombstonesOf(s, storeDir, gen))
+    val gs = store(s, storeDir)
+    val gen = gs.newest
+    maskDead(gs.readBatches(Lists, gen), gs.tombstones(Tombs, gen))
       .select(col("vec_id"), col("e"), col("norm"), col("c_id"))
   }
 
@@ -639,8 +470,9 @@ object IvfStore {
                     streamBatchId: Long,
                     ownerScope: Option[String] = None): String = {
     val s = batch.sparkSession
-    val gens = listGens(s, storeDir)
-    gens.lastOption.flatMap(readIngestId(s, _)) match {
+    val gs = store(s, storeDir)
+    val latest = gs.latest
+    latest.flatMap(gs.ingestFloor) match {
       case Some(last) if last >= streamBatchId => return "skip"
       case _ => ()
     }
@@ -660,24 +492,16 @@ object IvfStore {
       if (shape.getLong(0) == 0) return "empty"
       require(shape.getLong(0) == shape.getLong(1),
         s"IvfStore.appendVectors: a micro-batch carries conflicting embeddings for the same vec_id")
-      val dgPath = new Path(digestsDir(storeDir))
-      val gen0 = gens.lastOption.filter(_ => fsOf(s, dgPath).exists(dgPath))
+      val owner = GenStore.ingestOwner(ownerScope, streamBatchId)
+      val gen0 = latest.filter(_ => gs.hasDataset(Digests))
       if (gen0.isEmpty) {
-        // same owner token as the append lane below: an in-process
-        // replay of batch 0 reclaims its own debris via the exact
-        // process token (zero lease); a RESTARTED driver gets the short
-        // restart lease only when ownerScope carries the checkpoint —
-        // the bare ingest-<batchId> form waits the full foreign lease
-        // (ADVICE r12: a bare batch counter proves no stream identity)
-        buildVecs(cleaned, storeDir, ingestId = Some(streamBatchId),
-          owner = Some(ownerScope.fold(s"ingest-$streamBatchId")(cp =>
-            s"ingest-$cp-$streamBatchId")))
+        buildVecs(cleaned, storeDir, ingestId = Some(streamBatchId), owner = owner)
         return "ingest-initial"
       }
       val gen = gen0.get
       val next = gen.k + 1
-      val ts = tombstonesOf(s, storeDir, gen)
-      val stored = maskDead(readBatches(s, digestsDir(storeDir), gen.base, gen.k), ts)
+      val ts = gs.tombstones(Tombs, gen)
+      val stored = maskDead(gs.readBatches(Digests, gen), ts)
         .select(col("vec_id"), col("h").as("h_idx"))
       val classified = digestsOf(cleaned)
         .join(stored, Seq("vec_id"), "left")
@@ -701,18 +525,8 @@ object IvfStore {
       val nAfter = gen.n + nNew
       val fpAfter = gen.fp ^ xIn ^ xOut
       // both lanes below (retrain-from-store and frozen-centroid append)
-      // write batch `next` — claim it once, before either's first write.
-      // The owner token lets an IN-PROCESS crash-replay of this
-      // micro-batch reclaim its own fence debris immediately (exact
-      // process token, zero lease); a restarted driver process earns the
-      // short restart lease only when ownerScope carries the checkpoint
-      // — the bare ingest-<batchId> form waits the full foreign lease
-      // (ADVICE r12).
-      val fenceRoot = new Path(storeDir)
-      val fenceFs = fsOf(s, fenceRoot)
-      StoreDirs.withGenFence(fenceFs, fenceRoot, next,
-        owner = Some(ownerScope.fold(s"ingest-$streamBatchId")(cp =>
-          s"ingest-$cp-$streamBatchId"))) {
+      // write batch `next` — claim it once, before either's first write
+      gs.claim(next, owner) {
       val upIds = classified.select(col("vec_id"))
       val reIds = classified.filter(col("is_restate")).select(col("vec_id"))
       val newVecs = cleaned.join(upIds, Seq("vec_id"), "left_semi")
@@ -725,7 +539,7 @@ object IvfStore {
       // A restating batch reads this scan twice (gauge + the
       // predecessors' tombstones below) — pin it once; a pure append
       // reads it once and pins nothing
-      val liveBase0 = maskDead(readBatches(s, listsDir(storeDir), gen.base, gen.k)
+      val liveBase0 = maskDead(gs.readBatches(Lists, gen)
           .select(col("vec_id"), col("c_id"), col("__batch")), ts)
         .select(col("vec_id"), col("c_id"))
       val liveBase =
@@ -740,7 +554,7 @@ object IvfStore {
         // re-train FROM THE STORE: surviving normalized vectors ∪ the
         // batch's — fresh centroids, fresh single-batch lists/digests
         // (base = next also compacts away every tombstone)
-        val liveNorm = maskDead(readBatches(s, listsDir(storeDir), gen.base, gen.k)
+        val liveNorm = maskDead(gs.readBatches(Lists, gen)
             .select(col("vec_id"), col("e"), col("norm"), col("__batch")), ts)
           .join(reIds, Seq("vec_id"), "left_anti")
           .select(col("vec_id"), col("e"), col("norm"))
@@ -754,35 +568,28 @@ object IvfStore {
         pinned += allNorm
         val (cent2, lists2, smp2) = Similarity.ivfIndexWithSample(allNorm)
         try {
-          val liveDg = maskDead(
-              readBatches(s, digestsDir(storeDir), gen.base, gen.k), ts)
+          val liveDg = maskDead(gs.readBatches(Digests, gen), ts)
             .join(reIds, Seq("vec_id"), "left_anti")
             .select(col("vec_id"), col("h"))
-          writeBatch(lists2.repartition(Similarity.IvfNList, col("c_id")), next, Seq("c_id"),
-            listsDir(storeDir))
-          writeBatch(liveDg.unionByName(digestsOf(newVecs)), next, Seq.empty,
-            digestsDir(storeDir))
-          publishGen(s, storeDir, next, nAfter, fpAfter, base = next,
-            centroids = cent2, ingestId = Some(streamBatchId))
+          gs.writeBatch(lists2.repartition(Similarity.IvfNList, col("c_id")), Lists, next, Seq("c_id"))
+          gs.writeBatch(liveDg.unionByName(digestsOf(newVecs)), Digests, next, Seq.empty)
+          publish(gs, Some(gen), next, nAfter, fpAfter, base = next, cent2, Some(streamBatchId))
         } finally { cent2.unpersist(); smp2.unpersist() } // allNorm pinned → freed via `pinned`
         return "ingest-retrain"
       }
       if (nRe > 0) {
         // the restated predecessors' tombstones ship in the same publish
-        // as their replacements (strict-`>` mask semantics above); reads
+        // as their replacements (the strict-`>` mask keeps them); reads
         // the pinned liveBase blocks, not the lists again
         val newTombs = liveBase.join(reIds, Seq("vec_id"), "left_semi")
-        writeBatch(newTombs.coalesce(8), next, Seq.empty, tombsDir(storeDir))
+        gs.writeBatch(newTombs.coalesce(8), Tombs, next, Seq.empty)
       }
-      writeBatch(assigned.repartition(Similarity.IvfNList, col("c_id")), next, Seq("c_id"),
-        listsDir(storeDir))
-      writeBatch(digestsOf(newVecs), next, Seq.empty, digestsDir(storeDir))
-      publishGen(s, storeDir, next, nAfter, fpAfter, base = gen.base,
-        centroids = cent, ingestId = Some(streamBatchId))
+      gs.writeBatch(assigned.repartition(Similarity.IvfNList, col("c_id")), Lists, next, Seq("c_id"))
+      gs.writeBatch(digestsOf(newVecs), Digests, next, Seq.empty)
+      publish(gs, Some(gen), next, nAfter, fpAfter, base = gen.base, cent, Some(streamBatchId))
       "ingest"
-      // the `return "ingest-retrain"` above exits through the fence
-      // scope as a ControlThrowable — withGenFence passes it through
-      // with the (published) generation's fence kept, by design
+      // the `return "ingest-retrain"` above exits through the claim as a
+      // ControlThrowable, which keeps the published generation's fence
       }
     } finally pinned.foreach(StoreDirs.freePinned)
   }

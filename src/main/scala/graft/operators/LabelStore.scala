@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.Tables
@@ -20,18 +19,9 @@ import graft.engine.Tables
   * parquet scan of a few MB where they paid a corpus-wide pipeline.
   *
   * Layout: `storeDir/gen=<k>__n=<count>__fp=<digest>/` — one directory
-  * per GENERATION, the labels parquet inside, the corpus fingerprint
-  * (row count + order-insensitive 64-bit digest) encoded in the
-  * directory NAME so data and validity metadata publish in the same
-  * atomic rename. Build writes to a dot-prefixed staging dir (invisible
-  * to listings), then one `rename` publishes; generations strictly
-  * increase, and after publish all but the newest two are retired by
-  * another atomic dot-rename (the BandStore retirement idiom: a reader
-  * that resolved the PREVIOUS latest generation before a concurrent
-  * rebuild still scans files that exist; only a reader two rebuilds
-  * stale can hit a retired path, and resolving again at call time
-  * recovers — the same idempotent-retry contract as band-store
-  * admission under compaction).
+  * per GENERATION holding the labels parquet, named by the corpus
+  * fingerprint; generations, claims, publish and retirement follow
+  * [[GenStore]].
   *
   * Staleness: [[ensureCurrent]] re-fingerprints the corpus (one
   * map-side-combinable aggregate — count + bit_xor of per-doc hashes,
@@ -54,15 +44,10 @@ object LabelStore {
     * cannot overflow under ANSI mode.
     */
   private[graft] def fingerprint(s: SparkSession, dir: String): (Long, Long) =
-    fingerprintOf(digests(Tables.documents(s, dir)))
-
-  private def fingerprintOf(dg: DataFrame): (Long, Long) = {
-    val r = dg.agg(count(lit(1)), expr("bit_xor(h)")).head
-    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-  }
+    GenStore.fingerprint(digests(Tables.documents(s, dir)))
 
   /** Stage timer for maintenance profiling, off unless
-    * `spark.graft.debug.timing=true` (Probe10's label modes set it).
+    * `spark.graft.debug.timing=true`.
     */
   private def timed[A](s: SparkSession, name: String)(f: => A): A =
     if (s.conf.get("spark.graft.debug.timing", "false") != "true") f
@@ -75,25 +60,16 @@ object LabelStore {
   private def settleQuietly(f: scala.concurrent.Future[_]): Unit =
     StoreDirs.settleQuietly(f)
 
-  private case class Gen(k: Long, n: Long, fp: Long, path: Path)
+  private val DigestsIdx = "index/digests"
+  private val SigsIdx = "index/sigs"
+  private val BandsIdx = "index/bands"
+  private val TombstonesIdx = "index/tombstones"
 
-  private def fsOf(s: SparkSession, p: Path) =
-    p.getFileSystem(s.sparkContext.hadoopConfiguration)
+  private def store(s: SparkSession, storeDir: String) =
+    new GenStore(s, storeDir, "LabelStore", Seq(DigestsIdx, SigsIdx, BandsIdx, TombstonesIdx))
 
-  private val GenName = """gen=(\d+)__n=(\d+)__fp=([0-9a-f]+)""".r
-
-  private def listGens(s: SparkSession, storeDir: String): Seq[Gen] = {
-    val root = new Path(storeDir)
-    val fs = fsOf(s, root)
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq.collect {
-      case st if st.isDirectory => st.getPath.getName match {
-        case GenName(k, n, fp) =>
-          Some(Gen(k.toLong, n.toLong, java.lang.Long.parseUnsignedLong(fp, 16), st.getPath))
-        case _ => None
-      }
-    }.flatten.sortBy(_.k)
-  }
+  private def maskDead(df: DataFrame, ts: Option[DataFrame]): DataFrame =
+    GenStore.maskDead(df, ts, "doc_id")
 
   // ----------------------------------------------------------------
   // Signature/band INDEX — what makes the incremental append path
@@ -114,8 +90,8 @@ object LabelStore {
   // touch — per-append cost is bounded by the batch and its
   // candidates, never O(corpus). Deletes never rewrite index rows in
   // place (a live generation still scans them): they land a TOMBSTONE
-  // batch that every index read masks (batch-aware, see maskDead), and
-  // the full rebuild compacts the dead rows away.
+  // batch that every index read masks ([[GenStore]]'s batch-aware
+  // mask), and the full rebuild compacts the dead rows away.
   // Write order is labels-first, index-second, and within the index
   // digests LAST: a crash mid-maintenance leaves digest drift that the
   // next call re-classifies (appended = corpus digests − live index
@@ -135,61 +111,15 @@ object LabelStore {
     * [[StoreDirs.ensureGeometry]].
     */
   private def geometry(s: SparkSession, storeDir: String): (Int, Int) = {
-    val root = new Path(storeDir)
-    val fs = fsOf(s, root)
-    val g = StoreDirs.ensureGeometry(fs, storeDir,
-      legacy = StoreDirs.hasBatchDirs(fs, new Path(sigsIdx(storeDir))) ||
-        StoreDirs.hasBatchDirs(fs, new Path(bandsIdx(storeDir))) ||
-        StoreDirs.hasBatchDirs(fs, new Path(digestsIdx(storeDir))),
+    val gs = store(s, storeDir)
+    val g = StoreDirs.ensureGeometry(gs.fs, storeDir,
+      legacy = Seq(SigsIdx, BandsIdx, DigestsIdx).exists(gs.hasBatches),
       defaults = Seq("bandBuckets" -> BandBuckets, "sigBuckets" -> SigBuckets),
       confValues = Seq(
         "bandBuckets" -> s.conf.get(graft.streaming.BandStore.BandBucketsConf, BandBuckets.toString).toInt,
         "sigBuckets" -> s.conf.get(graft.streaming.BandStore.SigBucketsConf, SigBuckets.toString).toInt))
     (g("bandBuckets"), g("sigBuckets"))
   }
-
-  private def digestsIdx(storeDir: String) = s"$storeDir/index/digests"
-  private def sigsIdx(storeDir: String) = s"$storeDir/index/sigs"
-  private def bandsIdx(storeDir: String) = s"$storeDir/index/bands"
-  private def tombstonesIdx(storeDir: String) = s"$storeDir/index/tombstones"
-
-  /** Tombstoned doc ids visible at generation `upTo` —
-    * `index/tombstones/__batch=<gen>/ (doc_id)`. A delete lands its
-    * tombstone batch NUMBERED with the generation it publishes with and
-    * writes it BEFORE the publish rename, so readers gate on
-    * `__batch <= <published gen>`: a tombstone from a crashed
-    * (never-published) delete attempt stays invisible, and the retry —
-    * whose classification therefore still sees the deleted docs in the
-    * index — re-runs the delete path and idempotently overwrites the
-    * same batch.
-    */
-  private def tombstones(s: SparkSession, storeDir: String,
-                         upTo: Long): Option[DataFrame] = {
-    val p = new Path(tombstonesIdx(storeDir))
-    if (!StoreDirs.hasBatchDirs(fsOf(s, p), p)) None
-    else Some(s.read.parquet(tombstonesIdx(storeDir))
-      .filter(col("__batch") <= upTo)
-      .select(col("doc_id").as("__ts_id"), col("__batch").as("__ts_b")))
-  }
-
-  /** Drop index rows a tombstone masks: a row is dead iff some visible
-    * tombstone for its doc_id is at least as new as the row's batch —
-    * batch-aware so a doc RE-ADDED after deletion (its new rows land in
-    * a batch after the tombstone's) stays live. Tombstone volume is
-    * bounded by deletes since the last full rebuild (the compaction
-    * trigger caps the dead fraction), so the anti-join's build side
-    * stays small.
-    */
-  private def maskDead(df: DataFrame, ts: Option[DataFrame]): DataFrame =
-    ts.fold(df)(t => df.join(t,
-      df("doc_id") === t("__ts_id") && t("__ts_b") >= df("__batch"), "left_anti"))
-
-  private def writeTombstones(deleted: DataFrame, gen: Long, storeDir: String): Unit =
-    // direct write into the (unpublished) batch dir — the writeOne
-    // append discipline; the dynamic-overwrite committer's
-    // stage-and-move was pure per-write overhead
-    writeOne(deleted.select(col("doc_id")).coalesce(8), gen, Seq.empty,
-      tombstonesIdx(storeDir), replaceAll = false)
 
   /** (doc_id, sh, sig) of the signable subset of a corpus frame —
     * identical shingling/signing to [[Dedup.x2MinHashLsh]].
@@ -214,43 +144,12 @@ object LabelStore {
     round(c / (size(col("sh_a")) + size(col("sh_b")) - c), 6) >= 0.8
   }
 
-  /** Write the index slice for one generation. `replaceAll` (full
-    * rebuild) statically overwrites the whole index; an append
-    * dynamically overwrites only its own `__batch` partitions
-    * (idempotent under retry, the BandStore discipline).
-    */
   /** Row-count threshold under which a delta's index slice is written as
     * ONE task per dataset instead of a bucket-repartition shuffle: a
     * takedown/append-sized delta produces one file per touched bucket
     * dir either way, and the shuffle is pure overhead.
     */
   private val SmallDeltaRows = 100000L
-
-  /** One index dataset write. `replaceAll` statically overwrites the
-    * whole dataset. An append writes DIRECTLY into its own
-    * `__batch=<gen>` directory (the partition value comes from the dir
-    * name at read time, exactly as a partitionBy write lands it),
-    * deleting any crashed earlier attempt's dir first — the
-    * [[IvfStore]] writeBatch discipline. The batch is always
-    * unpublished until the generation rename, so no reader can see the
-    * in-flight dir, and the delete-first makes retries idempotent
-    * without the dynamic-partition-overwrite committer's stage-and-move
-    * machinery (measured ~2 s per small write against the 64-bucket
-    * bands dir).
-    */
-  private def writeOne(df: DataFrame, gen: Long, parts: Seq[String],
-                       dir: String, replaceAll: Boolean): Unit =
-    if (replaceAll)
-      df.withColumn("__batch", lit(gen))
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy(("__batch" +: parts): _*).parquet(dir)
-    else {
-      val batchDir = new Path(dir, s"__batch=$gen")
-      val fs = fsOf(df.sparkSession, batchDir)
-      if (fs.exists(batchDir)) fs.delete(batchDir, true)
-      df.write.mode(SaveMode.Overwrite)
-        .partitionBy(parts: _*).parquet(batchDir.toString)
-    }
 
   /** The sigs + bands halves of the index slice for one generation —
     * CONCURRENT (independent datasets, both derived from the persisted
@@ -260,15 +159,12 @@ object LabelStore {
     * small: a delta touches up to all 64 band buckets, and a
     * single-task write creates those files serially (measured
     * 1.7–3.6 s); hashing the tiny delta across tasks writes them in
-    * parallel for a trivial shuffle. `replaceAll` (full rebuild)
-    * statically overwrites the whole dataset; an append dynamically
-    * overwrites only its own `__batch` partitions (idempotent under
-    * retry, the BandStore discipline).
+    * parallel for a trivial shuffle.
     */
-  private def writeSigsBands(sig: DataFrame, gen: Long, storeDir: String,
-                             replaceAll: Boolean): Unit = {
+  private def writeSigsBands(gs: GenStore, sig: DataFrame, gen: Long,
+                             geom: (Int, Int)): Unit = {
     val s = sig.sparkSession
-    val (gbb, gdb) = geometry(s, storeDir)
+    val (gbb, gdb) = geom
     val sigsDf = sig.select(col("doc_id"), col("sh"))
       .withColumn("__db", pmod(col("doc_id"), lit(gdb)).cast("int"))
     val bandsDf = bandsOf(sig).select(col("band"), col("bh"), col("doc_id"))
@@ -283,11 +179,10 @@ object LabelStore {
       // otherwise fold the tiny shuffle into ONE task that creates all
       // 64 bucket files serially (measured ~2 s per append)
       Future(timed(s, "  idx-sigs") {
-        writeOne(sigsDf.repartition(gdb, col("__db")), gen,
-          Seq("__db"), sigsIdx(storeDir), replaceAll) }),
+        gs.writeBatch(sigsDf.repartition(gdb, col("__db")), SigsIdx, gen, Seq("__db")) }),
       Future(timed(s, "  idx-bands") {
-        writeOne(bandsDf.repartition(gbb, col("__bb")), gen,
-          Seq("__bb"), bandsIdx(storeDir), replaceAll) }))), Duration.Inf)
+        gs.writeBatch(bandsDf.repartition(gbb, col("__bb")), BandsIdx, gen, Seq("__bb")) }))),
+      Duration.Inf)
   }
 
   /** Digests are the index's VALIDITY KEY (appended = corpus digests −
@@ -297,49 +192,18 @@ object LabelStore {
     * re-append) or as the documented stale-fingerprint-empty-delta full
     * rebuild — fresh digests can never vouch for stale sigs/bands.
     */
-  private def writeDigests(dg: DataFrame, gen: Long, storeDir: String,
-                           replaceAll: Boolean,
-                           deltaRows: Long = Long.MaxValue): Unit = {
-    // a full rebuild COMPACTS: the fresh index has no dead rows, so the
-    // accumulated tombstones (whose masked rows it replaces wholesale)
-    // retire with it
-    if (replaceAll) {
-      val tp = new Path(tombstonesIdx(storeDir))
-      val fs = fsOf(dg.sparkSession, tp)
-      if (fs.exists(tp)) fs.delete(tp, true)
-    }
+  private def writeDigests(gs: GenStore, dg: DataFrame, gen: Long,
+                           deltaRows: Long = Long.MaxValue): Unit =
     timed(dg.sparkSession, "  idx-digests") {
-      writeOne(if (deltaRows <= SmallDeltaRows) dg.coalesce(1) else dg,
-        gen, Seq.empty, digestsIdx(storeDir), replaceAll) }
-  }
+      gs.writeBatch(if (deltaRows <= SmallDeltaRows) dg.coalesce(1) else dg,
+        DigestsIdx, gen, Seq.empty) }
 
-  /** Publish `labels` as generation `next`, named by (n, fp); returns
-    * the generation number. One atomic rename exposes data + validity
-    * together; all but the newest two generations retire after. The
-    * caller must hold the generation fence ([[StoreDirs.acquireGen]])
-    * for `next`; the CAS re-check here refuses to rename if the store
-    * advanced since the caller's maintenance read — the publish-time
-    * half of the concurrent-writer guard.
-    */
-  private def publishGen(s: SparkSession, storeDir: String, n: Long,
-                         fp: Long, labels: DataFrame, next: Long): Long = {
-    val root = new Path(storeDir)
-    val fs = fsOf(s, root)
-    fs.mkdirs(root)
-    val gens = listGens(s, storeDir)
-    StoreDirs.requireUnadvanced("LabelStore",
-      gens.lastOption.map(_.k).getOrElse(0L), next)
-    val staging = new Path(root, s".staging-$next")
-    labels.write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    // shared publish tail: atomic rename, sweeps, and grace-retire of
-    // everything older than the previous latest (two live generations —
-    // a reader that resolved just before this publish still scans
-    // existing files)
-    StoreDirs.publishStaged(fs, root, next, staging,
-      new Path(root, s"gen=${next}__n=${n}__fp=${java.lang.Long.toHexString(fp)}"),
-      gens.dropRight(1).map(_.path), "LabelStore")
-    next
-  }
+  /** Publish `labels` as generation `next`; the caller holds its claim. */
+  private def publish(gs: GenStore, next: Long, n: Long, fp: Long,
+                      labels: DataFrame): Unit =
+    gs.publish(next, n, fp, None, None, None, _ => true) { staging =>
+      labels.write.mode(SaveMode.Overwrite).parquet(staging.toString)
+    }
 
   /** Canonical store location for the corpus at `dir` — stable across
     * processes so one build serves every later consumer (bench runs 2..N
@@ -371,41 +235,44 @@ object LabelStore {
     val sig = signed(corpus).persist()
     try {
       val s = corpus.sparkSession
+      val gs = store(s, storeDir)
       val dg = digests(corpus)
-      val (n, fp) = fingerprintOf(dg)
+      val (n, fp) = GenStore.fingerprint(dg)
       // materialize the shared signing pass ONCE, then run the cluster
       // pipeline + publish CONCURRENTLY with the sigs/bands index writes
       // — they share only the now-cached sig frame and touch disjoint
-      // paths (gen dirs vs index/). The batch number is deterministic
-      // (last gen + 1, asserted against publishGen's own computation);
-      // digests still land last, after both, so crash consistency is
-      // the writeDigests contract unchanged.
+      // paths (gen dirs vs index/). Digests still land last, after both,
+      // so crash consistency is the writeDigests contract unchanged.
       timed(s, "sign") { sig.count() }
-      val next = listGens(s, storeDir).lastOption.map(_.k).getOrElse(0L) + 1
-      val storeRoot = new Path(storeDir)
-      val storeFs = fsOf(s, storeRoot)
+      val next = gs.latest.fold(1L)(_.k + 1)
       // claim the generation BEFORE the first shared-path write (the
       // concurrent index future below): a competing maintainer at the
       // same parent fails loudly here instead of interleaving batch dirs
-      StoreDirs.acquireGen(storeFs, storeRoot, next, owner)
+      gs.acquire(next, owner)
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
       import scala.concurrent.ExecutionContext.Implicits.global
+      // a rebuild replaces the whole index: the old batches go first, the
+      // new one is the same batch write an append makes
       val fIdx = Future(timed(s, "index-write") {
-        writeSigsBands(sig, next, storeDir, replaceAll = true) })
-      // settle the concurrent static overwrite before any failure exit —
+        val geom = geometry(s, storeDir)
+        Seq(SigsIdx, BandsIdx).foreach(gs.dropDataset)
+        writeSigsBands(gs, sig, next, geom) })
+      // settle the concurrent index write before any failure exit —
       // INCLUDING an interrupt during the Await itself — and only then
       // release the fence: a zombie index write racing an in-process
-      // retry is two writers statically overwriting the same directories
+      // retry is two writers on the same directories
       try {
-        val pub = timed(s, "cluster+publish") { publishGen(s, storeDir, n, fp,
-          Dedup.x2DupClustersOf(corpus, preSigned = Some(sig)), next) }
+        timed(s, "cluster+publish") { publish(gs, next, n, fp,
+          Dedup.x2DupClustersOf(corpus, preSigned = Some(sig))) }
         Await.result(fIdx, Duration.Inf)
-        require(pub == next, s"LabelStore: build expected gen $next, published $pub")
-        writeDigests(dg, next, storeDir, replaceAll = true)
+        // a full rebuild COMPACTS: the fresh index has no dead rows, so
+        // the accumulated tombstones retire with the old digests
+        Seq(TombstonesIdx, DigestsIdx).foreach(gs.dropDataset)
+        writeDigests(gs, dg, next)
       } catch { case t: Throwable =>
         settleQuietly(fIdx)
-        StoreDirs.releaseGen(storeFs, storeRoot, next); throw t
+        gs.release(next); throw t
       }
     } finally { sig.unpersist(); corpus.unpersist() }
   }
@@ -416,7 +283,7 @@ object LabelStore {
     */
   def ensureCurrent(s: SparkSession, dir: String, storeDir: String): Boolean = {
     val (n, fp) = fingerprint(s, dir)
-    listGens(s, storeDir).lastOption match {
+    store(s, storeDir).latest match {
       case Some(g) if g.n == n && g.fp == fp => false
       case _ => build(s, dir, storeDir); true
     }
@@ -460,18 +327,18 @@ object LabelStore {
     val persisted = scala.collection.mutable.ArrayBuffer[DataFrame](corpus)
     def keep(df: DataFrame): DataFrame = { persisted += df; df.persist() }
     try {
+      val gs = store(s, storeDir)
       val dg = keep(digests(corpus))
-      val (n, fp) = timed(s, "fingerprint") { fingerprintOf(dg) }
-      val gens = listGens(s, storeDir)
-      if (gens.lastOption.exists(g => g.n == n && g.fp == fp)) return "noop"
-      val idxPath = new Path(digestsIdx(storeDir))
-      if (gens.isEmpty || !fsOf(s, idxPath).exists(idxPath)) {
+      val (n, fp) = timed(s, "fingerprint") { GenStore.fingerprint(dg) }
+      val gen = gs.latest
+      if (gen.exists(g => g.n == n && g.fp == fp)) return "noop"
+      if (gen.isEmpty || !gs.hasDataset(DigestsIdx)) {
         buildDocs(corpus, storeDir, owner); return "full"
       }
-      val latest = gens.last
-      val (gbb, gdb) = geometry(s, storeDir)
-      val ts = tombstones(s, storeDir, upTo = latest.k)
-      val idx = maskDead(s.read.parquet(digestsIdx(storeDir)), ts)
+      val latest = gen.get
+      val geom @ (gbb, gdb) = geometry(s, storeDir)
+      val ts = gs.tombstones(TombstonesIdx, latest)
+      val idx = maskDead(gs.readBatches(DigestsIdx, latest), ts)
         .select(col("doc_id"), col("h").as("h_idx"))
       // ONE full-outer digest pass classifies the whole delta (was two
       // anti-join scans): a row only in the corpus is an append; a row
@@ -539,11 +406,8 @@ object LabelStore {
             val dbs = survivors
               .select(pmod(col("doc_id"), lit(gdb)).cast("int").as("__db"))
               .distinct().collect().map(_.getInt(0)).toSeq
-            // __batch <= latest.k: a crashed append attempt's
-            // unpublished sig slice must not masquerade as store state
             val sh = keep(maskDead(
-                s.read.parquet(sigsIdx(storeDir))
-                  .filter(col("__batch") <= latest.k && col("__db").isin(dbs: _*)), ts)
+                gs.readBatches(SigsIdx, latest).filter(col("__db").isin(dbs: _*)), ts)
               .join(survivors, Seq("doc_id"), "left_semi")
               .select(col("doc_id"), col("sh")))
             val sig = sh.withColumn("sig", Dedup.minhashSig)
@@ -563,8 +427,8 @@ object LabelStore {
               .distinct().collect().map(_.getInt(0)).toSeq
             val reducedMax =
               if (survBb.isEmpty) 0L
-              else maskDead(s.read.parquet(bandsIdx(storeDir))
-                  .filter(col("__batch") <= latest.k && col("__bb").isin(survBb: _*)), ts)
+              else maskDead(gs.readBatches(BandsIdx, latest)
+                  .filter(col("__bb").isin(survBb: _*)), ts)
                 .join(deleted, Seq("doc_id"), "left_anti")
                 .groupBy(col("band"), col("bh")).agg(count(lit(1)).as("__n"))
                 .agg(coalesce(max(col("__n")), lit(0L))).head.getLong(0)
@@ -602,14 +466,11 @@ object LabelStore {
         // unpublished tombstone batch, and the retry re-detects the
         // deletes and overwrites that same batch
         val next = latest.k + 1
-        val storeRoot = new Path(storeDir)
-        val storeFs = fsOf(s, storeRoot)
         // first shared-path write of this lane is the tombstone batch —
         // claim the generation before it
-        StoreDirs.withGenFence(storeFs, storeRoot, next, owner) {
-          writeTombstones(deleted, next, storeDir)
-          val pub = publishGen(s, storeDir, n, fp, labels.orderBy("doc_id"), next)
-          require(pub == next, s"LabelStore: delete expected gen $next, published $pub")
+        gs.claim(next, owner) {
+          gs.writeBatch(deleted.coalesce(8), TombstonesIdx, next, Seq.empty)
+          publish(gs, next, n, fp, labels.orderBy("doc_id"))
         }
         return "incremental-delete"
       }
@@ -632,26 +493,23 @@ object LabelStore {
       // gate the stored-index reads at the PUBLISHED batch range: a
       // crashed prior attempt can have left an unpublished __batch=next
       // slice in the index, and without the gate (a) the pinned listing
-      // includes files the concurrent write below deletes and rewrites
-      // — FileNotFoundException mid-chain on the retry that was supposed
+      // includes files the claim below deletes and the concurrent write
+      // rewrites — FileNotFoundException mid-chain on the retry that was supposed
       // to self-heal the crash — and (b) the crashed delta's rows would
       // be probed as "old" peers. Partition pruning keeps the stale
       // partition unread even though it is in the pinned listing.
       val (bandsStored, sigsStored) = timed(s, "pin-listings") {
-        (s.read.parquet(bandsIdx(storeDir)).filter(col("__batch") <= latest.k),
-          s.read.parquet(sigsIdx(storeDir)).filter(col("__batch") <= latest.k)) }
+        (gs.readBatches(BandsIdx, latest), gs.readBatches(SigsIdx, latest)) }
       val next = latest.k + 1
-      val storeRoot = new Path(storeDir)
-      val storeFs = fsOf(s, storeRoot)
       // claim the generation BEFORE the concurrent index future's first
       // batch write — the loser of a race fails loudly here, with the
       // store untouched by it
-      StoreDirs.acquireGen(storeFs, storeRoot, next, owner)
+      gs.acquire(next, owner)
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
       import scala.concurrent.ExecutionContext.Implicits.global
       val fIdx = Future(timed(s, "index-write") {
-        writeSigsBands(sig, next, storeDir, replaceAll = false) })
+        writeSigsBands(gs, sig, next, geom) })
       // the concurrent write must never outlive this call: on any
       // failure below, settle it before propagating — a zombie write
       // racing an in-process retry means two writers on one directory
@@ -677,7 +535,7 @@ object LabelStore {
             // retries through interrupts, so the fence never outlives a
             // running index write nor frees one still in flight
             settleQuietly(fIdx)
-            StoreDirs.releaseGen(storeFs, storeRoot, next)
+            gs.release(next)
             throw t
         }
       failSettling {
@@ -726,7 +584,7 @@ object LabelStore {
             Await.result(fIdx, Duration.Inf)
             // release this lane's claim before the rebuild re-claims the
             // same generation number for itself
-            StoreDirs.releaseGen(storeFs, storeRoot, next)
+            gs.release(next)
             buildDocs(corpus, storeDir, owner)
             return "full"
           }
@@ -779,12 +637,10 @@ object LabelStore {
       // publish (still concurrent with the sigs/bands writes launched
       // above), then settle both, then digests last — the writeDigests
       // crash contract
-      val pub = timed(s, "labels-publish") {
-        publishGen(s, storeDir, n, fp, labels, next) }
+      timed(s, "labels-publish") { publish(gs, next, n, fp, labels) }
       Await.result(fIdx, Duration.Inf)
-      require(pub == next, s"LabelStore: append expected gen $next, published $pub")
-      writeDigests(dg.join(appended, Seq("doc_id"), "left_semi"), next,
-        storeDir, replaceAll = false, deltaRows = nNew)
+      writeDigests(gs, dg.join(appended, Seq("doc_id"), "left_semi"), next,
+        deltaRows = nNew)
       "incremental"
       }
     } finally persisted.foreach(_.unpersist())
@@ -864,9 +720,7 @@ object LabelStore {
     * time.
     */
   def read(s: SparkSession, storeDir: String): DataFrame = {
-    val gens = listGens(s, storeDir)
-    require(gens.nonEmpty, s"LabelStore: no published generation under $storeDir")
-    s.read.parquet(gens.last.path.toString)
+    s.read.parquet(store(s, storeDir).newest.path.toString)
   }
 
   /** [[Dedup.x2DedupKeep]] reading the STORE instead of recomputing the

@@ -4,8 +4,9 @@ import java.nio.file.{Files, Path, Paths}
 import java.nio.file.attribute.PosixFilePermissions
 
 /** Canonical on-disk locations for the materialized stores
-  * ([[LabelStore]], [[IvfStore]]) plus the shared "temp store scoped to
-  * one query" lifecycle the maintenance-gate rows use.
+  * ([[LabelStore]], [[IvfStore]]), the generation fence, plus the shared
+  * "temp store scoped to one query" lifecycle the maintenance-gate rows
+  * use. The generational format itself is [[GenStore]].
   */
 private[graft] object StoreDirs {
 
@@ -119,38 +120,6 @@ private[graft] object StoreDirs {
       new org.apache.hadoop.fs.Path(dst), false, conf),
       s"could not copy base store $src to $dst")
   }
-
-  /** True iff `root` holds at least one `__batch=<j>` child. The batch
-    * datasets (tombstones especially) can exist as a DIRECTORY with no
-    * data in two legitimate states — a crash before any partition
-    * committed (only `_temporary` inside) and a publish-time GC that
-    * deleted the last batch (only `_SUCCESS` left) — and a parquet read
-    * of either throws schema-inference errors, bricking every later
-    * maintenance call on a store that is perfectly healthy. Readers
-    * must treat "dir without batches" exactly like "dir absent".
-    */
-  def hasBatchDirs(fs: org.apache.hadoop.fs.FileSystem,
-                   root: org.apache.hadoop.fs.Path): Boolean =
-    fs.exists(root) && fs.listStatus(root).exists(st =>
-      st.isDirectory && st.getPath.getName.startsWith("__batch="))
-
-  /** Delete `.gen…retired` debris left by EARLIER publishes. Retirement
-    * is a dot-rename (not a delete) so a reader that resolved a
-    * generation path just before the publish still scans existing files;
-    * but without a later sweep the renamed dirs live forever — on a
-    * long-lived store that is an unbounded disk leak (every superseded
-    * label table / centroid set / day manifest kept in full). Each
-    * publish therefore sweeps the PREVIOUS publishes' retired dirs
-    * before retiring its own: the grace window is exactly one publish
-    * cycle, matching the two-live-generations reader contract.
-    */
-  def sweepRetired(fs: org.apache.hadoop.fs.FileSystem,
-                   root: org.apache.hadoop.fs.Path): Unit =
-    if (fs.exists(root)) fs.listStatus(root).foreach { st =>
-      val nm = st.getPath.getName
-      if (st.isDirectory && nm.startsWith(".") && nm.endsWith(".retired"))
-        fs.delete(st.getPath, true)
-    }
 
   /** Await a concurrent write's completion, robust to interrupts: the
     * settle is what licenses releasing a fence or retrying in process,
@@ -587,49 +556,12 @@ private[graft] object StoreDirs {
                  root: org.apache.hadoop.fs.Path, k: Long): Unit =
     try fs.delete(fencePath(root, k), false) catch { case _: java.io.IOException => () }
 
-  /** CAS half of the generational stores' concurrent-writer guard
-    * (publish-time; the fence is the claim-time half): refuse to rename
-    * if the store advanced since this writer's maintenance read — a
-    * competitor's work must never be buried. One shared implementation
-    * (round 17, VERDICT r16 #3): the three stores' copies had already
-    * drifted in wording, and a future drift in SEMANTICS here would be
-    * a silent lost-update reintroduction.
-    */
-  def requireUnadvanced(family: String, curK: Long, next: Long): Unit =
-    require(curK == next - 1,
-      s"$family: store advanced to gen $curK while this writer maintained " +
-        s"gen $next — concurrent writer; retry from the advanced state")
-
-  /** The generational stores' shared publish tail (round 17, VERDICT
-    * r16 #3 — one protocol, one implementation): ONE atomic rename
-    * exposes the staged generation, then spent fences and past-grace
-    * retired debris sweep, then the superseded generations GRACE-RETIRE
-    * — renamed to dot-prefixed `.<name>.retired` siblings so a reader
-    * that resolved its generation just before this publish still scans
-    * existing files; [[sweepRetired]] deletes them at the NEXT publish,
-    * one full publish cycle later. Caller owns the staging content, the
-    * published name (each store encodes its own `(n, fp, …)` validity
-    * tuple there), and the retire list.
-    */
-  def publishStaged(fs: org.apache.hadoop.fs.FileSystem,
-                    root: org.apache.hadoop.fs.Path, next: Long,
-                    staging: org.apache.hadoop.fs.Path,
-                    pub: org.apache.hadoop.fs.Path,
-                    retire: Seq[org.apache.hadoop.fs.Path],
-                    family: String): Unit = {
-    require(fs.rename(staging, pub), s"$family: could not publish $pub")
-    sweepFences(fs, root, next)
-    sweepRetired(fs, root)
-    retire.foreach(p =>
-      fs.rename(p, new org.apache.hadoop.fs.Path(root, "." + p.getName + ".retired")))
-  }
-
   /** Delete fences of generations old enough that no writer can target
     * them again (anything below the newest live generation — a future
     * claim is always `latest + 1` or higher), including `.reclaim-`
-    * debris a reclaimer crashed between rename and delete. Call
-    * alongside [[sweepRetired]] at publish time so a long-lived store
-    * holds O(1) fence files.
+    * debris a reclaimer crashed between rename and delete. Called at
+    * publish time ([[GenStore.publish]]) so a long-lived store holds O(1)
+    * fence files.
     */
   def sweepFences(fs: org.apache.hadoop.fs.FileSystem,
                   root: org.apache.hadoop.fs.Path, below: Long): Unit =

@@ -1,10 +1,11 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.{Exact, Tables}
-import graft.operators.StoreDirs
+import graft.operators.{GenStore, StoreDirs}
+import graft.operators.GenStore.Gen
 
 /** S11 [EXT] — DATE-PARTITIONED events store: partition-pruned scans
   * plus INCREMENTAL day-grain maintenance.
@@ -23,20 +24,20 @@ import graft.operators.StoreDirs
   * lakehouse `INSERT OVERWRITE PARTITION` discipline — cost scales
   * with the CHANGED dates, never the history).
   *
-  * Layout (the [[graft.operators.IvfStore]] shared-batch idiom):
-  *   - `storeDir/days/__batch=<j>/event_date=<d>/` — the rows, a
-  *     shared dataset outside the generation dirs; a maintenance call
-  *     writes ONLY its changed dates as a new batch (delete-first
-  *     direct write: the batch is unpublished until the rename, so
-  *     retries are idempotent and readers never see it in-flight).
-  *   - `storeDir/gen=<k>__n=<count>__fp=<digest>/manifest/` — the
-  *     AUTHORITY: one row per live date, `(event_date, n_rows, fp,
-  *     batch)` naming the batch that serves that date. Data + validity
-  *     + routing publish in one atomic rename; a date absent from the
-  *     manifest is deleted (no tombstones needed at day grain — the
-  *     manifest is a positive list). All but the newest two
-  *     generations retire after publish, and `days/` batches no live
-  *     manifest references are deleted.
+  * Layout ([[graft.operators.GenStore]]):
+  *   - `storeDir/days/__batch=<j>/event_date=<d>/` — the rows; a
+  *     maintenance call writes ONLY its changed dates as a new batch.
+  *   - `storeDir/gen=<k>__n=<count>__fp=<digest>__d=<dead>/manifest` —
+  *     the AUTHORITY: one line per live date, `event_date,n_rows,fp,
+  *     batch` naming the batch that serves that date. A date absent
+  *     from the manifest is deleted (no tombstones needed at day grain —
+  *     the manifest is a positive list), and `days/` batches neither
+  *     live manifest references are deleted at publish. `dead` counts
+  *     rows still on disk in REFERENCED batches that no live date
+  *     serves (removed dates, superseded restates); carried in the name
+  *     so the compaction trigger needs no extra read, and conservative
+  *     (batch GC may reclaim some of it early — the rebuild then fires
+  *     a little sooner, the safe direction).
   *
   * Staleness is measured per DATE: one aggregate computes per-date
   * (row count, order-insensitive bit_xor digest); the global
@@ -75,41 +76,18 @@ object DateStore {
   private def globalOf(stats: Seq[DayStat]): (Long, Long) =
     (stats.map(_.n).sum, stats.map(_.fp).foldLeft(0L)(_ ^ _))
 
-  /** `dead` = accumulated rows still on disk in REFERENCED batches that
-    * no live date serves (removed dates, superseded restates). Carried
-    * in the generation name so the compaction trigger needs no extra
-    * read; conservative (batch GC may reclaim some of it early — the
-    * rebuild then fires a little sooner, the safe direction).
-    */
-  private case class Gen(k: Long, n: Long, fp: Long, dead: Long, path: Path)
+  private def store(s: SparkSession, storeDir: String) =
+    new GenStore(s, storeDir, "DateStore", Seq(Days))
 
-  private val GenName = """gen=(\d+)__n=(\d+)__fp=([0-9a-f]+)(?:__d=(\d+))?""".r
+  private val Days = "days"
 
-  private def fsOf(s: SparkSession, p: Path) =
-    p.getFileSystem(s.sparkContext.hadoopConfiguration)
-
-  private def listGens(s: SparkSession, storeDir: String): Seq[Gen] = {
-    val root = new Path(storeDir)
-    val fs = fsOf(s, root)
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq.collect {
-      case st if st.isDirectory => st.getPath.getName match {
-        case GenName(k, n, fp, dead) =>
-          Some(Gen(k.toLong, n.toLong, java.lang.Long.parseUnsignedLong(fp, 16),
-            Option(dead).map(_.toLong).getOrElse(0L), st.getPath))
-        case _ => None
-      }
-    }.flatten.sortBy(_.k)
-  }
-
-  private def daysDir(storeDir: String) = s"$storeDir/days"
+  private type Manifest = Seq[(java.sql.Date, Long, Long, Long)]
 
   /** The latest generation's manifest: (event_date, n_rows, fp, batch),
     * one row per LIVE date.
     */
-  private def readManifest(s: SparkSession, gen: Gen): Seq[(java.sql.Date, Long, Long, Long)] = {
-    val p = new Path(s"${gen.path}/manifest")
-    val fs = fsOf(s, p)
+  private def readManifest(gs: GenStore, gen: Gen): Manifest = {
+    val p = new Path(gen.path, "manifest")
     // the manifest is bounded routing metadata (one row per LIVE date —
     // thousands of rows at any scale), which table formats keep as
     // driver-read manifest files precisely so readers never pay a
@@ -118,19 +96,15 @@ object DateStore {
     // and the date lanes read it on every append, rollup, and publish.
     // Plain text now (one `date,n,fp,batch` line per date); the
     // directory form is the legacy layout, still readable.
-    if (fs.getFileStatus(p).isDirectory)
-      s.read.parquet(p.toString).collect()
+    if (gs.fs.getFileStatus(p).isDirectory)
+      gs.spark.read.parquet(p.toString).collect().toSeq
         .map(r => (r.getDate(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    else {
-      val in = fs.open(p)
-      val txt = try new String(in.readAllBytes,
-        java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-      txt.linesIterator.filter(_.nonEmpty).map { l =>
+    else
+      gs.readText(p).linesIterator.filter(_.nonEmpty).map { l =>
         val Array(d, n, f, b) = l.split(",")
         (java.sql.Date.valueOf(d), n.toLong,
           java.lang.Long.parseUnsignedLong(f, 16), b.toLong)
       }.toSeq
-    }
   }
 
   def defaultStoreDir(dir: String): String =
@@ -158,137 +132,62 @@ object DateStore {
     * mid-crash debris) is not servable — it can neither noop nor seed
     * the incremental path, however its fingerprint reads.
     */
-  private def hasManifest(s: SparkSession, g: Gen): Boolean = {
-    val p = new Path(s"${g.path}/manifest")
-    fsOf(s, p).exists(p)
-  }
+  private def hasManifest(gs: GenStore, g: Gen): Boolean =
+    gs.fs.exists(new Path(g.path, "manifest"))
 
-  private def writeDaysBatch(s: SparkSession, storeDir: String,
-                             rows: DataFrame, batch: Long,
-                             nDates: Int): Unit = {
-    val batchDir = new Path(daysDir(storeDir), s"__batch=$batch")
-    val fs = fsOf(s, batchDir)
-    if (fs.exists(batchDir)) fs.delete(batchDir, true)
-    rows.withColumn("event_date", to_date(col("ts")))
+  private def writeDaysBatch(gs: GenStore, rows: DataFrame, batch: Long,
+                             nDates: Int): Unit =
+    gs.writeBatch(rows.withColumn("event_date", to_date(col("ts")))
       // one file per day at fixture scale; a production deployment
       // sizes files via maxRecordsPerFile instead. The count is EXPLICIT
       // (the written date count, which every caller already measured):
       // a bare repartition(col) is AQE-coalescible by bytes into ONE
       // task that creates every day's file serially — measured ~0.5 s
       // per ingest micro-batch at sf0.1, parquet-writer-init bound
-      .repartition(math.max(1, nDates), col("event_date"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("event_date").parquet(batchDir.toString)
-  }
+      .repartition(math.max(1, nDates), col("event_date")),
+      Days, batch, Seq("event_date"))
 
-  /** The last streaming micro-batch id this store has absorbed, if any
-    * ingest ever ran — the exactly-once floor for [[appendEvents]].
+  /** Publish generation `next` routed by `manifest`. `old` is the
+    * manifest of the generation it supersedes, which stays live: the
+    * batches either references are kept, every other `days/` batch is
+    * deleted. The manifest is a plain driver-written file — bounded
+    * routing metadata needs no Spark write job.
     */
-  private def readIngestId(s: SparkSession, gen: Gen): Option[Long] = {
-    val p = new Path(s"${gen.path}/ingest")
-    val fs = fsOf(s, p)
-    if (!fs.exists(p)) None
-    // scalar driver metadata as a plain file (the IvfStore.readIngestId
-    // note); directory = legacy 1-row-parquet layout, still readable
-    else if (fs.getFileStatus(p).isDirectory)
-      Some(s.read.parquet(p.toString).collect().head.getLong(0))
-    else {
-      val in = fs.open(p)
-      try Some(new String(in.readAllBytes,
-        java.nio.charset.StandardCharsets.UTF_8).trim.toLong)
-      finally in.close()
-    }
-  }
-
-  /** Atomic publish: manifest (+ carried ingest id) staged, then one
-    * rename; prior generations retire and unreferenced days/ batches
-    * are deleted (the newest two generations' routing tables — bounded
-    * metadata reads). The ingest id carries FORWARD through corpus-
-    * driven publishes too, so a replayed micro-batch stays a skip even
-    * after later non-streaming maintenance.
-    */
-  private def publishGen(s: SparkSession, storeDir: String, gens: Seq[Gen],
-                         next: Long, n: Long, fp: Long, dead: Long,
-                         manifest: Seq[(java.sql.Date, Long, Long, Long)],
-                         ingestId: Option[Long]): Unit = {
-    val root = new Path(storeDir)
-    val fs = fsOf(s, root)
-    fs.mkdirs(root)
-    // CAS half of the concurrent-writer guard (the caller holds the
-    // generation fence). `gens` is the caller's read; the re-list here
-    // is fresh.
-    StoreDirs.requireUnadvanced("DateStore",
-      listGens(s, storeDir).lastOption.map(_.k).getOrElse(0L), next)
-    val staging = new Path(root, s".staging-$next")
-    // Stale-dir discipline (same as writeDaysBatch): a prior crashed
-    // attempt at this generation may have left `$staging/ingest` behind;
-    // a later publish with carried=None would never overwrite it and
-    // rename a never-committed micro-batch id into the new generation,
-    // making the stream's retry of that batch a silent skip.
-    if (fs.exists(staging)) fs.delete(staging, true)
-    // manifest + ingest id as plain driver-written files (see
-    // readManifest/readIngestId): the parquet forms cost two Spark
-    // write jobs per publish for bounded routing metadata
-    fs.mkdirs(staging)
-    locally {
-      val out = fs.create(new Path(s"$staging/manifest"), true)
-      try out.write(manifest.map { case (d, nr, f, b) =>
+  private def publishManifest(gs: GenStore, next: Long, n: Long, fp: Long,
+                              dead: Long, manifest: Manifest, old: Manifest,
+                              ingestId: Option[Long]): Unit = {
+    val live = (manifest ++ old).map(_._4).toSet + next
+    gs.publish(next, n, fp, None, Some(dead), ingestId, live.contains) { staging =>
+      gs.writeText(new Path(staging, "manifest"), manifest.map { case (d, nr, f, b) =>
         s"$d,$nr,${java.lang.Long.toHexString(f)},$b"
-      }.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
-    val carried = (gens.lastOption.filter(hasManifest(s, _))
-      .flatMap(readIngestId(s, _)) ++ ingestId).reduceOption(_ max _)
-    carried.foreach { id =>
-      val out = fs.create(new Path(s"$staging/ingest"), true)
-      try out.write(id.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
-    StoreDirs.publishStaged(fs, root, next, staging,
-      new Path(root,
-        s"gen=${next}__n=${n}__fp=${java.lang.Long.toHexString(fp)}__d=${dead}"),
-      gens.dropRight(1).map(_.path), "DateStore")
-    val live = (listGens(s, storeDir).takeRight(2).flatMap { g =>
-      // a live generation may predate the manifest layout (migration)
-      if (hasManifest(s, g)) readManifest(s, g).map(_._4) else Seq.empty
-    } :+ next).toSet
-    val dd = new Path(daysDir(storeDir))
-    if (fs.exists(dd)) fs.listStatus(dd).foreach { st =>
-      st.getPath.getName match {
-        case s"__batch=$b" if b.toLongOption.exists(!live.contains(_)) =>
-          fs.delete(st.getPath, true)
-        case _ => ()
-      }
+      }.mkString("\n"))
     }
   }
 
   private[graft] def ensureIncrementalEvents(ev: DataFrame,
                                              storeDir: String): String = {
-    val s = ev.sparkSession
+    val gs = store(ev.sparkSession, storeDir)
     val stats = dayStats(ev)
     val (n, fp) = globalOf(stats)
-    val gens = listGens(s, storeDir)
-    if (gens.lastOption.exists(g => g.n == n && g.fp == fp && hasManifest(s, g)))
+    val latest = gs.latest
+    if (latest.exists(g => g.n == n && g.fp == fp && hasManifest(gs, g)))
       return "noop"
-    val next = gens.lastOption.map(_.k).getOrElse(0L) + 1
+    val next = latest.fold(1L)(_.k + 1)
+    def publish(manifest: Manifest, old: Manifest, dead: Long): Unit =
+      publishManifest(gs, next, n, fp, dead, manifest, old, None)
+
+    val prior = latest.filter(hasManifest(gs, _))
     // claim the generation before this call's first write (every lane
     // below writes days/__batch=<next> or publishes) — a competing
     // maintainer at the same parent fails loudly here instead of
     // interleaving the shared batch dir
-    val fenceRoot = new Path(storeDir)
-    val fenceFs = fsOf(s, fenceRoot)
-    def publish(manifest: Seq[(java.sql.Date, Long, Long, Long)],
-                dead: Long): Unit =
-      publishGen(s, storeDir, gens, next, n, fp, dead, manifest, None)
-
-    val prior = gens.lastOption.filter(hasManifest(s, _))
-    StoreDirs.withGenFence(fenceFs, fenceRoot, next) { prior match {
+    gs.claim(next, None) { prior match {
       case None =>
-        writeDaysBatch(s, storeDir, ev, next, stats.length)
-        publish(stats.map(d => (d.date, d.n, d.fp, next)), dead = 0L)
+        writeDaysBatch(gs, ev, next, stats.length)
+        publish(stats.map(d => (d.date, d.n, d.fp, next)), Seq.empty, dead = 0L)
         "full"
       case Some(g) =>
-        val old = readManifest(s, g).map(m => m._1 -> m).toMap
+        val old = readManifest(gs, g).map(m => m._1 -> m).toMap
         val cur = stats.map(d => d.date -> d).toMap
         val changed = stats.filter(d =>
           !old.get(d.date).exists(m => m._2 == d.n && m._3 == d.fp))
@@ -307,20 +206,20 @@ object DateStore {
         // data it serves — either way rebuild, which compacts and
         // resets the dead count
         if (changed.map(_.n).sum > 0.5 * n || g.dead + newlyDead > 0.5 * n) {
-          writeDaysBatch(s, storeDir, ev, next, stats.length)
-          publish(stats.map(d => (d.date, d.n, d.fp, next)), dead = 0L)
+          writeDaysBatch(gs, ev, next, stats.length)
+          publish(stats.map(d => (d.date, d.n, d.fp, next)), old.values.toSeq, dead = 0L)
           return "full"
         }
         if (changed.nonEmpty) {
           val dates = changed.map(_.date)
-          writeDaysBatch(s, storeDir,
-            ev.filter(to_date(col("ts")).isin(dates: _*)), next, dates.length)
+          writeDaysBatch(gs, ev.filter(to_date(col("ts")).isin(dates: _*)), next,
+            dates.length)
         }
         val manifest = stats.map { d =>
           if (changed.exists(_.date == d.date)) (d.date, d.n, d.fp, next)
           else { val m = old(d.date); (d.date, d.n, d.fp, m._4) }
         }
-        publish(manifest, dead = g.dead + newlyDead)
+        publish(manifest, old.values.toSeq, dead = g.dead + newlyDead)
         if (changed.isEmpty && removed.nonEmpty) "incremental-delete"
         else "incremental"
     } }
@@ -356,36 +255,28 @@ object DateStore {
                    streamBatchId: Long,
                    ownerScope: Option[String] = None): String = {
     val s = batch.sparkSession
-    val gens = listGens(s, storeDir)
-    val prior = gens.lastOption.filter(hasManifest(s, _))
-    prior.flatMap(readIngestId(s, _)) match {
+    val gs = store(s, storeDir)
+    val latest = gs.latest
+    val prior = latest.filter(hasManifest(gs, _))
+    prior.flatMap(gs.ingestFloor) match {
       case Some(last) if last >= streamBatchId => return "skip"
       case _ => ()
     }
     val stats = dayStats(batch)
     if (stats.isEmpty) return "empty"
-    val next = gens.lastOption.map(_.k).getOrElse(0L) + 1
+    val next = latest.fold(1L)(_.k + 1)
     // the ingest fence: micro-batches of ONE stream serialize through
     // the checkpoint, but a corpus-driven maintainer racing the stream
-    // (or a second stream on one store) is the same interleave hazard.
-    // The owner token lets an IN-PROCESS crash-replay of this batch
-    // reclaim its own fence debris immediately (exact process token,
-    // zero lease); a restarted driver process earns the short restart
-    // lease only when ownerScope carries the checkpoint — the bare
-    // ingest-<batchId> form waits the full foreign lease (ADVICE r12).
-    val fenceRoot = new Path(storeDir)
-    val fenceFs = fsOf(s, fenceRoot)
-    StoreDirs.withGenFence(fenceFs, fenceRoot, next,
-      owner = Some(ownerScope.fold(s"ingest-$streamBatchId")(cp =>
-        s"ingest-$cp-$streamBatchId"))) { prior match {
+    // (or a second stream on one store) is the same interleave hazard
+    gs.claim(next, GenStore.ingestOwner(ownerScope, streamBatchId)) { prior match {
       case None =>
         val (n, fp) = globalOf(stats)
-        writeDaysBatch(s, storeDir, batch, next, stats.length)
-        publishGen(s, storeDir, gens, next, n, fp, dead = 0L,
-          stats.map(d => (d.date, d.n, d.fp, next)), Some(streamBatchId))
+        writeDaysBatch(gs, batch, next, stats.length)
+        publishManifest(gs, next, n, fp, dead = 0L,
+          stats.map(d => (d.date, d.n, d.fp, next)), Seq.empty, Some(streamBatchId))
         "append-initial"
       case Some(g) =>
-        val old = readManifest(s, g).map(m => m._1 -> m).toMap
+        val old = readManifest(gs, g).map(m => m._1 -> m).toMap
         val overlap = stats.filter(d => old.contains(d.date))
         val overlapDates = overlap.map(_.date)
         // the restated days' prior copies become dead disk the moment
@@ -402,14 +293,14 @@ object DateStore {
           // compact: everything live plus the batch, one fresh batch dir
           val full = readEvents(s, storeDir).drop("event_date")
             .unionByName(batch)
-          writeDaysBatch(s, storeDir, full, next, old.size + stats.length)
+          writeDaysBatch(gs, full, next, old.size + stats.length)
           val touched = stats.map(_.date).toSet
           val manifest = stats.map(d => { val (dt, nn, ff) = mergedDay(d); (dt, nn, ff, next) }) ++
             old.values.toSeq.collect {
               case (dt, nn, ff, _) if !touched.contains(dt) => (dt, nn, ff, next)
             }
-          publishGen(s, storeDir, gens, next, mergedN, mergedFp, dead = 0L,
-            manifest, Some(streamBatchId))
+          publishManifest(gs, next, mergedN, mergedFp, dead = 0L,
+            manifest, old.values.toSeq, Some(streamBatchId))
           "append-compact"
         } else {
           // restated days re-land whole (their live rows ∪ the batch's);
@@ -420,14 +311,14 @@ object DateStore {
               .filter(col("event_date").isin(overlapDates: _*))
               .drop("event_date")
               .unionByName(batch)
-          writeDaysBatch(s, storeDir, toWrite, next, stats.length)
+          writeDaysBatch(gs, toWrite, next, stats.length)
           val touched = stats.map(_.date).toSet
           val manifest = stats.map(d => { val (dt, nn, ff) = mergedDay(d); (dt, nn, ff, next) }) ++
             old.values.toSeq.collect {
               case (dt, nn, ff, b) if !touched.contains(dt) => (dt, nn, ff, b)
             }
-          publishGen(s, storeDir, gens, next, mergedN, mergedFp,
-            dead = g.dead + newlyDead, manifest, Some(streamBatchId))
+          publishManifest(gs, next, mergedN, mergedFp, dead = g.dead + newlyDead,
+            manifest, old.values.toSeq, Some(streamBatchId))
           "append"
         }
     } }
@@ -463,14 +354,14 @@ object DateStore {
     * callers' date filters prune the same way.
     */
   def readEvents(s: SparkSession, storeDir: String): DataFrame = {
-    val gens = listGens(s, storeDir)
-    require(gens.nonEmpty, s"DateStore: no published generation under $storeDir")
-    val manifest = readManifest(s, gens.last)
-    require(manifest.nonEmpty, s"DateStore: empty manifest under ${gens.last.path}")
+    val gs = store(s, storeDir)
+    val gen = gs.newest
+    val manifest = readManifest(gs, gen)
+    require(manifest.nonEmpty, s"DateStore: empty manifest under ${gen.path}")
     val pred = manifest.groupBy(_._4).map { case (b, rows) =>
       col("__batch") === b && col("event_date").isin(rows.map(_._1): _*)
     }.reduce(_ || _)
-    s.read.parquet(daysDir(storeDir)).filter(pred).drop("__batch")
+    s.read.parquet(gs.dataset(Days).toString).filter(pred).drop("__batch")
   }
 
   /** The pruned scan [[s11DateRollup]] aggregates — exposed so PlanSpec

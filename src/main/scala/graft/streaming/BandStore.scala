@@ -45,9 +45,8 @@ import graft.operators.Dedup
 object BandStore {
 
   /** Stage timer for admission profiling, off unless
-    * `spark.graft.debug.timing=true` (the [[graft.Probe11]] admit mode
-    * sets it) — the same hook [[graft.operators.LabelStore]] exposes for
-    * its maintenance paths.
+    * `spark.graft.debug.timing=true` — the same hook
+    * [[graft.operators.LabelStore]] exposes for its maintenance paths.
     */
   private def timed[A](s: SparkSession, name: String)(f: => A): A =
     if (s.conf.get("spark.graft.debug.timing", "false") != "true") f
@@ -1794,9 +1793,8 @@ object BandStore {
     // plan references the written tree. With the probe/candidate/veto
     // caches still registered, that walk grew with the store and put an
     // O(store) term into each batch's constant-size write (measured:
-    // write-bands 0.9 → 3.4 s over ten batches; Probe12 pins the
-    // mechanism — the same write is flat with no live cache over the
-    // target and grows with one). A pinned LogicalRDD has no file
+    // write-bands 0.9 → 3.4 s over ten batches; the same write is flat
+    // with no live cache over the target and grows with one). A pinned LogicalRDD has no file
     // relation for the refresh to match, so the writes stay flat.
     val admitted = pin(batch.join(dropped, Seq("doc_id"), "left_anti"))
     val admittedSig =
@@ -1827,8 +1825,8 @@ object BandStore {
       overwriteBatchPartitions(admitted, batchId, None, admittedDir,
         manifest = false) }
     // diagnostic knob: serialize the three writes so their per-stage
-    // timings don't absorb each other's scheduler contention (the
-    // Probe11/12 admission-climb investigation) — never set in production
+    // timings don't absorb each other's scheduler contention — never set
+    // in production
     if (spark.conf.get("spark.graft.debug.sequentialWrites", "false") == "true") {
       writeSigs(); writeBands(); writeAdmitted()
     } else {
