@@ -108,7 +108,8 @@ private[graft] final class GenStore(val spark: SparkSession, storeDir: String,
     * comes from the dir name at read time). The batch is unpublished, so
     * no committer staging is needed. An empty frame leaves no batch dir:
     * a dir holding only `_SUCCESS` would count in [[hasBatches]] yet
-    * break schema inference of the dataset. One driver listing checks it.
+    * break schema inference of the dataset. One listing of the batch dir
+    * checks it.
     */
   def writeBatch(df: DataFrame, name: String, k: Long, parts: Seq[String]): Unit = {
     val batchDir = new Path(dataset(name), s"__batch=$k")
@@ -225,7 +226,7 @@ private[graft] object GenStore {
     }
 
   /** The fence owner of a stream micro-batch. Scoped by the checkpoint
-    * when there is one: only then may a restarted driver of the same
+    * when there is one: only then may a restarted process of the same
     * stream reclaim the fence after the short restart lease
     * ([[StoreDirs.acquireGen]]).
     */

@@ -150,8 +150,8 @@ object DateStore {
   /** Publish generation `next` routed by `manifest`. `old` is the
     * manifest of the generation it supersedes, which stays live: the
     * batches either references are kept, every other `days/` batch is
-    * deleted. The manifest is a plain driver-written file — bounded
-    * routing metadata needs no Spark write job.
+    * deleted. The manifest is a plain text file — bounded routing
+    * metadata needs no Spark write job.
     */
   private def publishManifest(gs: GenStore, next: Long, n: Long, fp: Long,
                               dead: Long, manifest: Manifest, old: Manifest,
