@@ -83,9 +83,6 @@ object IvfStore {
   private[graft] def fingerprint(s: SparkSession, dir: String): (Long, Long) =
     GenStore.fingerprint(digestsOf(Tables.embeddings(s, dir)))
 
-  private def maskDead(df: DataFrame, ts: Option[DataFrame]): DataFrame =
-    GenStore.maskDead(df, ts, "vec_id")
-
   private def store(s: SparkSession, storeDir: String) =
     new GenStore(s, storeDir, "IvfStore", Seq(Lists, Digests, Tombs))
 
@@ -183,7 +180,7 @@ object IvfStore {
       val gen = latest.getOrElse { buildVecs(emb, storeDir); return "full" }
       if (!gs.hasDataset(Digests)) { buildVecs(emb, storeDir); return "full" }
       val ts = gs.tombstones(Tombs, gen)
-      val stored = maskDead(gs.readBatches(Digests, gen), ts)
+      val stored = GenStore.maskDead(gs.readBatches(Digests, gen), ts, "vec_id")
         .select(col("vec_id"), col("h").as("h_idx"))
       // ONE full-outer digest pass classifies the delta (the LabelStore
       // discipline): corpus-only rows are appends; index-only rows are
@@ -220,8 +217,8 @@ object IvfStore {
         // the live corpus, probes pay more masking than a rebuild costs
         val priorDead = ts.map(_.count()).getOrElse(0L)
         if (priorDead + nDel > 0.5 * n) { buildVecs(emb, storeDir); return "full" }
-        val live = maskDead(gs.readBatches(Lists, gen)
-          .select(col("vec_id"), col("c_id"), col("__batch")), ts)
+        val live = GenStore.maskDead(gs.readBatches(Lists, gen)
+          .select(col("vec_id"), col("c_id"), col("__batch")), ts, "vec_id")
         val newTombs = live.join(deleted, Seq("vec_id"), "left_semi")
           .select(col("vec_id"), col("c_id")).localCheckpoint()
         // imbalance gauge against the REDUCED balanced share: deletes
@@ -303,9 +300,9 @@ object IvfStore {
     // cell + batch-range partition filters first, THEN the tombstone
     // mask: the anti-join's probe side is already pruned to the probed
     // cells and its build side is delete-sized
-    val lists = maskDead(
+    val lists = GenStore.maskDead(
         gs.readBatches(Lists, gen).filter(col("c_id").isin(probed: _*)),
-        gs.tombstones(Tombs, gen))
+        gs.tombstones(Tombs, gen), "vec_id")
       .select(col("vec_id"), col("e"), col("norm"), col("c_id"))
     (qCells, lists)
   }
@@ -320,7 +317,7 @@ object IvfStore {
   private[graft] def liveVectors(s: SparkSession, storeDir: String): DataFrame = {
     val gs = store(s, storeDir)
     val gen = gs.newest
-    maskDead(gs.readBatches(Lists, gen), gs.tombstones(Tombs, gen))
+    GenStore.maskDead(gs.readBatches(Lists, gen), gs.tombstones(Tombs, gen), "vec_id")
       .select(col("vec_id"), col("e"), col("norm"), col("c_id"))
   }
 
@@ -501,7 +498,7 @@ object IvfStore {
       val gen = gen0.get
       val next = gen.k + 1
       val ts = gs.tombstones(Tombs, gen)
-      val stored = maskDead(gs.readBatches(Digests, gen), ts)
+      val stored = GenStore.maskDead(gs.readBatches(Digests, gen), ts, "vec_id")
         .select(col("vec_id"), col("h").as("h_idx"))
       val classified = digestsOf(cleaned)
         .join(stored, Seq("vec_id"), "left")
@@ -539,8 +536,8 @@ object IvfStore {
       // A restating batch reads this scan twice (gauge + the
       // predecessors' tombstones below) — pin it once; a pure append
       // reads it once and pins nothing
-      val liveBase0 = maskDead(gs.readBatches(Lists, gen)
-          .select(col("vec_id"), col("c_id"), col("__batch")), ts)
+      val liveBase0 = GenStore.maskDead(gs.readBatches(Lists, gen)
+          .select(col("vec_id"), col("c_id"), col("__batch")), ts, "vec_id")
         .select(col("vec_id"), col("c_id"))
       val liveBase =
         if (nRe == 0) liveBase0
@@ -554,8 +551,8 @@ object IvfStore {
         // re-train FROM THE STORE: surviving normalized vectors ∪ the
         // batch's — fresh centroids, fresh single-batch lists/digests
         // (base = next also compacts away every tombstone)
-        val liveNorm = maskDead(gs.readBatches(Lists, gen)
-            .select(col("vec_id"), col("e"), col("norm"), col("__batch")), ts)
+        val liveNorm = GenStore.maskDead(gs.readBatches(Lists, gen)
+            .select(col("vec_id"), col("e"), col("norm"), col("__batch")), ts, "vec_id")
           .join(reIds, Seq("vec_id"), "left_anti")
           .select(col("vec_id"), col("e"), col("norm"))
         // localCheckpoint, not persist (the BandStore write-tax lesson,
@@ -568,7 +565,7 @@ object IvfStore {
         pinned += allNorm
         val (cent2, lists2, smp2) = Similarity.ivfIndexWithSample(allNorm)
         try {
-          val liveDg = maskDead(gs.readBatches(Digests, gen), ts)
+          val liveDg = GenStore.maskDead(gs.readBatches(Digests, gen), ts, "vec_id")
             .join(reIds, Seq("vec_id"), "left_anti")
             .select(col("vec_id"), col("h"))
           gs.writeBatch(lists2.repartition(Similarity.IvfNList, col("c_id")), Lists, next, Seq("c_id"))

@@ -68,9 +68,6 @@ object LabelStore {
   private def store(s: SparkSession, storeDir: String) =
     new GenStore(s, storeDir, "LabelStore", Seq(DigestsIdx, SigsIdx, BandsIdx, TombstonesIdx))
 
-  private def maskDead(df: DataFrame, ts: Option[DataFrame]): DataFrame =
-    GenStore.maskDead(df, ts, "doc_id")
-
   // ----------------------------------------------------------------
   // Signature/band INDEX — what makes the incremental append path
   // possible. The admission BandStore cannot serve label maintenance:
@@ -338,7 +335,7 @@ object LabelStore {
       val latest = gen.get
       val geom @ (gbb, gdb) = geometry(s, storeDir)
       val ts = gs.tombstones(TombstonesIdx, latest)
-      val idx = maskDead(gs.readBatches(DigestsIdx, latest), ts)
+      val idx = GenStore.maskDead(gs.readBatches(DigestsIdx, latest), ts, "doc_id")
         .select(col("doc_id"), col("h").as("h_idx"))
       // ONE full-outer digest pass classifies the whole delta (was two
       // anti-join scans): a row only in the corpus is an append; a row
@@ -406,8 +403,8 @@ object LabelStore {
             val dbs = survivors
               .select(pmod(col("doc_id"), lit(gdb)).cast("int").as("__db"))
               .distinct().collect().map(_.getInt(0)).toSeq
-            val sh = keep(maskDead(
-                gs.readBatches(SigsIdx, latest).filter(col("__db").isin(dbs: _*)), ts)
+            val sh = keep(GenStore.maskDead(
+                gs.readBatches(SigsIdx, latest).filter(col("__db").isin(dbs: _*)), ts, "doc_id")
               .join(survivors, Seq("doc_id"), "left_semi")
               .select(col("doc_id"), col("sh")))
             val sig = sh.withColumn("sig", Dedup.minhashSig)
@@ -427,8 +424,8 @@ object LabelStore {
               .distinct().collect().map(_.getInt(0)).toSeq
             val reducedMax =
               if (survBb.isEmpty) 0L
-              else maskDead(gs.readBatches(BandsIdx, latest)
-                  .filter(col("__bb").isin(survBb: _*)), ts)
+              else GenStore.maskDead(gs.readBatches(BandsIdx, latest)
+                  .filter(col("__bb").isin(survBb: _*)), ts, "doc_id")
                 .join(deleted, Seq("doc_id"), "left_anti")
                 .groupBy(col("band"), col("bh")).agg(count(lit(1)).as("__n"))
                 .agg(coalesce(max(col("__n")), lit(0L))).head.getLong(0)
@@ -558,8 +555,8 @@ object LabelStore {
       val no = timed(s, "probe-candidates") {
         if (touched.isEmpty) s.range(0).select(col("id").as("new_id"), col("id").as("old_id"))
         else {
-          val probe = maskDead(
-              bandsStored.filter(col("__bb").isin(touched: _*)), ts)
+          val probe = GenStore.maskDead(
+              bandsStored.filter(col("__bb").isin(touched: _*)), ts, "doc_id")
             .select(col("band"), col("bh"), col("doc_id").as("old_id"))
           // EXACTNESS GATE (round-10 review): the from-scratch pipeline
           // caps each (band,bh) bucket on its COMBINED population and
@@ -607,8 +604,8 @@ object LabelStore {
       val noV =
         if (peerBuckets.isEmpty) nnV.limit(0)
         else {
-          val oldSh = maskDead(
-              sigsStored.filter(col("__db").isin(peerBuckets: _*)), ts)
+          val oldSh = GenStore.maskDead(
+              sigsStored.filter(col("__db").isin(peerBuckets: _*)), ts, "doc_id")
             .select(col("doc_id"), col("sh").as("sh_b"))
           graft.engine.Spread.pairs(no, "new_id")
             .join(sig.select(col("doc_id"), col("sh").as("sh_a")), col("new_id") === col("doc_id")).drop("doc_id")

@@ -135,8 +135,9 @@ object DateStore {
   private def hasManifest(gs: GenStore, g: Gen): Boolean =
     gs.fs.exists(new Path(g.path, "manifest"))
 
-  private def writeDaysBatch(gs: GenStore, rows: DataFrame, batch: Long,
-                             nDates: Int): Unit =
+  /** Write `rows` as `days/__batch=<batch>/event_date=<d>/`. */
+  private def writeDays(gs: GenStore, rows: DataFrame, batch: Long,
+                        nDates: Int): Unit =
     gs.writeBatch(rows.withColumn("event_date", to_date(col("ts")))
       // one file per day at fixture scale; a production deployment
       // sizes files via maxRecordsPerFile instead. The count is EXPLICIT
@@ -183,7 +184,7 @@ object DateStore {
     // interleaving the shared batch dir
     gs.claim(next, None) { prior match {
       case None =>
-        writeDaysBatch(gs, ev, next, stats.length)
+        writeDays(gs, ev, next, stats.length)
         publish(stats.map(d => (d.date, d.n, d.fp, next)), Seq.empty, dead = 0L)
         "full"
       case Some(g) =>
@@ -206,13 +207,13 @@ object DateStore {
         // data it serves — either way rebuild, which compacts and
         // resets the dead count
         if (changed.map(_.n).sum > 0.5 * n || g.dead + newlyDead > 0.5 * n) {
-          writeDaysBatch(gs, ev, next, stats.length)
+          writeDays(gs, ev, next, stats.length)
           publish(stats.map(d => (d.date, d.n, d.fp, next)), old.values.toSeq, dead = 0L)
           return "full"
         }
         if (changed.nonEmpty) {
           val dates = changed.map(_.date)
-          writeDaysBatch(gs, ev.filter(to_date(col("ts")).isin(dates: _*)), next,
+          writeDays(gs, ev.filter(to_date(col("ts")).isin(dates: _*)), next,
             dates.length)
         }
         val manifest = stats.map { d =>
@@ -271,7 +272,7 @@ object DateStore {
     gs.claim(next, GenStore.ingestOwner(ownerScope, streamBatchId)) { prior match {
       case None =>
         val (n, fp) = globalOf(stats)
-        writeDaysBatch(gs, batch, next, stats.length)
+        writeDays(gs, batch, next, stats.length)
         publishManifest(gs, next, n, fp, dead = 0L,
           stats.map(d => (d.date, d.n, d.fp, next)), Seq.empty, Some(streamBatchId))
         "append-initial"
@@ -293,7 +294,7 @@ object DateStore {
           // compact: everything live plus the batch, one fresh batch dir
           val full = readEvents(s, storeDir).drop("event_date")
             .unionByName(batch)
-          writeDaysBatch(gs, full, next, old.size + stats.length)
+          writeDays(gs, full, next, old.size + stats.length)
           val touched = stats.map(_.date).toSet
           val manifest = stats.map(d => { val (dt, nn, ff) = mergedDay(d); (dt, nn, ff, next) }) ++
             old.values.toSeq.collect {
@@ -311,7 +312,7 @@ object DateStore {
               .filter(col("event_date").isin(overlapDates: _*))
               .drop("event_date")
               .unionByName(batch)
-          writeDaysBatch(gs, toWrite, next, stats.length)
+          writeDays(gs, toWrite, next, stats.length)
           val touched = stats.map(_.date).toSet
           val manifest = stats.map(d => { val (dt, nn, ff) = mergedDay(d); (dt, nn, ff, next) }) ++
             old.values.toSeq.collect {
