@@ -29,12 +29,14 @@ import org.apache.spark.sql.functions._
   *     every reader filters batches to the range (or manifest) of a
   *     published generation.
   *   - The claim clears `k`'s debris: right after the fence for `k` is
-  *     won, `.staging-k` and `__batch=k` of every dataset are deleted,
-  *     so a crashed attempt's files (from any lane) never go live with a
+  *     won, and only if no generation `>= k` (live or retired) exists,
+  *     `.staging-k` and `__batch=k` of every dataset are deleted, so a
+  *     crashed attempt's files (from any lane) never go live with a
   *     later publish of `k`. Nothing can reference `k` before its rename.
   *   - The ingest floor (the last absorbed stream micro-batch id)
   *     carries forward as a max through every publish, streamed or not,
-  *     so a replayed micro-batch stays a skip.
+  *     so a replayed micro-batch stays a skip. It is carried from the
+  *     same generation the ingest lane reads its skip floor from.
   *   - The two newest generations stay live: a publish retires older
   *     generation dirs by dot-rename (deleted one publish later) and
   *     deletes only batches neither live generation references.
@@ -67,7 +69,7 @@ private[graft] final class GenStore(val spark: SparkSession, storeDir: String,
 
   def dropDataset(name: String): Unit = fs.delete(dataset(name), true)
 
-  /** Published generations, oldest first. */
+  /** Published generations, oldest first (retired dirs excluded). */
   def gens: Seq[Gen] =
     if (!fs.exists(root)) Seq.empty
     else fs.listStatus(root).toSeq.collect {
@@ -86,7 +88,9 @@ private[graft] final class GenStore(val spark: SparkSession, storeDir: String,
     s"$family: no published generation under $storeDir"))
 
   /** Claim generation `k` ([[StoreDirs.withGenFence]]), clear its debris
-    * and run `body`; a failure releases the fence.
+    * and run `body`; a failure releases the fence. Refused, like any
+    * lost claim, when `k` is not above every generation ever published
+    * here.
     */
   def claim[A](k: Long, owner: Option[String])(body: => A): A =
     StoreDirs.withGenFence(fs, root, k, owner) { clearDebris(k); body }
@@ -99,7 +103,18 @@ private[graft] final class GenStore(val spark: SparkSession, storeDir: String,
 
   def release(k: Long): Unit = StoreDirs.releaseGen(fs, root, k)
 
+  /** Only a claim above every published generation may clear `k`: the
+    * fence alone does not refuse a writer whose read is two publishes
+    * old (publishing `k + 1` sweeps `.fence-k`, publishing `k + 2`
+    * retires `gen=k`), and its `__batch=k` is still read by the live
+    * generations. Retired dirs count as published.
+    */
   private def clearDebris(k: Long): Unit = {
+    val published = fs.listStatus(root).iterator.map(_.getPath.getName)
+      .collect { case RetiredOrLive(j) => j.toLong }
+    if (published.exists(_ >= k)) throw new IllegalStateException(
+      s"concurrent writer on $root: generation $k was already published by a " +
+        "competitor — this maintainer must re-read the store and retry from the advanced state")
     fs.delete(new Path(root, s".staging-$k"), true)
     datasets.foreach(d => fs.delete(new Path(dataset(d), s"__batch=$k"), true))
   }
@@ -152,15 +167,19 @@ private[graft] final class GenStore(val spark: SparkSession, storeDir: String,
   }
 
   /** Publish generation `k` — the caller holds its claim. `stage` writes
-    * the store's codec files into the staging dir; the carried ingest
-    * floor joins them, then one rename exposes the generation. Refuses
-    * (CAS) if the store advanced past `k - 1` since the caller's read.
+    * the store's codec files into the staging dir; the ingest floor
+    * (the max of `carryFrom`'s floor and `ingestId`) joins them, then
+    * one rename exposes the generation. `carryFrom` is the generation
+    * the caller's lane read its skip floor from: the one `k` supersedes,
+    * or None when that generation does not serve the stream's rows.
+    * Refuses (CAS) if the store advanced past `k - 1` since the caller's
+    * read.
     * Afterwards spent fences and last cycle's retired dirs sweep, all
     * generations older than the previous newest retire, and batches for
     * which `keepBatch` is false are deleted from every dataset.
     */
   def publish(k: Long, n: Long, fp: Long, base: Option[Long], dead: Option[Long],
-              ingestId: Option[Long], keepBatch: Long => Boolean)
+              carryFrom: Option[Gen], ingestId: Option[Long], keepBatch: Long => Boolean)
              (stage: Path => Unit): Unit = {
     fs.mkdirs(root)
     val prior = gens
@@ -170,7 +189,7 @@ private[graft] final class GenStore(val spark: SparkSession, storeDir: String,
         s"gen $k — concurrent writer; retry from the advanced state")
     val staging = new Path(root, s".staging-$k")
     stage(staging)
-    (prior.lastOption.flatMap(ingestFloor) ++ ingestId).reduceOption(_ max _)
+    (carryFrom.flatMap(ingestFloor) ++ ingestId).reduceOption(_ max _)
       .foreach(id => writeText(new Path(staging, "ingest"), id.toString))
     val pub = new Path(root, s"gen=${k}__n=${n}__fp=${java.lang.Long.toHexString(fp)}" +
       base.fold("")(b => s"__b=$b") + dead.fold("")(d => s"__d=$d"))
@@ -201,6 +220,7 @@ private[graft] object GenStore {
   final case class Gen(k: Long, n: Long, fp: Long, base: Long, dead: Long, path: Path)
 
   private val Name = """gen=(\d+)__n=(\d+)__fp=([0-9a-f]+)(?:__b=(\d+))?(?:__d=(\d+))?""".r
+  private val RetiredOrLive = """\.?gen=(\d+)__.*""".r
 
   /** Spark's own hidden-file rule: `_`/`.`-prefixed names (`_SUCCESS`,
     * `.crc` sidecars) are not data, `_`-prefixed partition dirs are.

@@ -98,7 +98,7 @@ object IvfStore {
                       fp: Long, base: Long, centroids: DataFrame,
                       ingestId: Option[Long]): Unit = {
     val keepFrom = prev.fold(base)(g => math.min(base, g.base))
-    gs.publish(next, n, fp, Some(base), None, ingestId, _ >= keepFrom) { staging =>
+    gs.publish(next, n, fp, Some(base), None, prev, ingestId, _ >= keepFrom) { staging =>
       centroids.write.mode(SaveMode.Overwrite).parquet(s"$staging/centroids")
     }
   }

@@ -198,7 +198,7 @@ object LabelStore {
   /** Publish `labels` as generation `next`; the caller holds its claim. */
   private def publish(gs: GenStore, next: Long, n: Long, fp: Long,
                       labels: DataFrame): Unit =
-    gs.publish(next, n, fp, None, None, None, _ => true) { staging =>
+    gs.publish(next, n, fp, None, None, None, None, _ => true) { staging =>
       labels.write.mode(SaveMode.Overwrite).parquet(staging.toString)
     }
 

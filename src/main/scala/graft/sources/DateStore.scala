@@ -149,16 +149,19 @@ object DateStore {
       Days, batch, Seq("event_date"))
 
   /** Publish generation `next` routed by `manifest`. `old` is the
-    * manifest of the generation it supersedes, which stays live: the
-    * batches either references are kept, every other `days/` batch is
-    * deleted. The manifest is a plain text file — bounded routing
-    * metadata needs no Spark write job.
+    * manifest of `prior`, the generation it supersedes, which stays
+    * live: the batches either references are kept, every other `days/`
+    * batch is deleted. The ingest floor carries from `prior` only — a
+    * generation without a manifest serves no streamed rows, and
+    * [[appendEvents]] reads its skip floor from the same `prior`. The
+    * manifest is a plain text file — bounded routing metadata needs no
+    * Spark write job.
     */
-  private def publishManifest(gs: GenStore, next: Long, n: Long, fp: Long,
-                              dead: Long, manifest: Manifest, old: Manifest,
-                              ingestId: Option[Long]): Unit = {
+  private def publishManifest(gs: GenStore, prior: Option[Gen], next: Long,
+                              n: Long, fp: Long, dead: Long, manifest: Manifest,
+                              old: Manifest, ingestId: Option[Long]): Unit = {
     val live = (manifest ++ old).map(_._4).toSet + next
-    gs.publish(next, n, fp, None, Some(dead), ingestId, live.contains) { staging =>
+    gs.publish(next, n, fp, None, Some(dead), prior, ingestId, live.contains) { staging =>
       gs.writeText(new Path(staging, "manifest"), manifest.map { case (d, nr, f, b) =>
         s"$d,$nr,${java.lang.Long.toHexString(f)},$b"
       }.mkString("\n"))
@@ -174,10 +177,10 @@ object DateStore {
     if (latest.exists(g => g.n == n && g.fp == fp && hasManifest(gs, g)))
       return "noop"
     val next = latest.fold(1L)(_.k + 1)
-    def publish(manifest: Manifest, old: Manifest, dead: Long): Unit =
-      publishManifest(gs, next, n, fp, dead, manifest, old, None)
-
     val prior = latest.filter(hasManifest(gs, _))
+    def publish(manifest: Manifest, old: Manifest, dead: Long): Unit =
+      publishManifest(gs, prior, next, n, fp, dead, manifest, old, None)
+
     // claim the generation before this call's first write (every lane
     // below writes days/__batch=<next> or publishes) — a competing
     // maintainer at the same parent fails loudly here instead of
@@ -273,7 +276,7 @@ object DateStore {
       case None =>
         val (n, fp) = globalOf(stats)
         writeDays(gs, batch, next, stats.length)
-        publishManifest(gs, next, n, fp, dead = 0L,
+        publishManifest(gs, prior, next, n, fp, dead = 0L,
           stats.map(d => (d.date, d.n, d.fp, next)), Seq.empty, Some(streamBatchId))
         "append-initial"
       case Some(g) =>
@@ -300,7 +303,7 @@ object DateStore {
             old.values.toSeq.collect {
               case (dt, nn, ff, _) if !touched.contains(dt) => (dt, nn, ff, next)
             }
-          publishManifest(gs, next, mergedN, mergedFp, dead = 0L,
+          publishManifest(gs, prior, next, mergedN, mergedFp, dead = 0L,
             manifest, old.values.toSeq, Some(streamBatchId))
           "append-compact"
         } else {
@@ -318,7 +321,7 @@ object DateStore {
             old.values.toSeq.collect {
               case (dt, nn, ff, b) if !touched.contains(dt) => (dt, nn, ff, b)
             }
-          publishManifest(gs, next, mergedN, mergedFp, dead = g.dead + newlyDead,
+          publishManifest(gs, prior, next, mergedN, mergedFp, dead = g.dead + newlyDead,
             manifest, old.values.toSeq, Some(streamBatchId))
           "append"
         }

@@ -1824,19 +1824,12 @@ object BandStore {
     def writeAdmitted(): Unit = timed(spark, "write-admitted") {
       overwriteBatchPartitions(admitted, batchId, None, admittedDir,
         manifest = false) }
-    // diagnostic knob: serialize the three writes so their per-stage
-    // timings don't absorb each other's scheduler contention — never set
-    // in production
-    if (spark.conf.get("spark.graft.debug.sequentialWrites", "false") == "true") {
-      writeSigs(); writeBands(); writeAdmitted()
-    } else {
     val writes = Seq(Future(writeSigs()), Future(writeBands()), Future(writeAdmitted()))
     // settle ALL three before propagating any failure — a zombie write
     // racing the engine's batch retry is two writers on one partition
     // tree (interrupt-robust for the same reason as failSettling)
     writes.foreach(graft.operators.StoreDirs.settleQuietly)
     writes.foreach(f => f.value.get.get)
-    }
     }
   }
 }

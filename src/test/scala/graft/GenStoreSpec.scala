@@ -1,11 +1,11 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{GenStore, IvfStore}
+import graft.operators.{GenStore, IvfStore, LabelStore}
 
 /** The generational-store core ([[graft.operators.GenStore]]) shared by
-  * IvfStore, LabelStore and DateStore: claim-time debris clearing and
-  * the batch writer's empty-frame rule.
+  * IvfStore, LabelStore and DateStore: claim-time debris clearing, the
+  * refusal of a stale claim, and the batch writer's empty-frame rule.
   */
 class GenStoreSpec extends SparkSpec {
   import spark.implicits._
@@ -13,6 +13,12 @@ class GenStoreSpec extends SparkSpec {
   private def vecs(n: Int) = (0L until n.toLong).map { i =>
     (i, Seq(math.cos(i * 0.07).toFloat, math.sin(i * 0.07).toFloat, 0f, 0f), (i % 3).toInt)
   }.toDF("vec_id", "embedding", "label")
+
+  private def docs(n: Int) = (0L until n.toLong)
+    .map(i => (i, (0 until 30).map(j => s"d${i}_$j").mkString(" ")))
+    .toDF("doc_id", "text")
+    .withColumn("source", lit("s")).withColumn("lang", lit("en"))
+    .withColumn("n_chars", length(col("text")).cast("long"))
 
   test("a crashed delete's tombstone batch at the next generation does not mask a later append") {
     val store = tmpDir("genstore-debris") + "/store"
@@ -27,6 +33,44 @@ class GenStoreSpec extends SparkSpec {
     val live = IvfStore.liveVectors(spark, store).select("vec_id").as[Long].collect().toSet
     assert(live == (0L until 80L).toSet,
       s"missing vectors: ${(0L until 80L).toSet -- live}")
+
+    // the same debris under a label store, for base docs and for docs
+    // the append adds
+    val lstore = tmpDir("genstore-debris-labels") + "/store"
+    LabelStore.buildDocs(docs(20).localCheckpoint(), lstore)
+    (0L until 25L by 2).toDF("doc_id").coalesce(1)
+      .write.parquet(s"$lstore/index/tombstones/__batch=2")
+    assert(LabelStore.ensureIncrementalDocs(docs(25).localCheckpoint(), lstore) == "incremental")
+    val gs = new GenStore(spark, lstore, "GenStoreSpec", Seq.empty)
+    val g = gs.newest
+    val ts = gs.tombstones("index/tombstones", g)
+    for (ds <- Seq("index/digests", "index/sigs")) {
+      val ids = GenStore.maskDead(gs.readBatches(ds, g), ts, "doc_id")
+        .select("doc_id").distinct().as[Long].collect().toSet
+      assert(ids == (0L until 25L).toSet, s"$ds missing docs: ${(0L until 25L).toSet -- ids}")
+    }
+  }
+
+  test("a claim at or below a published generation is refused before it clears any batch") {
+    val dir = tmpDir("genstore-stale-claim")
+    val gs = new GenStore(spark, dir, "GenStoreSpec", Seq("ds"))
+    val rows = Seq((1L, 0)).toDF("id", "p")
+    for (k <- 1L to 3L) gs.claim(k, None) {
+      gs.writeBatch(rows, "ds", k, Seq.empty)
+      gs.publish(k, 1L, k, None, None, None, None, _ => true)(p => gs.fs.mkdirs(p))
+    }
+    // gen 1 is retired and its fence swept, so the fence alone admits a
+    // writer whose read is two publishes old
+    val root = new java.io.File(dir)
+    assert(root.list().exists(_.startsWith(".gen=1__")))
+    assert(!new java.io.File(root, ".fence-1").exists())
+    val e = intercept[IllegalStateException] {
+      gs.claim(1L, None) { fail("claimed generation 1 again") }
+    }
+    assert(e.getMessage.contains("concurrent writer"), e.getMessage)
+    intercept[IllegalStateException](gs.acquire(1L, None))
+    assert((1 to 3).forall(k => new java.io.File(root, s"ds/__batch=$k").exists()))
+    assert(!new java.io.File(root, ".fence-1").exists(), "the refused claim keeps its fence")
   }
 
   test("an empty frame leaves no batch dir: the dataset stays readable, and alone it has no batches") {
