@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** The contract line's parallelism fields. `cpus` stays a JSON number
     * when it is one; any other width (`SPARK_GRAFT_CPUS="*"`) is written
@@ -12,16 +11,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Sessions.withMaster(SparkSession.builder(), s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(e => new graft.functions.GraftExtensions()(e))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse(Sessions.CpusEnv, "4")
+    val spark = Sessions.start(Sessions.builder(Sessions.width(4))
+      .config("spark.sql.adaptive.enabled", "true"), "WARN")
     // warm the session once before timing: file-index + parquet footer
     // reads and scan-path JIT otherwise land entirely on whichever query
     // happens to run first

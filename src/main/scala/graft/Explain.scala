@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Plan-audit main: writes `queryExecution.explainString(formatted)` for
   * every `SparkEntry.queries` entry to `outDir/<name>.txt`. Used to review
@@ -15,17 +14,8 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(e => new graft.functions.GraftExtensions()(e))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.start(Sessions.builder(Sessions.width(4))
+      .config("spark.sql.adaptive.enabled", "true"), "WARN")
     new java.io.File(outDir).mkdirs()
     val unknownQ = args.drop(2).toSet.diff(SparkEntry.queries.keySet)
     require(unknownQ.isEmpty,

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round measurement main (guide §1): run named queries
   * under a listener that records every Spark job's wall, callsite and
@@ -23,17 +22,8 @@ object ProfileQuery {
     val names = args.drop(1).toSeq
     val unknown = names.toSet.diff(SparkEntry.queries.keySet)
     require(unknown.isEmpty, s"unknown: ${unknown.mkString(",")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(e => new graft.functions.GraftExtensions()(e))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.start(Sessions.builder(Sessions.width(32))
+      .config("spark.sql.adaptive.enabled", "true"), "WARN")
     // same warm-up as Bench so span attribution matches bench conditions
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings").foreach { t =>

@@ -29,6 +29,47 @@ object Sessions {
 
   def master(default: String): String = sys.env.getOrElse(MasterEnv, default)
 
+  /** Env knob: the parallelism width of the runtime mains. */
+  val CpusEnv = "SPARK_GRAFT_CPUS"
+
+  /** The width `SPARK_GRAFT_CPUS` asks for, or `default` when it is unset. */
+  def width(default: Int): Int = parseWidth(sys.env.getOrElse(CpusEnv, default.toString))
+
+  /** A positive number is used as is and `*` is the available
+    * processors, for the master and the shuffle partitions alike;
+    * anything else fails at start.
+    */
+  private[graft] def parseWidth(w: String): Int =
+    if (w == "*") Runtime.getRuntime.availableProcessors()
+    else w.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+      s"$CpusEnv must be a positive number or '*', got '$w'"))
+
+  /** The session recipe of every main and the test session: master
+    * `local[width]` (or the [[MasterEnv]] override), `width` shuffle
+    * partitions, and the [[recipe]] settings.
+    */
+  def builder(width: Int): SparkSession.Builder =
+    recipe(withMaster(SparkSession.builder(), s"local[$width]"), width)
+
+  /** The settings every graft session carries on top of its master:
+    * `shufflePartitions`, the UTC session time zone, legacy nanos-long
+    * parquet timestamps read as longs, the UI off, and graft's SQL
+    * extensions.
+    */
+  def recipe(b: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder = b
+    .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    .config("spark.ui.enabled", "false")
+    .withExtensions(e => new graft.functions.GraftExtensions()(e))
+
+  /** `b.getOrCreate()` with the driver's log level set. */
+  def start(b: SparkSession.Builder, logLevel: String): SparkSession = {
+    val s = b.getOrCreate()
+    s.sparkContext.setLogLevel(logLevel)
+    s
+  }
+
   /** The running JVM's launch arguments that `keep` selects. Under sbt
     * these come from build.sbt's `javaOptions`, the one list of JVM
     * options; under spark-submit, from the launcher.

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import java.util.concurrent.atomic.AtomicLong
@@ -31,20 +31,12 @@ object SpillStress {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val work = if (args.length > 1) args(1) else "/tmp/graft-spill"
     val copies = sys.env.getOrElse("SPARK_SPILL_COPIES", "16").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val heap = sys.env.getOrElse("SPARK_DRIVER_MEM", "8g")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = Sessions.start(Sessions.builder(Sessions.width(32))
       .appName("graft-spill-stress")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       // the join must sort-merge, not broadcast — the sorters are the
       // spill surface under test
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      .config("spark.sql.autoBroadcastJoinThreshold", "-1"), "WARN")
 
     val memSpilled = new AtomicLong
     val diskSpilled = new AtomicLong

@@ -340,20 +340,12 @@ object StressBench {
     // so true pair counts scale linearly and any superlinear runtime is
     // the engine's, not the corpus's
     val copies = sys.env.getOrElse("SPARK_GRAFT_STRESS_COPIES", "10").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = Sessions.start(Sessions.builder(Sessions.width(32))
       // SPARK_GRAFT_DEBUG_TIMING=true prints the admission loop's
       // per-stage [admit-timing] lines — the soak-drift attribution
       // hook (a -D on the sbt CLI never reaches the forked run JVM)
       .config("spark.graft.debug.timing",
-        sys.env.getOrElse("SPARK_GRAFT_DEBUG_TIMING", "false"))
-      .withExtensions(e => new graft.functions.GraftExtensions()(e))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+        sys.env.getOrElse("SPARK_GRAFT_DEBUG_TIMING", "false")), "WARN")
     // compaction-cadence knob (ROUND14 §9): the soak's between-compaction
     // slope is the small-files tax curve — a lower threshold trades more
     // (smaller) quiesced pauses against a flatter per-batch curve. The

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -14,17 +13,9 @@ object Verify {
     val unknownQ = selected.diff(SparkEntry.queries.keySet)
     require(unknownQ.isEmpty,
       s"unknown query name(s): ${unknownQ.toSeq.sorted.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // SPARK_GRAFT_MASTER overrides (e.g. local-cluster[4,8,4096] — real
     // separate executor JVMs, the serialization-boundary run)
-    val spark = Sessions.withMaster(SparkSession.builder(), s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(e => new graft.functions.GraftExtensions()(e))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.start(Sessions.builder(Sessions.width(4)), "WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => selected.isEmpty || selected(name) }

@@ -57,9 +57,6 @@ object LabelStore {
       r
     }
 
-  private def settleQuietly(f: scala.concurrent.Future[_]): Unit =
-    StoreDirs.settleQuietly(f)
-
   private val DigestsIdx = "index/digests"
   private val SigsIdx = "index/sigs"
   private val BandsIdx = "index/bands"
@@ -156,9 +153,10 @@ object LabelStore {
     * small: a delta touches up to all 64 band buckets, and a
     * single-task write creates those files serially (measured
     * 1.7–3.6 s); hashing the tiny delta across tasks writes them in
-    * parallel for a trivial shuffle.
+    * parallel for a trivial shuffle. Both writes settle before either's
+    * failure propagates, so the caller's fence never outlives a write.
     */
-  private def writeSigsBands(gs: GenStore, sig: DataFrame, gen: Long,
+  private[graft] def writeSigsBands(gs: GenStore, sig: DataFrame, gen: Long,
                              geom: (Int, Int)): Unit = {
     val s = sig.sparkSession
     val (gbb, gdb) = geom
@@ -166,10 +164,9 @@ object LabelStore {
       .withColumn("__db", pmod(col("doc_id"), lit(gdb)).cast("int"))
     val bandsDf = bandsOf(sig).select(col("band"), col("bh"), col("doc_id"))
       .withColumn("__bb", pmod(col("bh"), lit(gbb)).cast("int"))
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
+    import scala.concurrent.Future
     import scala.concurrent.ExecutionContext.Implicits.global
-    Await.result(Future.sequence(Seq(
+    StoreDirs.settleAll(Seq(
       // EXPLICIT partition counts: pmod makes bucket == shuffle
       // partition, so every task writes exactly one file — and a
       // user-specified count is exempt from AQE coalescing, which would
@@ -178,8 +175,7 @@ object LabelStore {
       Future(timed(s, "  idx-sigs") {
         gs.writeBatch(sigsDf.repartition(gdb, col("__db")), SigsIdx, gen, Seq("__db")) }),
       Future(timed(s, "  idx-bands") {
-        gs.writeBatch(bandsDf.repartition(gbb, col("__bb")), BandsIdx, gen, Seq("__bb")) }))),
-      Duration.Inf)
+        gs.writeBatch(bandsDf.repartition(gbb, col("__bb")), BandsIdx, gen, Seq("__bb")) })))
   }
 
   /** Digests are the index's VALIDITY KEY (appended = corpus digests −
@@ -268,7 +264,7 @@ object LabelStore {
         Seq(TombstonesIdx, DigestsIdx).foreach(gs.dropDataset)
         writeDigests(gs, dg, next)
       } catch { case t: Throwable =>
-        settleQuietly(fIdx)
+        StoreDirs.settleQuietly(fIdx)
         gs.release(next); throw t
       }
     } finally { sig.unpersist(); corpus.unpersist() }
@@ -304,7 +300,7 @@ object LabelStore {
     * input is O(new pairs), never O(all pairs). Old reps are minima of
     * their components, so the contracted min-label IS the global
     * min-label, and the merged output equals the full rebuild
-    * (pinned in Round8Spec, and hash-oracled end-to-end by
+    * (pinned in LabelStoreSpec, and hash-oracled end-to-end by
     * `x2_labels_incremental`). Change detection pays one narrow
     * corpus scan (doc_id + text hash) — the price of validity by
     * measurement; a deployment with append manifests can skip it.
@@ -525,13 +521,13 @@ object LabelStore {
             // the `return "full"` exit releases the fence itself before
             // rebuilding — this settle-only arm must not double-release
             // a fence the rebuild has since consumed
-            settleQuietly(fIdx)
+            StoreDirs.settleQuietly(fIdx)
             throw t
           case t: Throwable =>
             // release ONLY after the settle completed: settleQuietly
             // retries through interrupts, so the fence never outlives a
             // running index write nor frees one still in flight
-            settleQuietly(fIdx)
+            StoreDirs.settleQuietly(fIdx)
             gs.release(next)
             throw t
         }
@@ -725,7 +721,7 @@ object LabelStore {
     * the dropped-id table comes from the label parquet (cluster-sized,
     * broadcastable), and nothing re-shingles or re-signs. Byte-identical
     * to the direct form whenever the store is current (pinned in
-    * Round8Spec).
+    * LabelStoreSpec).
     */
   def keepSet(s: SparkSession, dir: String, storeDir: String): DataFrame = {
     val dropped = read(s, storeDir)

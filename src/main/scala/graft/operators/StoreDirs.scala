@@ -142,6 +142,15 @@ private[graft] object StoreDirs {
     if (interrupted) Thread.currentThread().interrupt()
   }
 
+  /** Settle every one of `fs` ([[settleQuietly]]), then rethrow the
+    * first failure in `fs` order: no write outlives the call, whichever
+    * of them fails first.
+    */
+  def settleAll(fs: Seq[scala.concurrent.Future[_]]): Unit = {
+    fs.foreach(settleQuietly)
+    fs.foreach(_.value.get.get)
+  }
+
   /** Read a store's recorded bucket geometry from `<root>/.geometry`,
     * stamping it first when absent: `legacy` (the store already holds
     * rows written before the file existed) pins the DEFAULTS those rows

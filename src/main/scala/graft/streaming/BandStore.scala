@@ -156,7 +156,7 @@ object BandStore {
     *      tombstone masks their rows at every later read, so they stop
     *      vetoing immediately, and the next [[compactStore]] physically
     *      drops the rows AND absorbs the tombstone — disk is reclaimed,
-    *      pinned in Round11Spec;
+    *      pinned in BandStoreSpec;
     *   3. [[compactStore]] bounds FILE counts (the small-files tax) at
     *      O(buckets), independent of batch count.
     * A time-based retention policy is the composition: feed the ids
@@ -234,8 +234,7 @@ object BandStore {
         Future(overwriteBatchPartitions(explodeBands(sig, "doc_id"), batchId,
           Some(("__bb", pmod(col("bh"), lit(g.bandBuckets)).cast("int"), g.bandBuckets)),
           bandsDir(storeDir), origin = true)))
-      writes.foreach(graft.operators.StoreDirs.settleQuietly)
-      writes.foreach(f => f.value.get.get)
+      graft.operators.StoreDirs.settleAll(writes)
     } finally sig.unpersist()
   }
 
@@ -428,7 +427,7 @@ object BandStore {
                                             storeDir: String): Long =
     math.max(retireGraceMs(spark), 2L * maxProbeWallMs(spark, storeDir))
 
-  /** Chaos-injection sleeps for the driver-kill suite (Round17ChaosSpec):
+  /** Chaos-injection sleeps for the driver-kill suite (ChaosSpec):
     * `spark.graft.band.failpoint.afterPublishMs` widens the window
     * between a fold's publish rename and its marker adds;
     * `...afterMarkersMs` the window between marker adds and source
@@ -886,26 +885,6 @@ object BandStore {
   def compactStore(spark: SparkSession, storeDir: String): Unit =
     compactStore(spark, storeDir, Long.MaxValue)
 
-  /** Close the gauge's loop (VERDICT r13 #2): run the quiesced full
-    * compaction iff [[needsCompaction]] fires, returning the pause cost
-    * in seconds (None = gauge quiet, nothing ran). At 100 TB an
-    * unbounded admission stream must SELF-maintain — the gauge reported
-    * the small-files tax since r12 but nothing acted on it. Call only
-    * from a quiesce point (between drains, checkpoint fully committed:
-    * [[graft.streaming.Streams.dedupAdmitDrain]] calls it after
-    * AvailableNow termination, when every batch is committed by
-    * construction; a batch-loop caller owns the same guarantee
-    * trivially) — the full compact folds EVERY batch, so a replayable
-    * batch id must not exist when it runs.
-    */
-  def compactIfNeeded(spark: SparkSession, storeDir: String): Option[Double] =
-    if (!needsCompaction(spark, storeDir)) None
-    else {
-      val t0 = System.nanoTime()
-      compactStore(spark, storeDir)
-      Some((System.nanoTime() - t0) / 1e9)
-    }
-
   /** Maintenance: merge the per-batch partition trees of every batch id
     * `< minLiveBatch` (prior base generations included) into ONE new base
     * generation per bucket. Every micro-batch adds up to [[BandBuckets]]
@@ -940,7 +919,7 @@ object BandStore {
     *      `.retired` log; the FILES stay at their original paths until a
     *      reap finds the log older than [[RetireGraceConf]]. A probe
     *      that pinned the manifest in the instant before retirement
-    *      therefore finishes against intact files (Round7Spec asserts
+    *      therefore finishes against intact files (BandStoreSpec asserts
     *      ZERO admission retries under a racing compactor); the
     *      idempotent-overwrite task/batch retry remains as the backstop
     *      for a probe outliving the grace. Crash debris (markerless
@@ -1279,8 +1258,9 @@ object BandStore {
   }
 
   /** Budgeted incremental compaction (VERDICT r14 #3) — the
-    * non-stop-the-world sibling of
-    * [[compactIfNeeded]]: when the gauge fires, fold per-bucket SLICES
+    * non-stop-the-world sibling of the full
+    * [[compactStore(spark:SparkSession,storeDir:String)*]]: when the
+    * [[needsCompaction]] gauge fires, fold per-bucket SLICES
     * of the band/sig trees under the
     * [[CompactSliceBudgetConf]] wall-clock budget instead of one
     * stop-the-world full pass, bounding the ingest pause a quiesce
@@ -1303,9 +1283,11 @@ object BandStore {
     * instead — cheap by then, because earlier slices have already
     * folded the data trees.
     *
-    * Same caller contract as [[compactIfNeeded]]: a quiesce point with
-    * the stream's checkpoint fully committed. Returns the pause cost in
-    * seconds (None = gauge quiet).
+    * Call only from a quiesce point, with the stream's checkpoint fully
+    * committed ([[graft.streaming.Streams.dedupAdmitDrain]] calls it
+    * after AvailableNow termination): a full pass folds EVERY batch, so
+    * a replayable batch id must not exist when it runs. Returns the
+    * pause cost in seconds (None = gauge quiet).
     */
   def compactSliceIfNeeded(spark: SparkSession, storeDir: String): Option[Double] =
     if (!needsCompaction(spark, storeDir)) None
@@ -1828,8 +1810,7 @@ object BandStore {
     // settle ALL three before propagating any failure — a zombie write
     // racing the engine's batch retry is two writers on one partition
     // tree (interrupt-robust for the same reason as failSettling)
-    writes.foreach(graft.operators.StoreDirs.settleQuietly)
-    writes.foreach(f => f.value.get.get)
+    graft.operators.StoreDirs.settleAll(writes)
     }
   }
 }

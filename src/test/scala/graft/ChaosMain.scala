@@ -6,8 +6,10 @@ import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerExecutorRemoved, SparkListenerTaskStart}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.operators.StoreDirs
+import Fixtures.{admittedIds, digest, docSchema, dupDocLine, generations, writeTopic}
 
 /** Executor-loss fault injection (VERDICT r13 next-round #1): crossing a
   * JVM boundary was proven in round 13; SURVIVING the loss of one is the
@@ -61,7 +63,7 @@ import org.apache.spark.sql.functions._
   *       set equals a no-kill control's on identical input, byte for
   *       byte, whichever class occurred.
   *
-  * Run as a subprocess by Round14Spec (its own cluster must not collide
+  * Run as a subprocess by ChaosSpec (its own cluster must not collide
   * with the suite's shared session). Writes one JSON line to args(1) and
   * exits 0 on success; any assertion failure exits nonzero with the
   * message on stdout (captured to the spec's log file).
@@ -69,7 +71,10 @@ import org.apache.spark.sql.functions._
   * A kill that lands after the victim phase already finished proves
   * nothing — each phase verifies the work was still in flight when the
   * kill landed and retries the whole phase (fresh store) up to 3 times
-  * otherwise, failing loudly if it can never land one.
+  * otherwise, failing loudly if it can never land one. Each store a
+  * phase maintains starts as a copy of one base store built per corpus
+  * ([[graft.operators.StoreDirs.copyStore]]), and the from-scratch
+  * label digest of the appended corpus is computed once.
   */
 object ChaosMain {
 
@@ -89,25 +94,13 @@ object ChaosMain {
     else all.filter(p => p.info().command().map(_.endsWith("java")).orElse(false))
   }
 
-  private def digest(df: DataFrame): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    df.collect().map(_.toString).sorted.foreach(r => md.update(r.getBytes("UTF-8")))
-    md.digest().map("%02x".format(_)).mkString
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outPath = args(1)
-    val spark = Sessions.withExactMaster(SparkSession.builder(), "local-cluster[3,4,1536]")
-      .appName("graft-chaos")
-      .config("spark.sql.shuffle.partitions", "12")
-      .config("spark.executor.memory", "1g")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(e => new graft.functions.GraftExtensions()(e))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.start(Sessions.recipe(
+      Sessions.withExactMaster(SparkSession.builder(), "local-cluster[3,4,1536]")
+        .appName("graft-chaos")
+        .config("spark.executor.memory", "1g"), 12), "WARN")
 
     val removed = new AtomicInteger
     val tasksStarted = new AtomicInteger
@@ -127,6 +120,40 @@ object ChaosMain {
 
     def require(cond: Boolean, msg: => String): Unit =
       if (!cond) { println(s"CHAOS FAIL: $msg"); spark.stop(); sys.exit(1) }
+
+    /** Never torn: a store's generation numbers are unique whatever a
+      * kill left behind.
+      */
+    def requireUniqueGens(store: String, what: String): Unit = {
+      val gens = generations(store)
+      require(gens.distinct.size == gens.size, s"duplicate $what: $gens")
+    }
+
+    /** A bounded retry (3 attempts, 1 s apart) from whatever state a kill
+      * left; the third attempt's failure propagates. Returns the last
+      * attempt's result.
+      */
+    def retried(attempt: => String): String = {
+      var r = ""
+      var n = 0
+      while (r == "" && n < 3) {
+        n += 1
+        try r = attempt
+        catch { case _: Exception if n < 3 => Thread.sleep(1000) }
+      }
+      r
+    }
+
+    /** After a landed kill of `victims` executors, the listener bus must
+      * carry as many executor-removed events: the kill is observed, not
+      * inferred.
+      */
+    def awaitRemoved(before: Int, victims: Int, msg: String): Unit = {
+      val evDeadline = System.currentTimeMillis() + 30000L
+      while (removed.get() < before + victims &&
+             System.currentTimeMillis() < evDeadline) Thread.sleep(50)
+      require(removed.get() >= before + victims, msg)
+    }
 
     /** The listener bus is ASYNCHRONOUS: events from the setup jobs
       * that ran before a phase (store builds, baseline digests) can
@@ -242,14 +269,9 @@ object ChaosMain {
       queryDigest = d
       queryLanded = landed
       queryPid = pid
-      if (landed) {
-        // the kill must be VISIBLE on the listener bus, not inferred
-        val evDeadline = System.currentTimeMillis() + 30000L
-        while (removed.get() == removedBefore &&
-               System.currentTimeMillis() < evDeadline) Thread.sleep(50)
-        require(removed.get() > removedBefore,
-          "killed an executor but no SparkListenerExecutorRemoved arrived")
-      }
+      // the kill must be VISIBLE on the listener bus, not inferred
+      if (landed) awaitRemoved(removedBefore, 1,
+        "killed an executor but no SparkListenerExecutorRemoved arrived")
     }
     require(queryLanded, s"could not land a mid-query kill in $attempts attempts")
     require(queryDigest == baseDigest,
@@ -266,6 +288,14 @@ object ChaosMain {
       .write.mode("overwrite").parquet(s"$corpus0/documents.parquet")
     docs.repartition(12)
       .write.mode("overwrite").parquet(s"$corpus1/documents.parquet")
+    // one base store on corpus0 that every label attempt starts from, and
+    // the from-scratch labels of corpus1 every surviving store must equal
+    val labelBase = s"$work/store-base"
+    LabelStore.build(spark, corpus0, labelBase)
+    val labelFresh = s"$work/store-fresh"
+    LabelStore.build(spark, corpus1, labelFresh)
+    val scratch = digest(LabelStore.read(spark, labelFresh))
+    def labelCopy(store: String): Unit = StoreDirs.copyStore(spark, labelBase, store)
 
     var storeLanded = false
     var storeOutcome = ""
@@ -275,7 +305,7 @@ object ChaosMain {
     while (!storeLanded && attempts < 3) {
       attempts += 1
       store = s"$work/store-$attempts"
-      LabelStore.build(spark, corpus0, store)
+      labelCopy(store)
       val removedBefore = removed.get()
       val (out, landed, pid) = killDuring(4) {
         try Right(LabelStore.ensureCurrentIncremental(spark, corpus1, store))
@@ -284,40 +314,22 @@ object ChaosMain {
       storeLanded = landed
       storePid = pid
       storeOutcome = out.fold(m => s"loud:$m", m => s"ok:$m")
-      if (landed) {
-        val evDeadline = System.currentTimeMillis() + 30000L
-        while (removed.get() == removedBefore &&
-               System.currentTimeMillis() < evDeadline) Thread.sleep(50)
-        require(removed.get() > removedBefore,
-          "killed an executor mid-maintenance but no executor-removed event arrived")
-      }
+      if (landed) awaitRemoved(removedBefore, 1,
+        "killed an executor mid-maintenance but no executor-removed event arrived")
     }
     require(storeLanded, s"could not land a mid-maintenance kill in $attempts attempts")
     require(storeOutcome.startsWith("ok:") || storeOutcome.startsWith("loud:"),
       s"unclassified maintenance outcome: $storeOutcome")
 
-    // never torn: generation numbers unique whatever the outcome
-    val gens = Option(new java.io.File(store).listFiles()).getOrElse(Array.empty)
-      .map(_.getName).filter(_.startsWith("gen=")).toSeq
-      .map(_.stripPrefix("gen=").takeWhile(_ != '_').toLong)
-    require(gens.distinct.size == gens.size, s"duplicate generations after kill: $gens")
+    requireUniqueGens(store, "generations after kill")
 
     // a bounded retry converges from whatever state the kill left
-    var retries = 0
-    var retried = ""
-    while (retried == "" && retries < 3) {
-      retries += 1
-      try retried = LabelStore.ensureCurrentIncremental(spark, corpus1, store)
-      catch { case _: Exception if retries < 3 => Thread.sleep(1000) }
-    }
-    require(Set("noop", "incremental", "full").contains(retried),
-      s"retry after kill did not converge: '$retried'")
+    val storeRetry = retried(LabelStore.ensureCurrentIncremental(spark, corpus1, store))
+    require(Set("noop", "incremental", "full").contains(storeRetry),
+      s"retry after kill did not converge: '$storeRetry'")
 
     // and the surviving store hash-equals a from-scratch build
-    val fresh = s"$work/store-fresh"
-    LabelStore.build(spark, corpus1, fresh)
     val survived = digest(LabelStore.read(spark, store))
-    val scratch = digest(LabelStore.read(spark, fresh))
     require(survived == scratch,
       s"post-kill store labels diverged from from-scratch: $survived vs $scratch")
 
@@ -336,7 +348,7 @@ object ChaosMain {
     while (!dblLanded && attempts < 3) {
       attempts += 1
       dblStore = s"$work/store-dbl-$attempts"
-      LabelStore.build(spark, corpus0, dblStore)
+      labelCopy(dblStore)
       val removedBefore = removed.get()
       val (out, landed, pid) = killDuring(4, victims = 2) {
         try Right(LabelStore.ensureCurrentIncremental(spark, corpus1, dblStore))
@@ -345,36 +357,18 @@ object ChaosMain {
       dblLanded = landed
       dblPid = pid
       dblOutcome = out.fold(m => s"loud:$m", m => s"ok:$m")
-      if (landed) {
-        val evDeadline = System.currentTimeMillis() + 30000L
-        while (removed.get() < removedBefore + 2 &&
-               System.currentTimeMillis() < evDeadline) Thread.sleep(50)
-        require(removed.get() >= removedBefore + 2,
-          "double-killed executors but fewer than 2 executor-removed events arrived")
-      }
+      if (landed) awaitRemoved(removedBefore, 2,
+        "double-killed executors but fewer than 2 executor-removed events arrived")
     }
     require(dblLanded, s"could not land a double kill in $attempts attempts")
 
-    val dblGens = Option(new java.io.File(dblStore).listFiles()).getOrElse(Array.empty)
-      .map(_.getName).filter(_.startsWith("gen=")).toSeq
-      .map(_.stripPrefix("gen=").takeWhile(_ != '_').toLong)
-    require(dblGens.distinct.size == dblGens.size,
-      s"duplicate generations after double kill: $dblGens")
+    requireUniqueGens(dblStore, "generations after double kill")
 
-    var dblRetries = 0
-    var dblRetried = ""
-    while (dblRetried == "" && dblRetries < 3) {
-      dblRetries += 1
-      try dblRetried = LabelStore.ensureCurrentIncremental(spark, corpus1, dblStore)
-      catch { case _: Exception if dblRetries < 3 => Thread.sleep(1000) }
-    }
+    val dblRetried = retried(LabelStore.ensureCurrentIncremental(spark, corpus1, dblStore))
     require(Set("noop", "incremental", "full").contains(dblRetried),
       s"retry after double kill did not converge: '$dblRetried'")
 
-    val dblFresh = s"$work/store-dbl-fresh"
-    LabelStore.build(spark, corpus1, dblFresh)
-    require(digest(LabelStore.read(spark, dblStore)) ==
-            digest(LabelStore.read(spark, dblFresh)),
+    require(digest(LabelStore.read(spark, dblStore)) == scratch,
       "post-double-kill store labels diverged from from-scratch")
 
     // ---------------------------------------------------------------
@@ -394,7 +388,7 @@ object ChaosMain {
     var aimedLanded = 0
     (1 to 6).foreach { pos =>
       val aStore = s"$work/store-aim-$pos"
-      LabelStore.build(spark, corpus0, aStore)
+      labelCopy(aStore)
       val (out, landed, _) = killAfterJobs(pos, victims = 2) {
         try Right(LabelStore.ensureCurrentIncremental(spark, corpus1, aStore))
         catch { case e: Exception => Left(e.toString.take(200)) }
@@ -403,24 +397,11 @@ object ChaosMain {
         aimedLanded += 1
         out.fold(_ => aimedLoud += 1, _ => aimedOk += 1)
         // invariants hold at EVERY aim position, whatever the class
-        val ag = Option(new java.io.File(aStore).listFiles()).getOrElse(Array.empty)
-          .map(_.getName).filter(_.startsWith("gen=")).toSeq
-          .map(_.stripPrefix("gen=").takeWhile(_ != '_').toLong)
-        require(ag.distinct.size == ag.size,
-          s"duplicate generations after aimed kill at job $pos: $ag")
-        var r = ""
-        var n = 0
-        while (r == "" && n < 3) {
-          n += 1
-          try r = LabelStore.ensureCurrentIncremental(spark, corpus1, aStore)
-          catch { case _: Exception if n < 3 => Thread.sleep(1000) }
-        }
+        requireUniqueGens(aStore, s"generations after aimed kill at job $pos")
+        val r = retried(LabelStore.ensureCurrentIncremental(spark, corpus1, aStore))
         require(Set("noop", "incremental", "full").contains(r),
           s"retry after aimed kill at job $pos did not converge: '$r'")
-        val aFresh = s"$work/store-aim-$pos-fresh"
-        LabelStore.build(spark, corpus1, aFresh)
-        require(digest(LabelStore.read(spark, aStore)) ==
-                digest(LabelStore.read(spark, aFresh)),
+        require(digest(LabelStore.read(spark, aStore)) == scratch,
           s"aimed kill at job $pos: store diverged from from-scratch")
       }
     }
@@ -455,8 +436,11 @@ object ChaosMain {
       .write.mode("overwrite").parquet(s"$corpusV0/embeddings.parquet")
     embBig.write.mode("overwrite").parquet(s"$corpusV1/embeddings.parquet")
 
+    // one base IVF store on vcorpus0: the control and every attempt copy it
+    val vBase = s"$work/vstore-base"
+    IvfStore.build(spark, corpusV0, vBase)
     val vControl = s"$work/vstore-control"
-    IvfStore.build(spark, corpusV0, vControl)
+    StoreDirs.copyStore(spark, vBase, vControl)
     val ctrlMode = IvfStore.ensureCurrentIncremental(spark, corpusV1, vControl)
     require(ctrlMode == "incremental",
       s"control IVF maintenance did not take the append path: '$ctrlMode'")
@@ -469,7 +453,7 @@ object ChaosMain {
     while (!ivfLanded && attempts < 3) {
       attempts += 1
       vstore = s"$work/vstore-$attempts"
-      IvfStore.build(spark, corpusV0, vstore)
+      StoreDirs.copyStore(spark, vBase, vstore)
       val removedBefore = removed.get()
       val (out, landed, pid) = killDuring(4) {
         try Right(IvfStore.ensureCurrentIncremental(spark, corpusV1, vstore))
@@ -478,30 +462,14 @@ object ChaosMain {
       ivfLanded = landed
       ivfPid = pid
       ivfOutcome = out.fold(m => s"loud:$m", m => s"ok:$m")
-      if (landed) {
-        val evDeadline = System.currentTimeMillis() + 30000L
-        while (removed.get() == removedBefore &&
-               System.currentTimeMillis() < evDeadline) Thread.sleep(50)
-        require(removed.get() > removedBefore,
-          "killed an executor mid-IVF-maintenance but no executor-removed event arrived")
-      }
+      if (landed) awaitRemoved(removedBefore, 1,
+        "killed an executor mid-IVF-maintenance but no executor-removed event arrived")
     }
     require(ivfLanded, s"could not land a mid-IVF-maintenance kill in $attempts attempts")
 
-    // never torn: generation ks unique whatever the outcome
-    val vgens = Option(new java.io.File(vstore).listFiles()).getOrElse(Array.empty)
-      .map(_.getName).filter(_.startsWith("gen=")).toSeq
-      .map(_.stripPrefix("gen=").takeWhile(_ != '_').toLong)
-    require(vgens.distinct.size == vgens.size,
-      s"duplicate IVF generations after kill: $vgens")
+    requireUniqueGens(vstore, "IVF generations after kill")
 
-    var ivfRetries = 0
-    var ivfRetried = ""
-    while (ivfRetried == "" && ivfRetries < 3) {
-      ivfRetries += 1
-      try ivfRetried = IvfStore.ensureCurrentIncremental(spark, corpusV1, vstore)
-      catch { case _: Exception if ivfRetries < 3 => Thread.sleep(1000) }
-    }
+    val ivfRetried = retried(IvfStore.ensureCurrentIncremental(spark, corpusV1, vstore))
     require(Set("noop", "incremental").contains(ivfRetried),
       s"IVF retry after kill did not converge on the append path: '$ivfRetried'")
 
@@ -520,36 +488,14 @@ object ChaosMain {
     // the same checkpoint, admitted set equals the no-kill control
     // ---------------------------------------------------------------
     import graft.streaming.Streams
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType)))
-    def docLine(id: Long): String = {
-      // every 5th doc duplicates an earlier one's text, so the kill
-      // lands on real veto work (store probe + in-batch pre-filter),
-      // not just pass-through admission
-      val base = if (id % 5 == 4) id - 4 else id
-      val words = (0 until 25).map(j => s"w${base}_$j").mkString(" ")
-      s"""{"doc_id":$id,"text":"$words"}"""
-    }
-    def writeTopic(dir: String): Unit = {
-      new java.io.File(dir).mkdirs()
-      (0 until 6).foreach { f =>
-        val ids = (f * 500L) until (f * 500L + 500L)
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(s"$dir/b$f.json"),
-          ids.map(docLine).mkString("\n"))
-      }
-    }
     def drainSrc(topic: String) = spark.readStream.schema(docSchema)
       .option("maxFilesPerTrigger", "1").json(topic)
-    def admittedSet(dir: String): Set[Long] =
-      spark.read.parquet(dir).select("doc_id").collect().map(_.getLong(0)).toSet
 
     val ctrlTopic = s"$work/drain-ctrl-topic"
-    writeTopic(ctrlTopic)
+    writeTopic(ctrlTopic, 500)(dupDocLine)
     Streams.dedupAdmitDrain(drainSrc(ctrlTopic), s"$work/drain-ctrl-store",
       s"$work/drain-ctrl-admitted", s"$work/drain-ctrl-ckpt")
-    val ctrlAdmitted = admittedSet(s"$work/drain-ctrl-admitted")
+    val ctrlAdmitted = admittedIds(spark, s"$work/drain-ctrl-admitted")
     require(ctrlAdmitted.nonEmpty, "control drain admitted nothing")
 
     var drainLanded = false
@@ -561,7 +507,7 @@ object ChaosMain {
       attempts += 1
       drainRoot = s"$work/drain-$attempts"
       val topic = s"$drainRoot/topic"
-      writeTopic(topic)
+      writeTopic(topic, 500)(dupDocLine)
       val removedBefore = removed.get()
       val (out, landed, pid) = killDuring(4) {
         try Right(Streams.dedupAdmitDrain(drainSrc(topic), s"$drainRoot/store",
@@ -571,31 +517,21 @@ object ChaosMain {
       drainLanded = landed
       drainPid = pid
       drainOutcome = out.fold(m => s"loud:$m", _ => "ok")
-      if (landed) {
-        val evDeadline = System.currentTimeMillis() + 30000L
-        while (removed.get() == removedBefore &&
-               System.currentTimeMillis() < evDeadline) Thread.sleep(50)
-        require(removed.get() > removedBefore,
-          "killed an executor mid-drain but no executor-removed event arrived")
-      }
+      if (landed) awaitRemoved(removedBefore, 1,
+        "killed an executor mid-drain but no executor-removed event arrived")
     }
     require(drainLanded, s"could not land a mid-drain kill in $attempts attempts")
 
     // converge: a re-drain from the SAME checkpoint replays at most the
     // uncommitted batch into the idempotent per-batch overwrite; after
     // it, the admitted set must equal the control's exactly
-    var drainRetries = 0
-    var drainConverged = false
-    while (!drainConverged && drainRetries < 3) {
-      drainRetries += 1
-      try {
-        Streams.dedupAdmitDrain(drainSrc(s"$drainRoot/topic"), s"$drainRoot/store",
-          s"$drainRoot/admitted", s"$drainRoot/ckpt")
-        drainConverged = true
-      } catch { case _: Exception if drainRetries < 3 => Thread.sleep(1000) }
+    val drainConverged = retried {
+      Streams.dedupAdmitDrain(drainSrc(s"$drainRoot/topic"), s"$drainRoot/store",
+        s"$drainRoot/admitted", s"$drainRoot/ckpt")
+      "drained"
     }
-    require(drainConverged, "re-drain after kill did not converge in 3 attempts")
-    val chaosAdmitted = admittedSet(s"$drainRoot/admitted")
+    require(drainConverged.nonEmpty, "re-drain after kill did not converge in 3 attempts")
+    val chaosAdmitted = admittedIds(spark, s"$drainRoot/admitted")
     require(chaosAdmitted == ctrlAdmitted,
       s"post-kill admitted set diverged from the no-kill control: " +
         s"${(chaosAdmitted -- ctrlAdmitted).take(5)} extra, " +
@@ -604,7 +540,7 @@ object ChaosMain {
     val line =
       s"""{"query_kill_pid":$queryPid,"query_digest_equal":true,""" +
       s""""store_kill_pid":$storePid,"store_outcome":"${storeOutcome.replace("\"", "'")}",""" +
-      s""""store_retry":"$retried","store_equal":true,""" +
+      s""""store_retry":"$storeRetry","store_equal":true,""" +
       s""""ivf_kill_pid":$ivfPid,"ivf_outcome":"${ivfOutcome.replace("\"", "'")}",""" +
       s""""ivf_retry":"$ivfRetried","ivf_equal":true,""" +
       s""""drain_kill_pid":$drainPid,"drain_outcome":"${drainOutcome.replace("\"", "'")}",""" +

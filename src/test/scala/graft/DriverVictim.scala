@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Subprocess side of Round15Spec's DRIVER-kill chaos (VERDICT r14 #2):
+/** Subprocess side of ChaosSpec's DRIVER-kill tests (VERDICT r14 #2):
   * a separate driver JVM that runs exactly one maintenance entry — and
   * gets SIGKILLed by the parent mid-flight. Round 14 proved the stores
   * survive EXECUTOR loss; this is the remaining cluster failure mode:
@@ -31,16 +31,8 @@ import org.apache.spark.sql.SparkSession
 object DriverVictim {
   def main(args: Array[String]): Unit = {
     val mode = args(0)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-driver-victim")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(e => new graft.functions.GraftExtensions()(e))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.start(Sessions.recipe(
+      SparkSession.builder().master("local[4]").appName("graft-driver-victim"), 4), "ERROR")
     println("VICTIM-START")
     mode match {
       case "label" =>
@@ -51,22 +43,13 @@ object DriverVictim {
         println(s"VICTIM-DONE:$m")
       case "drain" =>
         val Array(_, topic, store, admitted, ckpt) = args
-        import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-        val docSchema = StructType(Seq(
-          StructField("doc_id", LongType), StructField("text", StringType)))
-        val src = spark.readStream.schema(docSchema)
+        val src = spark.readStream.schema(Fixtures.docSchema)
           .option("maxFilesPerTrigger", "1").json(topic)
         graft.streaming.Streams.dedupAdmitDrain(src, store, admitted, ckpt)
         println("VICTIM-DONE")
       case "dateingest" =>
         val Array(_, topic, store, ckpt) = args
-        import org.apache.spark.sql.types._
-        // the events-table schema DateStore's row digest is wired to
-        val evSchema = StructType(Seq(
-          StructField("event_id", LongType), StructField("ts", TimestampType),
-          StructField("user_id", LongType), StructField("event_type", StringType),
-          StructField("value", DoubleType), StructField("props", StringType)))
-        val src = spark.readStream.schema(evSchema)
+        val src = spark.readStream.schema(Fixtures.eventSchema)
           .option("maxFilesPerTrigger", "1").json(topic)
         graft.sources.DateStore.ingestSink(src, store, ckpt).awaitTermination()
         println("VICTIM-DONE")

@@ -2,10 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Subprocess side of Round13Spec's two-process fence race: a SECOND
+/** Subprocess side of GenStoreSpec's two-process fence race: a SECOND
   * driver JVM running the same LabelStore maintenance entry against the
-  * same store path — the fence's actual adversary (Round11Spec races
-  * two writers inside one JVM; the zombie scenario ADVICE r11 named is
+  * same store path — the fence's actual adversary (GenStoreSpec also
+  * races two writers inside one JVM; the zombie scenario ADVICE r11 named is
   * a separate PROCESS, whose stamped token differs and whose liveness a
   * filesystem fence can only infer).
   *
@@ -20,15 +20,8 @@ import org.apache.spark.sql.SparkSession
 object FenceRaceMain {
   def main(args: Array[String]): Unit = {
     val Array(corpusDir, storeDir, readyFile, goFile, outcomeFile) = args
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-fence-race")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(e => new graft.functions.GraftExtensions()(e))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.start(Sessions.recipe(
+      SparkSession.builder().master("local[2]").appName("graft-fence-race"), 2), "ERROR")
     def write(path: String, content: String): Unit =
       java.nio.file.Files.writeString(java.nio.file.Paths.get(path), content)
     try {

@@ -1,24 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM, Test/fork := true). */
 object TestSession {
-  lazy val spark: SparkSession = {
-    // SPARK_GRAFT_MASTER lets the plan-pin suites run under
-    // local-cluster[n,c,m] — the cross-JVM serialization check
-    val s = Sessions.withMaster(SparkSession.builder(), "local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(e => new graft.functions.GraftExtensions()(e))
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // SPARK_GRAFT_MASTER lets the plan-pin suites run under
+  // local-cluster[n,c,m] — the cross-JVM serialization check
+  lazy val spark: SparkSession = Sessions.start(Sessions.builder(4).appName("graft-test"), "WARN")
 }
 
 abstract class SparkSpec extends AnyFunSuite {
@@ -26,6 +16,19 @@ abstract class SparkSpec extends AnyFunSuite {
   val sfDir = "/root/testdata/sf0.001"
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** `rows` as a documents table: (doc_id, text, source, lang, n_chars). */
+  protected def documentsOf(rows: Seq[(Long, String)]): DataFrame = {
+    import spark.implicits._
+    rows.toDF("doc_id", "text")
+      .withColumn("source", lit("s")).withColumn("lang", lit("en"))
+      .withColumn("n_chars", length(col("text")).cast("long"))
+  }
+
+  /** Write `docs` as `<dir>/documents.parquet` in four files. */
+  protected def writeDocs(docs: Seq[(Long, String)], dir: String): Unit =
+    documentsOf(docs).repartition(4)
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
 
   /** Run `body` with session confs set, restoring (set-back or unset)
     * on every exit — the shared session must never leak one suite's
