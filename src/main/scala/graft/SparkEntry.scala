@@ -377,12 +377,12 @@ object SparkEntry {
     // same crossover); on the structureless fixtures the exact ≥0.9
     // answer is empty, so the oracle pins the no-false-positive
     // direction — the positive (planted-twin) path is pinned in
-    // DedupSpec
+    // Round7Spec
     "x2_embedding_lsh_auto" -> Dedup.x2EmbeddingAutoSql,
     // x2_embedding_lsh_banded forces the banded arm (8 bands × 8 planes,
     // far fraction 0.03 — clears the pruning bar) at the ≥0.9 threshold:
     // subset-of-exact ⇒ empty on the fixtures ⇒ hash-equal to the exact
-    // twin; its positive path is the planted-twin spec in DedupSpec
+    // twin; its positive path is the planted-twin spec in Round7Spec
     "x2_embedding_lsh_banded" -> Dedup.x2EmbeddingAutoSql,
     "x3_cosine_topk" -> Similarity.x3Sql,
     // x3_ann_recall: the DuckDB twin recomputes the banded-LSH pipeline

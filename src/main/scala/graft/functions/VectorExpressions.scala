@@ -133,7 +133,7 @@ object HyperplaneBandSig {
   /** ±1 component j of plane p — THE canonical derivation:
     * `Similarity.planeComponents` (which generates the DuckDB ANN twin's
     * SQL literals) delegates here, so native-vs-oracle plane parity holds
-    * by construction (FunctionsSpec still pins it).
+    * by construction (Round8Spec still pins it).
     */
   private[graft] def component(p: Int, j: Int): Double =
     if (Math.floorMod(SplitMix.splitmix64(p * 1000L + j), 2L) == 1L) 1.0 else -1.0

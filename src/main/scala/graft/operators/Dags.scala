@@ -197,7 +197,7 @@ object Dags {
     * cluster pipeline ONCE ([[LabelStore.build]]) and every consumer —
     * this composite included — reads the label table instead of
     * re-running signatures → bands → pairs → fixpoint (the round-7
-    * recomputation nit). Same output either way (pinned in LabelStoreSpec);
+    * recomputation nit). Same output either way (pinned in Round8Spec);
     * the oracle row runs the storeless form so the full pipeline stays
     * under the hash gate.
     */
@@ -220,7 +220,7 @@ object Dags {
     * the store valid by measurement — a fingerprint match skips the whole
     * cluster pipeline; a mismatch rebuilds once for every consumer).
     * Registered under the SAME oracle SQL as the storeless row: the store
-    * is proven equal to the pipeline (LabelStoreSpec + `x2_labels_incremental`),
+    * is proven equal to the pipeline (Round8Spec + `x2_labels_incremental`),
     * so this puts the store-backed read itself under the hash gate while
     * the storeless row keeps gating the full pipeline.
     */
@@ -229,7 +229,7 @@ object Dags {
     // the INCREMENTAL form: a corpus that moved by an append merges the
     // delta, one that shrank takes the tombstone-delete path — the
     // composite serves the maintained labels either way (lifecycle
-    // pinned in LabelStoreSpec), and only a mutated/mixed corpus rebuilds
+    // pinned in Round10Spec), and only a mutated/mixed corpus rebuilds
     LabelStore.ensureCurrentIncremental(s, dir, store)
     dagCorpusBuildFrom(s, dir, Some(store))
   }

@@ -1085,7 +1085,7 @@ object Dedup {
     * On the structureless fixtures the ≥0.9 answer is empty (max
     * pairwise cosine ≈ 0.51) — the oracle twin pins exactly that (no
     * false positives); the positive path (planted cosine-0.995 twins
-    * found in full at auto geometry) is pinned in DedupSpec.
+    * found in full at auto geometry) is pinned in Round7Spec.
     */
   def x2EmbeddingLshAuto(s: SparkSession, dir: String): DataFrame = {
     val n = Tables.embeddings(s, dir).count()

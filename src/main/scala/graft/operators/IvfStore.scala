@@ -36,7 +36,7 @@ import graft.operators.GenStore.Gen
   *     publishes base=previous base. Probes filter `__batch ∈ [b, k]`
   *     AND the probed `c_id`s — both partition columns, so the scan
   *     reads only the probed cells of the live batches (partition
-  *     pruning, asserted in IvfStoreSpec).
+  *     pruning, asserted in Round8Spec).
   *   - `storeDir/digests/__batch=<j>/` — (vec_id, h) per batch, the
   *     append-detection key: appended = corpus digests − stored digests;
   *     any stored digest missing from the corpus means mutation/delete →
@@ -283,7 +283,7 @@ object IvfStore {
   }
 
   /** The probe's two inputs, exposed so the partition-pruning claim is
-    * asserted on the EXACT lists frame the probe joins (IvfStoreSpec).
+    * asserted on the EXACT lists frame the probe joins (Round8Spec).
     * `maxQueryId` narrows the query set (the oracle surface uses the
     * standard vec_id < 10).
     */
@@ -458,7 +458,7 @@ object IvfStore {
     * micro-batch. At production scale that join's shuffle self-prunes:
     * the batch side is far below the runtime bloom-filter creation
     * threshold and the digest scan far above the application threshold,
-    * so `InjectRuntimeFilter` (pinned in PlanSpec) drops non-batch
+    * so `InjectRuntimeFilter` (pinned in Round10Spec) drops non-batch
     * ids before the exchange — the residual cost is the narrow columnar
     * scan, amortized by batch frequency. STRESS_r10 `vec_ingest`
     * measures the whole path flat at 1M vectors.

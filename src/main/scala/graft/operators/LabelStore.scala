@@ -300,7 +300,7 @@ object LabelStore {
     * input is O(new pairs), never O(all pairs). Old reps are minima of
     * their components, so the contracted min-label IS the global
     * min-label, and the merged output equals the full rebuild
-    * (pinned in LabelStoreSpec, and hash-oracled end-to-end by
+    * (pinned in Round8Spec, and hash-oracled end-to-end by
     * `x2_labels_incremental`). Change detection pays one narrow
     * corpus scan (doc_id + text hash) — the price of validity by
     * measurement; a deployment with append manifests can skip it.
@@ -721,7 +721,7 @@ object LabelStore {
     * the dropped-id table comes from the label parquet (cluster-sized,
     * broadcastable), and nothing re-shingles or re-signs. Byte-identical
     * to the direct form whenever the store is current (pinned in
-    * LabelStoreSpec).
+    * Round8Spec).
     */
   def keepSet(s: SparkSession, dir: String, storeDir: String): DataFrame = {
     val dropped = read(s, storeDir)

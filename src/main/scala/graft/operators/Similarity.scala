@@ -122,7 +122,7 @@ object Similarity {
   /** The pre-round-8 Column-composed formulation of [[bandedSig]] —
     * semantically identical by construction (same planes, same `>= 0`
     * sign rule, bit-sum == bit-OR for distinct powers of two); kept
-    * non-private so FunctionsSpec can pin native == composed on real
+    * non-private so Round8Spec can pin native == composed on real
     * fixture vectors at both a small and a derived-scale geometry.
     */
   private[graft] def bandedSigComposed(nBands: Int, rowsPerBand: Int): org.apache.spark.sql.Column =
@@ -165,7 +165,7 @@ object Similarity {
 
   /** The banded-LSH ANN top-k at a caller-chosen query-set width — the
     * hook for driving the FULL ANN pipeline at high group cardinality
-    * (TopKSpec pins that its grouped top-k engages the
+    * (Round7Spec pins that its grouped top-k engages the
     * TopKPerGroupExec sorter fallback instead of growing hash state).
     */
   private[graft] def annTopKAll(s: SparkSession, dir: String, maxQ: Long): DataFrame =

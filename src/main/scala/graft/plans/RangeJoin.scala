@@ -41,7 +41,7 @@ object RangeJoin {
     * the point's own bin, so the bin join produces no duplicates and
     * needs no post-dedup.
     *
-    * Robustness (both guards verified in RangeJoinSpec):
+    * Robustness (both guards verified in Round4Spec):
     *  - reversed/empty intervals (`hi <= lo`, or null bounds) generate NO
     *    bins — without the guard `sequence` silently DESCENDS on a
     *    reversed interval, manufacturing |lo−hi|/binWidth junk bins per

@@ -481,7 +481,7 @@ object DateStore {
   /** S11c [EXT] — runtime partition pruning under the hash gate: the
     * per-type rollup of the busier-than-average days, read through the
     * date store with the day set decided by the dim at runtime. Oracle:
-    * the same rollup from the fixture events directly. DateStoreSpec pins
+    * the same rollup from the fixture events directly. Round10Spec pins
     * the plan (`dynamicpruningexpression` on the store scan) and the
     * runtime partitions-read metric (< the 30-day history).
     */

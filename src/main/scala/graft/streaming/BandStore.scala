@@ -156,7 +156,7 @@ object BandStore {
     *      tombstone masks their rows at every later read, so they stop
     *      vetoing immediately, and the next [[compactStore]] physically
     *      drops the rows AND absorbs the tombstone — disk is reclaimed,
-    *      pinned in BandStoreSpec;
+    *      pinned in Round11Spec;
     *   3. [[compactStore]] bounds FILE counts (the small-files tax) at
     *      O(buckets), independent of batch count.
     * A time-based retention policy is the composition: feed the ids
@@ -919,7 +919,7 @@ object BandStore {
     *      `.retired` log; the FILES stay at their original paths until a
     *      reap finds the log older than [[RetireGraceConf]]. A probe
     *      that pinned the manifest in the instant before retirement
-    *      therefore finishes against intact files (BandStoreSpec asserts
+    *      therefore finishes against intact files (Round7Spec asserts
     *      ZERO admission retries under a racing compactor); the
     *      idempotent-overwrite task/batch retry remains as the backstop
     *      for a probe outliving the grace. Crash debris (markerless

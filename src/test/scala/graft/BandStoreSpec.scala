@@ -1,41 +1,16 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.streaming.{BandStore, Streams}
 import Fixtures._
 
 /** The band store behind streaming dedup admission
-  * ([[graft.streaming.BandStore]]): admission decisions, crash replay,
-  * eviction, bucket geometry, full and sliced compaction, and the
-  * manifest that pins what a probe reads.
+  * ([[graft.streaming.BandStore]]): gauge-driven compaction in the drain,
+  * sliced compaction, and the manifest that pins what a probe reads.
   */
 class BandStoreSpec extends SparkSpec {
   import spark.implicits._
-
-  private def docsDf(rows: (Long, String)*): DataFrame = rows.toSeq.toDF("doc_id", "text")
-
-  private def frame(docs: Seq[(Long, String)]): DataFrame = docs.toDF("doc_id", "text")
-
-  private def toksA(sub: Option[(Int, String)] = None): String =
-    (1 to 50).map(i => sub.filter(_._1 == i).map(_._2).getOrElse(s"tok$i")).mkString(" ")
-
-  /** Content fingerprint of a parquet directory: sorted row renderings.
-    * (File bytes differ across runs via task UUIDs in file names; replay
-    * idempotence is a CONTENT claim per partition.)
-    */
-  private def contentOf(dir: String, cols: String*): Seq[String] = {
-    val df = spark.read.parquet(dir)
-    df.select(cols.map(col): _*).collect().map(_.toString).toSeq.sorted
-  }
-
-  private def duBytes(dir: String): Long = {
-    def walk(f: java.io.File): Long =
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).map(walk).sum
-      else f.length()
-    walk(new java.io.File(dir))
-  }
 
   private def batchDirsOnDisk(dir: String): Set[String] =
     Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
@@ -54,647 +29,7 @@ class BandStoreSpec extends SparkSpec {
       .selectExpr("concat_ws(':', doc_id, band, bh)")
       .collect().map(_.getString(0)).toSet
 
-  /** Rewrite a bands/sigs tree without its `__obatch` column and restamp
-    * the geometry file without the epoch key — byte-level simulation of
-    * a store produced by the pre-upgrade engine.
-    */
-  private def downgradeStore(store: String): Unit = {
-    def strip(dir: String, bucketCol: String): Unit = {
-      val legacy = spark.read.parquet(dir).drop("__obatch")
-        .localCheckpoint()
-      val f = new java.io.File(dir)
-      def del(x: java.io.File): Unit = {
-        Option(x.listFiles()).getOrElse(Array.empty).foreach(del); x.delete()
-      }
-      del(f)
-      legacy.write.partitionBy("__batch", bucketCol).parquet(dir)
-    }
-    strip(BandStore.bandsDir(store), "__bb")
-    strip(BandStore.sigsDir(store), "__db")
-    // the original stamp went through ChecksumFileSystem — drop its CRC
-    // sidecar before rewriting the file directly, or reads see a
-    // checksum mismatch instead of the downgraded content
-    java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(store, "..geometry.crc"))
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(store, ".geometry"),
-      "bandBuckets=64 sigBuckets=16")
-  }
-
-  // --- admission ------------------------------------------------------------
-
-  test("T11 probe reads only the touched __bb buckets of the band store (partition pruning)") {
-    val store = tmpDir("bstore")
-    val admitted = tmpDir("badmit")
-    BandStore.admitBatch(docsDf(1L -> toksA(), 2L -> (1 to 50).map(i => s"w$i").mkString(" ")),
-      0L, store, admitted)
-    BandStore.admitBatch(docsDf(4L -> (1 to 50).map(i => s"utok$i").mkString(" ")),
-      1L, store, admitted)
-
-    val all = spark.read.parquet(BandStore.bandsDir(store))
-    val totalParts = all.select(col("__batch"), col("__bb")).distinct().count()
-    assert(totalParts > 10, s"fixture store too small to pin pruning (parts=$totalParts)")
-
-    // a probe touching ONE bucket must scan at most one (__batch, __bb)
-    // leaf per stored batch — not the whole store
-    val oneBucket = all.select(pmod(col("bh"), lit(BandStore.BandBuckets)).cast("int"))
-      .head().getInt(0)
-    val probe = BandStore.probeScan(spark, store, Seq(oneBucket), 2L)
-    val scanned = probe.queryExecution.executedPlan.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-        f.selectedPartitions.partitionCount
-    }
-    assert(scanned.nonEmpty && scanned.head <= 2,
-      s"probe must prune to the touched bucket: scanned=$scanned of $totalParts partitions")
-    assert(probe.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
-      .contains("PartitionFilters: ["), "probe filter must reach the scan as a partition filter")
-  }
-
-  test("T11 within-batch veto is greedy min-id admission: a dropped doc cannot veto") {
-    // chain A(1) ~ B(2) ~ C(3) with A !~ C: sequential min-id admission
-    // admits A, drops B (near A), ADMITS C (its only near peer B was
-    // dropped). The old single-pass veto dropped C too.
-    val a = toksA()
-    val b = toksA(Some(25 -> "zzz"))                       // ~ a (J≈0.88), ~ c
-    // c = b plus one more spaced-out change: J(b,c)=45/51≈0.88 ≥ 0.8 but
-    // J(a,c)=42/54≈0.78 < 0.8 (changes at 25 and 35 damage disjoint shingles)
-    val cTxt = (1 to 50).map(i => if (i == 25) "zzz" else if (i == 35) "yyy" else s"tok$i").mkString(" ")
-    // verify the chain shape holds under the operator's own Jaccard:
-    // J(a,b) >= 0.8, J(b,cTxt) >= 0.8, J(a,cTxt) < 0.8
-    def j(x: String, y: String): Double = {
-      def sh(t: String) = t.split(" ").sliding(3).map(_.mkString(" ")).toSet
-      val (sx, sy) = (sh(x), sh(y))
-      sx.intersect(sy).size.toDouble / sx.union(sy).size
-    }
-    assert(j(a, b) >= 0.8 && j(b, cTxt) >= 0.8 && j(a, cTxt) < 0.8,
-      s"fixture chain broken: ${j(a, b)} ${j(b, cTxt)} ${j(a, cTxt)}")
-
-    val store = tmpDir("gstore")
-    val admitted = tmpDir("gadmit")
-    BandStore.admitBatch(docsDf(1L -> a, 2L -> b, 3L -> cTxt), 0L, store, admitted)
-    val got = spark.read.parquet(admitted).select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(got == Set(1L, 3L), s"greedy admission should keep {1, 3}, got $got")
-  }
-
-  test("T11 skew guard: boilerplate batch pre-collapses before signing; admission = greedy min-id") {
-    import spark.implicits._
-    val store = tmpDir("r7-admstore")
-    val out = tmpDir("r7-admout")
-    def frame(docs: Seq[(Long, String)]): DataFrame =
-      docs.toDF("doc_id", "text").withColumn("n_chars", length(col("text")).cast("long"))
-    // batch 0: 10 identical copies of template 1 + two unique docs
-    val b0 = (0 until 10).map(i => (i.toLong, template(1))) ++
-      Seq((100L, tokens("aw", 8)), (101L, tokens("bw", 8)))
-    BandStore.admitBatch(frame(b0), 0L, store, out)
-    val admitted0 = spark.read.parquet(out).select("doc_id")
-      .collect().map(_.getLong(0)).toSet
-    assert(admitted0 == Set(0L, 100L, 101L),
-      s"only the min-id template rep and the uniques survive: $admitted0")
-    // batch 1: 5 more copies of template 1 (exact vs store rep) + one
-    // near-identical variant (J=10/11 vs stored template) + one unique
-    val b1 = (0 until 5).map(i => ((200 + i).toLong, template(1))) ++
-      Seq((300L, template(1) + " uniqX"), (301L, tokens("cw", 8)))
-    BandStore.admitBatch(frame(b1), 1L, store, out)
-    val admitted1 = spark.read.parquet(out)
-      .filter(col("__batch") === 1L).select("doc_id")
-      .collect().map(_.getLong(0)).toSet
-    assert(admitted1 == Set(301L),
-      s"store dups (exact AND near) must all drop: $admitted1")
-  }
-
-  test("T11 replay idempotence: re-running a batch leaves store and output content-identical") {
-    val store = tmpDir("rstore")
-    val admitted = tmpDir("radmit")
-    val b0 = docsDf(1L -> toksA(), 2L -> (1 to 50).map(i => s"w$i").mkString(" "))
-    val b1 = docsDf(3L -> toksA(Some(25 -> "zzz")), 4L -> (1 to 50).map(i => s"utok$i").mkString(" "))
-    BandStore.admitBatch(b0, 0L, store, admitted)
-    BandStore.admitBatch(b1, 1L, store, admitted)
-    val adm1 = contentOf(admitted, "doc_id", "text", "__batch")
-    val sig1 = contentOf(BandStore.sigsDir(store), "doc_id", "__batch")
-    val bnd1 = contentOf(BandStore.bandsDir(store), "doc_id", "band", "bh", "__batch")
-
-    // crash-replay of batch 1: effects already on disk, commit lost —
-    // the recomputation must overwrite its own partitions with the same
-    // content (the probe excludes __batch=1, so the decision is
-    // unchanged even though batch 1's signatures are already stored)
-    BandStore.admitBatch(b1, 1L, store, admitted)
-    assert(contentOf(admitted, "doc_id", "text", "__batch") == adm1)
-    assert(contentOf(BandStore.sigsDir(store), "doc_id", "__batch") == sig1)
-    assert(contentOf(BandStore.bandsDir(store), "doc_id", "band", "bh", "__batch") == bnd1)
-    assert(spark.read.parquet(admitted).select("doc_id").collect().map(_.getLong(0)).toSet
-      == Set(1L, 2L, 4L))
-  }
-
-  test("T11 degenerate batches: short docs admitted by construction, empty batch is a no-op") {
-    val store = tmpDir("estore")
-    val admitted = tmpDir("eadmit")
-    // batch 0: one signable doc + one 2-token doc (no shingles — must be
-    // admitted without touching the dedup machinery)
-    BandStore.admitBatch(docsDf(1L -> toksA(), 2L -> "too short"), 0L, store, admitted)
-    assert(spark.read.parquet(admitted).select("doc_id").collect().map(_.getLong(0)).toSet
-      == Set(1L, 2L))
-    // only the signable doc enters the signature store
-    assert(spark.read.parquet(BandStore.sigsDir(store)).select("doc_id")
-      .collect().map(_.getLong(0)).toSet == Set(1L))
-    // batch 1: empty — no writes, no errors, store untouched
-    BandStore.admitBatch(docsDf(), 1L, store, admitted)
-    assert(spark.read.parquet(admitted).select("doc_id").collect().map(_.getLong(0)).toSet
-      == Set(1L, 2L))
-    // batch 2: near-dup of the signable doc still vetoed; a new short
-    // doc still sails through
-    BandStore.admitBatch(docsDf(3L -> toksA(Some(25 -> "zzz")), 4L -> "also short"),
-      2L, store, admitted)
-    assert(spark.read.parquet(admitted).select("doc_id").collect().map(_.getLong(0)).toSet
-      == Set(1L, 2L, 4L))
-  }
-
-  test("T11 sink crash recovery: lost commit replays the dedup batch to identical content") {
-    import org.apache.spark.sql.types._
-    val topic = tmpDir("dctopic")
-    val store = tmpDir("dcstore")
-    val admitted = tmpDir("dcadmit")
-    val ckpt = tmpDir("dcck")
-    def src() = spark.readStream.schema(docSchema).json(topic)
-    Files.writeString(Paths.get(s"$topic/b1.json"),
-      Seq(doc(1, toksA()), doc(2, (1 to 50).map(i => s"w$i").mkString(" "))).mkString("\n"))
-    Streams.dedupAdmitSink(src(), store, admitted, ckpt).awaitTermination(60000)
-    Files.writeString(Paths.get(s"$topic/b2.json"),
-      Seq(doc(3, toksA(Some(25 -> "zzz"))), doc(4, (1 to 50).map(i => s"utok$i").mkString(" "))).mkString("\n"))
-    Streams.dedupAdmitSink(src(), store, admitted, ckpt).awaitTermination(60000)
-    val admBefore = contentOf(admitted, "doc_id", "__batch")
-    val sigBefore = contentOf(BandStore.sigsDir(store), "doc_id", "__batch")
-
-    // lose the second batch's commit and restart: the batch replays
-    dropLatestCommit(ckpt)
-    Streams.dedupAdmitSink(src(), store, admitted, ckpt).awaitTermination(60000)
-
-    assert(contentOf(admitted, "doc_id", "__batch") == admBefore,
-      "replay must not duplicate admitted rows")
-    assert(contentOf(BandStore.sigsDir(store), "doc_id", "__batch") == sigBefore,
-      "replay must not duplicate store signatures")
-    assert(spark.read.parquet(admitted).select("doc_id").collect().map(_.getLong(0)).toSet
-      == Set(1L, 2L, 4L))
-  }
-
-  // --- eviction and bucket geometry -----------------------------------------
-
-  test("BandStore retention: evictDocs stops the veto, re-admission outranks the tombstone, compaction physically reclaims") {
-    import graft.streaming.BandStore
-    val root = tmpDir("r11-evict")
-    val store = s"$root/store"
-    val admitted = s"$root/admitted"
-
-    // batch 0: the base corpus
-    BandStore.admitBatch(frame((0 until 30).map(i => (i.toLong, text("a", i)))),
-      0L, store, admitted)
-    // batch 1: an exact copy of doc 3 under a new id — the store vetoes
-    BandStore.admitBatch(frame(Seq((100L, text("a", 3)))), 1L, store, admitted)
-    assert(!admittedIds(spark, admitted).contains(100L), "store veto must drop the copy of a live doc")
-    // batch 2: doc 3 leaves the corpus (takedown)
-    BandStore.evictDocs(Seq(3L).toDF("doc_id"), 2L, store)
-    // batch 3: the SAME text is now admissible — its only peer is
-    // evicted — while a copy of retained doc 7 still drops
-    BandStore.admitBatch(frame(Seq((101L, text("a", 3)), (102L, text("a", 7)))),
-      3L, store, admitted)
-    assert(admittedIds(spark, admitted).contains(101L), "eviction must free the dedup memory")
-    assert(!admittedIds(spark, admitted).contains(102L), "retained docs must keep vetoing")
-    // batch 4: doc 101's rows (batch 3) OUTRANK the batch-2 tombstone —
-    // the revived text vetoes again
-    BandStore.admitBatch(frame(Seq((103L, text("a", 3)))), 4L, store, admitted)
-    assert(!admittedIds(spark, admitted).contains(103L),
-      "re-admission must revive the veto (batch-gated mask)")
-
-    // compaction absorbs the tombstone and physically drops the rows
-    val before = duBytes(store)
-    BandStore.compactStore(spark, store, minLiveBatch = 5L)
-    // force-reap (grace 0, quiesced): physical assertions below check
-    // the reaped layout — retirement defers deletion by the grace
-    BandStore.reapRetired(spark, store, 0L)
-    assert(!new java.io.File(BandStore.evictedDir(store)).exists() ||
-      Option(new java.io.File(BandStore.evictedDir(store)).listFiles()).getOrElse(Array.empty)
-        .forall(f => !f.getName.startsWith("__batch=")),
-      "absorbed tombstone partitions must be deleted")
-    val sigs = spark.read.parquet(BandStore.sigsDir(store))
-    assert(sigs.filter(col("doc_id") === 3L).count() == 0,
-      "the evicted doc's rows must be physically gone")
-    assert(sigs.filter(col("doc_id") === 101L).count() == 1,
-      "the re-admitted doc must survive compaction")
-    assert(duBytes(store) < before,
-      "compaction after eviction must reclaim disk bytes")
-    // post-compaction behavior unchanged: dup of a live doc drops, a
-    // fresh doc lands
-    BandStore.admitBatch(frame(Seq((104L, text("a", 12)), (105L, text("z", 1)))),
-      5L, store, admitted)
-    assert(!admittedIds(spark, admitted).contains(104L) && admittedIds(spark, admitted).contains(105L))
-
-    // same-id re-admission: the batch-gate (`__obatch >= __tb`) must let a
-    // tombstoned doc_id's OWN newer rows outrank its tombstone — the
-    // revive above (101) used a fresh id, which a mask that ignored the
-    // gate would also pass
-    BandStore.evictDocs(Seq(12L).toDF("doc_id"), 6L, store)
-    BandStore.admitBatch(frame(Seq((12L, text("a", 12)))), 7L, store, admitted)
-    assert(admittedIn(spark, admitted, 7L).contains(12L),
-      "a tombstoned id must be re-admittable (its only peer is its own masked past)")
-    BandStore.admitBatch(frame(Seq((106L, text("a", 12)))), 8L, store, admitted)
-    assert(admittedIn(spark, admitted, 8L).isEmpty,
-      "the re-admitted id's newer rows must outrank its tombstone and veto again")
-  }
-
-  test("BandStore: a crash-leftover tombstone cannot mute or destroy a re-admitted doc's state") {
-    import graft.streaming.BandStore
-    val root = tmpDir("r12-crashwin")
-    val store = s"$root/store"
-    val admitted = s"$root/admitted"
-
-    // corpus adopted at batch 0; doc 3 evicted at batch 1; the SAME id
-    // re-admitted at batch 2 (its only peer is its own masked past)
-    BandStore.importCorpus(frame((0 until 20).map(i => (i.toLong, text("a", i)))), 0L, store)
-    BandStore.evictDocs(Seq(3L).toDF("doc_id"), 1L, store)
-    BandStore.admitBatch(frame(Seq((3L, text("a", 3)))), 2L, store, admitted)
-    assert(admittedIn(spark, admitted, 2L) == Set(3L), "the evicted id must be re-admittable")
-
-    // full compaction: batches 0 and 2 fold into base −1, tombstone 1 is
-    // absorbed and deleted
-    BandStore.compactStore(spark, store, minLiveBatch = 3L)
-    // CRASH SIMULATION: the delete is the last step — re-planting the
-    // tombstone partition reproduces exactly the state a crash between
-    // the base publishes and the tombstone delete leaves behind
-    BandStore.evictDocs(Seq(3L).toDF("doc_id"), 1L, store)
-
-    // (a) the doc's folded rows must still OUTRANK the stale tombstone:
-    // a copy of its text is vetoed, not admitted
-    BandStore.admitBatch(frame(Seq((200L, text("a", 3)))), 3L, store, admitted)
-    assert(admittedIn(spark, admitted, 3L).isEmpty,
-      "a re-admitted doc must keep vetoing across a crash-leftover tombstone")
-
-    // (b) the next compaction's re-absorb must keep the rows (the old
-    // `__batch`-ranked gate dropped them for good here) and clear the
-    // leftover tombstone
-    BandStore.compactStore(spark, store, minLiveBatch = 4L)
-    // force-reap (grace 0, quiesced): the physical reads below must see
-    // the reaped layout, not grace-deferred retired leaves
-    BandStore.reapRetired(spark, store, 0L)
-    val sigs = spark.read.parquet(BandStore.sigsDir(store))
-    assert(sigs.filter(col("doc_id") === 3L).count() == 1,
-      "the re-admitted doc's signature state must survive the re-absorb")
-    assert(sigs.filter(col("doc_id") === 3L).select("__obatch")
-      .head.getLong(0) == 2L,
-      "the per-row original batch must ride through both compactions verbatim")
-    assert(!new java.io.File(BandStore.evictedDir(store)).exists() ||
-      Option(new java.io.File(BandStore.evictedDir(store)).listFiles())
-        .getOrElse(Array.empty).forall(f => !f.getName.startsWith("__batch=")),
-      "the leftover tombstone must be absorbed")
-    // and the veto still stands afterwards
-    BandStore.admitBatch(frame(Seq((201L, text("a", 3)))), 4L, store, admitted)
-    assert(admittedIn(spark, admitted, 4L).isEmpty, "the veto must survive the re-absorb")
-  }
-
-  test("BandStore: a pre-__obatch store reads, masks, and compacts — legacy rows rank by their partition batch and the compaction migrates them") {
-    import graft.streaming.BandStore
-    val root = tmpDir("r13-legacy")
-    val store = s"$root/store"
-    val admitted = s"$root/admitted"
-
-    BandStore.importCorpus(frame((0 until 20).map(i => (i.toLong, text("a", i)))), 0L, store)
-    downgradeStore(store)
-    assert(BandStore.ensureGeometry(spark, store).obatchEpoch == 0,
-      "the downgraded store must read as the conservative schema epoch")
-
-    // a tombstone over the legacy rows: doc 3 retired at batch 1
-    BandStore.evictDocs(Seq(3L).toDF("doc_id"), 1L, store)
-    // the legacy gate must MASK doc 3's legacy rows (its partition batch
-    // 0 < tombstone 1) — the pre-fix code threw AnalysisException here
-    // (__obatch unresolvable on the legacy schema)
-    BandStore.admitBatch(frame(Seq((100L, text("a", 3)))), 2L, store, admitted)
-    assert(admittedIn(spark, admitted, 2L) == Set(100L),
-      "an evicted legacy doc must stop vetoing — the gate must rank " +
-        "legacy rows by their partition batch, not throw")
-    // …while every retained legacy doc keeps vetoing (mixed store now:
-    // legacy batch-0 files next to post-upgrade batch-2 files)
-    BandStore.admitBatch(frame(Seq((101L, text("a", 5)))), 3L, store, admitted)
-    assert(admittedIn(spark, admitted, 3L).isEmpty, "a retained legacy doc must keep vetoing")
-    // the RE-ADMITTED doc's post-upgrade rows (__obatch=2 > tombstone 1)
-    // must veto a later copy even though the store is mixed — the
-    // pre-fix null-fails-the-gate hazard on exactly this shape
-    BandStore.admitBatch(frame(Seq((102L, text("a", 3)))), 4L, store, admitted)
-    assert(admittedIn(spark, admitted, 4L).isEmpty,
-      "a re-admitted doc's rows must outrank the old tombstone in a mixed store")
-
-    // compaction folds legacy + post-upgrade batches without throwing
-    // and MIGRATES the rank: every surviving row carries a non-null
-    // __obatch afterwards — legacy rows at their true batch
-    BandStore.compactStore(spark, store, minLiveBatch = 5L)
-    // force-reap (grace 0, quiesced): the physical reads below must see
-    // the reaped layout, not grace-deferred retired leaves
-    BandStore.reapRetired(spark, store, 0L)
-    val sigs = spark.read.parquet(BandStore.sigsDir(store))
-    assert(sigs.filter(col("__obatch").isNull).count() == 0,
-      "compaction must stamp every surviving row's rank")
-    assert(sigs.filter(col("doc_id") === 5L).select("__obatch").head.getLong(0) == 0L,
-      "a legacy row's migrated rank is its original (partition) batch")
-    assert(sigs.filter(col("doc_id") === 100L).select("__obatch").head.getLong(0) == 2L,
-      "a post-upgrade row's rank rides through the mixed compaction verbatim")
-    assert(sigs.filter(col("doc_id") === 3L).count() == 0,
-      "the absorbed tombstone must drop the evicted legacy rows")
-    // decisions unchanged after the migration
-    BandStore.admitBatch(frame(Seq((103L, text("a", 3)), (104L, text("q", 1)))),
-      5L, store, admitted)
-    assert(admittedIn(spark, admitted, 5L) == Set(104L),
-      "post-migration: the re-admitted doc still vetoes, fresh text admits")
-    // the PARTIAL compact above must NOT have upgraded the epoch (legacy
-    // batches can survive above minLiveBatch in general)…
-    assert(BandStore.ensureGeometry(spark, store).obatchEpoch == 0,
-      "a partial compaction must not upgrade the schema epoch")
-    // …but a FULL quiesced compaction has provably migrated every row —
-    // the epoch upgrades and probes drop the schema-merge tax for good
-    BandStore.compactStore(spark, store)
-    assert(BandStore.ensureGeometry(spark, store).obatchEpoch == 1,
-      "a full compaction of a fully-migrated store must upgrade the epoch")
-    assert(java.nio.file.Files.readString(
-      java.nio.file.Paths.get(store, ".geometry"))
-      == "bandBuckets=64 sigBuckets=16 obatchEpoch=1",
-      "the upgrade must preserve the recorded bucket geometry")
-    // and decisions are unchanged on the now plain-read store
-    BandStore.admitBatch(frame(Seq((105L, text("a", 5)), (106L, text("z", 9)))),
-      6L, store, admitted)
-    assert(admittedIn(spark, admitted, 6L) == Set(106L),
-      "post-upgrade: retained docs veto, fresh text admits")
-  }
-
-  test("BandStore geometry: a store created under non-default bucket confs decides identically, prunes on its own counts, and survives compaction and eviction") {
-    import graft.streaming.BandStore
-    val b0 = (0 until 20).map(i => (i.toLong, text("a", i)))
-    // batch 1: an exact copy of doc 3 (must drop) and a fresh doc
-    val b1 = Seq((100L, text("a", 3)), (101L, text("z", 1)))
-
-    // reference store at the default 64/16 geometry
-    val rootD = tmpDir("r12-geo-default")
-    BandStore.admitBatch(frame(b0), 0L, s"$rootD/store", s"$rootD/out")
-    BandStore.admitBatch(frame(b1), 1L, s"$rootD/store", s"$rootD/out")
-
-    val root = tmpDir("r12-geo-8x4")
-    val store = s"$root/store"
-    withConf(BandStore.BandBucketsConf -> "8", BandStore.SigBucketsConf -> "4") {
-      BandStore.admitBatch(frame(b0), 0L, store, s"$root/out")
-    }
-    // geometry stamped at creation; later batches run WITHOUT the confs
-    // set and must honor the recorded counts, not the session defaults
-    assert(java.nio.file.Files.readString(
-      java.nio.file.Paths.get(store, ".geometry"))
-      == "bandBuckets=8 sigBuckets=4 obatchEpoch=1")
-    BandStore.admitBatch(frame(b1), 1L, store, s"$root/out")
-    assert(admittedIn(spark, s"$root/out", 1L) == admittedIn(spark, s"$rootD/out", 1L),
-      "bucket geometry must never change an admission decision")
-    val bb = spark.read.parquet(BandStore.bandsDir(store))
-      .select(col("__bb").cast("int")).distinct().collect().map(_.getInt(0))
-    assert(bb.forall(v => v >= 0 && v < 8) && bb.length <= 8,
-      s"bands tree must carry the 8-bucket layout: ${bb.toSeq.sorted}")
-    val db = spark.read.parquet(BandStore.sigsDir(store))
-      .select(col("__db").cast("int")).distinct().collect().map(_.getInt(0))
-    assert(db.forall(v => v >= 0 && v < 4), s"sigs tree layout: ${db.toSeq.sorted}")
-    // probe pruning holds on the recorded geometry: one touched bucket
-    // scans at most one leaf per stored batch
-    val oneBucket = spark.read.parquet(BandStore.bandsDir(store))
-      .select(pmod(col("bh"), lit(8)).cast("int")).head().getInt(0)
-    val probe = BandStore.probeScan(spark, store, Seq(oneBucket), 2L)
-    val scanned = probe.queryExecution.executedPlan.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-        f.selectedPartitions.partitionCount
-    }
-    assert(scanned.nonEmpty && scanned.head <= 2,
-      s"pruning must hold at 8 buckets: scanned=$scanned")
-    // eviction + re-admission and compaction respect the geometry
-    BandStore.evictDocs(Seq(3L).toDF("doc_id"), 2L, store)
-    BandStore.admitBatch(frame(Seq((102L, text("a", 3)))), 3L, store, s"$root/out")
-    assert(admittedIn(spark, s"$root/out", 3L) == Set(102L),
-      "eviction must free the text under the non-default geometry")
-    BandStore.compactStore(spark, store, minLiveBatch = 4L)
-    val bbAfter = spark.read.parquet(BandStore.bandsDir(store))
-      .select(col("__bb").cast("int")).distinct().collect().map(_.getInt(0))
-    assert(bbAfter.forall(v => v >= 0 && v < 8),
-      "compaction must preserve the recorded geometry")
-    BandStore.admitBatch(frame(Seq((103L, text("a", 5)), (104L, text("q", 2)))),
-      4L, store, s"$root/out")
-    assert(admittedIn(spark, s"$root/out", 4L) == Set(104L),
-      "post-compaction decisions must be unchanged at 8/4 buckets")
-  }
-
-  test("BandStore geometry: a legacy store (batches, no file) is stamped with the defaults, not the session confs") {
-    import graft.streaming.BandStore
-    val root = tmpDir("r12-geo-legacy")
-    val store = s"$root/store"
-    BandStore.admitBatch(
-      frame((0 until 10).map(i => (i.toLong, (0 until 25).map(j => s"l${i}_$j").mkString(" ")))),
-      0L, store, s"$root/out")
-    // simulate a pre-geometry store: rows exist, no file
-    java.nio.file.Files.delete(java.nio.file.Paths.get(store, ".geometry"))
-    withConf(BandStore.BandBucketsConf -> "8", BandStore.SigBucketsConf -> "4") {
-      val g = BandStore.ensureGeometry(spark, store)
-      assert(g == BandStore.Geometry(64, 16, 0),
-        "a store with batches must be pinned to the defaults its rows were " +
-          "written under — and to the conservative schema epoch")
-    }
-  }
-
   // --- full compaction ------------------------------------------------------
-
-  test("T11 store compaction collapses per-batch partitions, preserves admission and pruning") {
-    val store = tmpDir("cstore")
-    val admitted = tmpDir("cadmit")
-    val docsB0 = docsDf(1L -> toksA(), 2L -> (1 to 50).map(i => s"w$i").mkString(" "))
-    val docsB1 = docsDf(4L -> (1 to 50).map(i => s"utok$i").mkString(" "))
-    // batch 3 holds a near-dup of a doc admitted in batch 0 — the
-    // compacted store must still veto it
-    val docsB3 = docsDf(5L -> toksA(Some(25 -> "zzz")), 6L -> (1 to 50).map(i => s"q$i").mkString(" "))
-    BandStore.admitBatch(docsB0, 0L, store, admitted)
-    BandStore.admitBatch(docsB1, 1L, store, admitted)
-
-    val partsBefore = spark.read.parquet(BandStore.bandsDir(store))
-      .select(col("__batch"), col("__bb")).distinct().count()
-    BandStore.compactStore(spark, store)
-    // force-reap (grace 0, quiesced): the physical layout assertions
-    // below check the reaped tree — retirement defers deletion
-    BandStore.reapRetired(spark, store, 0L)
-    val partsAfter = spark.read.parquet(BandStore.bandsDir(store))
-      .select(col("__batch"), col("__bb")).distinct().count()
-    assert(partsAfter < partsBefore,
-      s"compaction must shrink the partition tree ($partsBefore -> $partsAfter)")
-    assert(spark.read.parquet(BandStore.bandsDir(store))
-      .select(col("__batch").cast("long")).distinct().collect().map(_.getLong(0)).toSeq
-      == Seq(BandStore.BaseBatch))
-    // signature content survives compaction intact
-    assert(spark.read.parquet(BandStore.sigsDir(store)).select("doc_id")
-      .collect().map(_.getLong(0)).toSet == Set(1L, 2L, 4L))
-
-    // probe pruning still holds on the compacted layout
-    val oneBucket = spark.read.parquet(BandStore.bandsDir(store))
-      .select(pmod(col("bh"), lit(BandStore.BandBuckets)).cast("int")).head().getInt(0)
-    val probe = BandStore.probeScan(spark, store, Seq(oneBucket), 3L)
-    val scanned = probe.queryExecution.executedPlan.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-        f.selectedPartitions.partitionCount
-    }
-    assert(scanned.nonEmpty && scanned.head <= 1,
-      s"compacted probe must scan one leaf per touched bucket, got $scanned")
-
-    // admission against the compacted store: near-dup of batch-0 doc
-    // vetoed, fresh doc admitted
-    BandStore.admitBatch(docsB3, 3L, store, admitted)
-    assert(spark.read.parquet(admitted).select("doc_id").collect().map(_.getLong(0)).toSet
-      == Set(1L, 2L, 4L, 6L))
-  }
-
-  test("compactStore(minLiveBatch) concurrent with admission equals serial admission") {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet").persist()
-    def batchOf(b: Int): DataFrame =
-      docs.filter(col("doc_id") >= b * 125 && col("doc_id") < (b + 1) * 125)
-
-    // serial reference: 4 batches, no compaction
-    val (storeA, outA) = (tmpDir("r7-serA"), tmpDir("r7-serA-out"))
-    (0 until 4).foreach(b => BandStore.admitBatch(batchOf(b), b.toLong, storeA, outA))
-
-    // concurrent: admit 0,1; then compact batches < 2 WHILE admitting 2,3.
-    // Manifest-pinned reads (VERDICT r15 #2): a probe resolves its file
-    // listing from the tree's `.live` manifest and retirement DEFERS the
-    // physical delete by the retire grace — so a probe racing the
-    // retirement reads intact files and admission needs ZERO retries.
-    // The retry budget that used to absorb the listing race is gone on
-    // purpose: any retry here is a regression of the pinning discipline.
-    val (storeB, outB) = (tmpDir("r7-conB"), tmpDir("r7-conB-out"))
-    (0 until 2).foreach(b => BandStore.admitBatch(batchOf(b), b.toLong, storeB, outB))
-    val compactor = new Thread(() => BandStore.compactStore(spark, storeB, 2L))
-    compactor.start()
-    var retries = 0
-    (2 until 4).foreach { b =>
-      def attempt(left: Int): Unit =
-        try BandStore.admitBatch(batchOf(b), b.toLong, storeB, outB)
-        catch { case scala.util.control.NonFatal(e) =>
-          retries += 1
-          if (left <= 0) throw e else attempt(left - 1) }
-      attempt(4)
-    }
-    compactor.join()
-    assert(retries == 0,
-      s"manifest-pinned probes must not race retirement: $retries retries consumed")
-    assert(admittedIds(spark, outA) == admittedIds(spark, outB),
-      "admission decisions must be interleaving-invariant under compaction")
-    // live batches were never touched: 2 and 3 still sit in their own
-    // partitions; 0 and 1 were merged into the base generation
-    val bandBatches =
-      BandStore.liveBatchIds(spark, BandStore.bandsDir(storeB)).toSet
-    assert(bandBatches == Set(BandStore.BaseBatch, 2L, 3L), s"got $bandBatches")
-
-    // and the compacted store still drives identical future decisions
-    val probe = docs.filter(col("doc_id") >= 0 && col("doc_id") < 500)
-    val (o2a, o2b) = (tmpDir("r7-probeA"), tmpDir("r7-probeB"))
-    BandStore.admitBatch(probe, 9L, storeA, o2a)
-    BandStore.admitBatch(probe, 9L, storeB, o2b)
-    assert(admittedIds(spark, o2a) == admittedIds(spark, o2b), "post-compaction probe decisions diverged")
-    docs.unpersist()
-  }
-
-  test("compaction crash debris: trash purged, duplicated rows decision-neutral, lone base no-op") {
-    import spark.implicits._
-    import org.apache.hadoop.fs.{FileUtil, Path}
-    val (store, out) = (tmpDir("r7-debris"), tmpDir("r7-debris-out"))
-    def frame(docs: Seq[(Long, String)]): DataFrame =
-      docs.toDF("doc_id", "text").withColumn("n_chars", length(col("text")).cast("long"))
-    BandStore.admitBatch(frame((0 until 8).map(i => (i.toLong, tokens(s"da$i", 10)))),
-      0L, store, out)
-    BandStore.admitBatch(frame((0 until 8).map(i => ((100 + i).toLong, tokens(s"db$i", 10)))),
-      1L, store, out)
-    // simulate a compaction that crashed between PUBLISH and RETIRE:
-    // batch 0's rows are also visible under a published base generation,
-    // and a retirement rename left a dot-prefixed trash dir behind
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dirs = Seq(BandStore.bandsDir(store), BandStore.sigsDir(store))
-    dirs.foreach { dir =>
-      val p = new Path(dir)
-      val fs = p.getFileSystem(conf)
-      FileUtil.copy(fs, new Path(p, "__batch=0"), fs, new Path(p, "__batch=-1"), false, conf)
-      fs.mkdirs(new Path(p, ".trash-leftover"))
-    }
-    // decisions over the debris store are unchanged: an exact dup of a
-    // batch-0 doc (visible TWICE, under __batch=0 and the base) drops
-    // once, the fresh doc is admitted — candidates/drops are distinct'd
-    val b2 = Seq((500L, tokens("da0", 10)), (501L, tokens("zw", 10)))
-    BandStore.admitBatch(frame(b2), 2L, store, out)
-    def admitted2: Set[Long] = admittedIn(spark, out, 2L)
-    assert(admitted2 == Set(501L), s"debris changed a decision: $admitted2")
-    // compaction below the live watermark purges the trash and merges
-    // batches {−1, 0, 1} into one new base generation with no duplicate
-    // rows left
-    BandStore.compactStore(spark, store, 2L)
-    // force-reap at grace 0 (true quiesce): the physical assertions below
-    // check the REAPED layout — retirement itself only switches the
-    // manifest and defers deletion, and the markerless `__batch=-1`
-    // debris is reconciled as a crashed-publish orphan
-    BandStore.reapRetired(spark, store, 0L)
-    dirs.foreach { dir =>
-      val names = new java.io.File(dir).listFiles().map(_.getName).toSet
-      assert(!names.exists(_.startsWith(".trash-")), s"trash not purged: $names")
-      assert(names.filter(_.startsWith("__batch=")) == Set("__batch=-2", "__batch=2"),
-        s"unexpected generations in $dir: $names")
-      val base = spark.read.parquet(dir).filter(col("__batch") === -2L).drop("__batch")
-      assert(base.count() == base.distinct().count(), "duplicate rows survived compaction")
-    }
-    // replaying the live batch against the compacted store is idempotent
-    BandStore.admitBatch(frame(b2), 2L, store, out)
-    assert(admitted2 == Set(501L))
-    // a second compaction at the same watermark sees one lone base
-    // generation and must not churn it
-    BandStore.compactStore(spark, store, 2L)
-    dirs.foreach { dir =>
-      val batches = new java.io.File(dir).listFiles()
-        .map(_.getName).filter(_.startsWith("__batch=")).toSet
-      assert(batches == Set("__batch=-2", "__batch=2"), s"lone base churned: $batches")
-    }
-  }
-
-  test("replay of a live batch after age-based compaction recomputes the identical decision") {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    def batchOf(b: Int): DataFrame =
-      docs.filter(col("doc_id") >= b * 125 && col("doc_id") < (b + 1) * 125)
-    val (store, out) = (tmpDir("r7-replay"), tmpDir("r7-replay-out"))
-    (0 until 3).foreach(b => BandStore.admitBatch(batchOf(b), b.toLong, store, out))
-    val before = spark.read.parquet(out).filter(col("__batch") === 2L)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    // compact everything the checkpoint could no longer replay (< 2),
-    // then replay the LIVE batch 2 — the one crash recovery could re-run
-    BandStore.compactStore(spark, store, 2L)
-    BandStore.admitBatch(batchOf(2), 2L, store, out)
-    val after = spark.read.parquet(out).filter(col("__batch") === 2L)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(before == after, "replay after compaction must be idempotent")
-  }
-
-  test("BandStore.needsCompaction: fires at the configured batch count and resets after a compact") {
-    import graft.streaming.BandStore
-    val root = tmpDir("r13-gauge")
-    val store = s"$root/store"
-    def text(i: Long) = (0 until 25).map(j => s"g${i}_w$j").mkString(" ")
-    withConf(BandStore.CompactAfterBatchesConf -> "4") {
-      (0L until 3L).foreach { b =>
-        BandStore.admitBatch(Seq((b, text(b))).toDF("doc_id", "text"),
-          b, store, s"$root/out")
-      }
-      assert(!BandStore.needsCompaction(spark, store),
-        "3 batches under a threshold of 4 must not fire")
-      BandStore.admitBatch(Seq((3L, text(3))).toDF("doc_id", "text"), 3L, store, s"$root/out")
-      assert(BandStore.needsCompaction(spark, store),
-        "the 4th batch dir must trip the gauge")
-      // quiesced compact folds every batch into one base per tree
-      BandStore.compactStore(spark, store)
-      assert(!BandStore.needsCompaction(spark, store),
-        "one base generation per tree must reset the gauge")
-      // and the loop continues: more batches re-arm it
-      (4L until 8L).foreach { b =>
-        BandStore.admitBatch(Seq((b, text(b))).toDF("doc_id", "text"),
-          b, store, s"$root/out")
-      }
-      assert(BandStore.needsCompaction(spark, store), "the gauge must re-arm")
-    }
-  }
 
   test("T11 auto-compaction: dedupAdmitDrain compacts when the gauge fires; admitted set equals the never-compacted twin; pre-compact vetoes survive") {
     import org.apache.spark.sql.types._

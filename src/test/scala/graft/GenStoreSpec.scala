@@ -1,15 +1,11 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{GenStore, IvfStore, LabelStore, StoreDirs}
-import Fixtures.generations
+import graft.operators.{GenStore, IvfStore, LabelStore}
 
 /** The generational-store core ([[graft.operators.GenStore]]) shared by
-  * IvfStore, LabelStore and DateStore, and the generation fences
-  * ([[graft.operators.StoreDirs]]) every store claims: claim-time debris
-  * clearing, the refusal of a stale claim, the batch writer's
-  * empty-frame rule, the ingest floor a crashed attempt must not leak,
-  * and the fence leases against racing threads, processes and zombies.
+  * IvfStore, LabelStore and DateStore: claim-time debris clearing, the
+  * refusal of a stale claim, and the batch writer's empty-frame rule.
   */
 class GenStoreSpec extends SparkSpec {
   import spark.implicits._
@@ -20,38 +16,6 @@ class GenStoreSpec extends SparkSpec {
 
   private def docs(n: Int) =
     documentsOf((0L until n.toLong).map(i => (i, (0 until 30).map(j => s"d${i}_$j").mkString(" "))))
-
-  private def plantStaleIngest(storeRoot: String, nextGen: Long, bogusId: Long): Unit =
-    Seq(bogusId).toDF("last_stream_batch").coalesce(1)
-      .write.mode("overwrite").parquet(s"$storeRoot/.staging-$nextGen/ingest")
-
-  private def genDirs(storeRoot: String): Seq[java.io.File] =
-    Option(new java.io.File(storeRoot).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith("gen=")).toSeq.sortBy(_.getName)
-
-  private def plantFence(storeRoot: String, k: Long): Unit = {
-    val f = new java.io.File(storeRoot, s".fence-$k")
-    f.getParentFile.mkdirs()
-    assert(f.createNewFile(), s"could not plant $f")
-  }
-
-  private def ageFence(storeRoot: String, k: Long, ageMs: Long): Unit =
-    java.nio.file.Files.setLastModifiedTime(
-      java.nio.file.Paths.get(storeRoot, s".fence-$k"),
-      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - ageMs))
-
-  /** The two-driver race corpus; stage 1 appends ten distinct docs. */
-  private def writeRaceCorpus(dir: String, stage: Int): Unit = {
-    def toks(p: String, from: Int, to: Int) = (from to to).map(i => s"$p$i").mkString(" ")
-    val rows = Seq(
-      0L -> toks("tok", 0, 11), 1L -> toks("tok", 0, 11),
-      10L -> (toks("n", 0, 10) + " tailA"), 11L -> (toks("n", 0, 10) + " tailB")) ++
-      (40L until 60L).map(i => i -> (0 until 12).map(j => s"d${i}w$j").mkString(" ")) ++
-      (if (stage >= 1) (60L until 70L).map(i =>
-        i -> (0 until 12).map(j => s"e${i}w$j").mkString(" ")) else Nil)
-    documentsOf(rows).repartition(2)
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-  }
 
   test("a crashed delete's tombstone batch at the next generation does not mask a later append") {
     val store = tmpDir("genstore-debris") + "/store"
@@ -119,376 +83,5 @@ class GenStoreSpec extends SparkSpec {
       Set((1L, 0, 1L), (2L, 1, 1L)))
     gs.writeBatch(empty, "lone", 1L, Seq("p"))
     assert(!gs.hasBatches("lone"))
-  }
-
-  test("DateStore: a crashed streaming attempt's staging ingest id does not ride into the next publish") {
-    import graft.sources.DateStore
-    val store = tmpDir("r11-datestale") + "/store"
-    val ev0 = graft.engine.Tables.events(spark, sfDir)
-      .filter(to_date(col("ts")) < lit("2024-01-05")).localCheckpoint()
-    assert(DateStore.ensureIncrementalEvents(ev0, store) == "full")
-    // simulate appendEvents(batch 99) crashing after the staging write,
-    // before the rename: gen 1 is live, .staging-2/ingest holds 99
-    plantStaleIngest(store, nextGen = 2L, bogusId = 99L)
-    val ev1 = graft.engine.Tables.events(spark, sfDir)
-      .filter(to_date(col("ts")) < lit("2024-01-07")).localCheckpoint()
-    assert(DateStore.ensureIncrementalEvents(ev1, store) == "incremental")
-    val g2 = genDirs(store).last
-    assert(!new java.io.File(g2, "ingest").exists(),
-      s"stale staging ingest id leaked into ${g2.getName} — batch 99 would replay as a silent skip")
-    // and the never-committed batch is indeed NOT absorbed: its delivery
-    // ingests rather than skipping
-    val batch = graft.engine.Tables.events(spark, sfDir)
-      .filter(to_date(col("ts")) === lit("2024-01-07")).localCheckpoint()
-    assert(DateStore.appendEvents(batch, store, 99L) != "skip",
-      "batch 99 was never committed — a skip is silent data loss")
-  }
-
-  test("IvfStore: a crashed streaming attempt's staging ingest id does not ride into the next publish") {
-    import graft.operators.IvfStore
-    val store = tmpDir("r11-ivfstale") + "/store"
-    IvfStore.buildVecs(vecs(64), store)
-    plantStaleIngest(store, nextGen = 2L, bogusId = 99L)
-    // corpus-driven append path (ingestId = None) publishes gen 2
-    assert(IvfStore.ensureIncrementalVecs(vecs(80).localCheckpoint(), store)
-      == "incremental")
-    val g2 = genDirs(store).last
-    assert(!new java.io.File(g2, "ingest").exists(),
-      s"stale staging ingest id leaked into ${g2.getName} — batch 99 would replay as a silent skip")
-    assert(IvfStore.appendVectors(
-      (80L to 83L).map(i => (i, Seq(0f, 0f, 1f, i.toFloat / 100f), 0))
-        .toDF("vec_id", "embedding", "label"), store, 99L) != "skip",
-      "batch 99 was never committed — a skip is silent data loss")
-  }
-
-  test("StoreDirs.withGenFence: failure settles then releases; a return through the body keeps the fence") {
-    val root = new org.apache.hadoop.fs.Path(tmpDir("r11-fencehelper"))
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def fenceExists(k: Long) = new java.io.File(root.toUri.getPath, s".fence-$k").exists()
-
-    // success keeps the fence (published generations hold theirs)
-    assert(StoreDirs.withGenFence(fs, root, 1L) { 42 } == 42)
-    assert(fenceExists(1L), "success must keep the fence")
-
-    // failure: the settle hook runs BEFORE the release (a zombie write
-    // must be joined while the fence still excludes a second writer)
-    val order = scala.collection.mutable.ArrayBuffer.empty[String]
-    val e = intercept[RuntimeException] {
-      StoreDirs.withGenFence(fs, root, 2L,
-        onFailure = () => { order += s"settle-held=${fenceExists(2L)}" }) {
-        throw new RuntimeException("boom")
-      }
-    }
-    assert(e.getMessage == "boom")
-    assert(order.toSeq == Seq("settle-held=true"),
-      "the settle hook must run exactly once, while the fence is still held")
-    assert(!fenceExists(2L), "failure must release the fence")
-
-    // a `return` from inside the by-name body is a ControlThrowable, NOT
-    // a failure: the fence of a just-published generation must be kept
-    def lane(): String = {
-      StoreDirs.withGenFence(fs, root, 3L) { return "published-early" }
-      "fell-through"
-    }
-    assert(lane() == "published-early")
-    assert(fenceExists(3L), "a return after publish must keep the fence")
-  }
-
-  test("DateStore fence: a held generation makes the second writer fail loudly; a stale fence is reclaimed; retry converges") {
-    import graft.sources.DateStore
-    val store = tmpDir("r11-datefence") + "/store"
-    val ev = graft.engine.Tables.events(spark, sfDir).localCheckpoint()
-    def upTo(d: String) = ev.filter(to_date(col("ts")) < lit(d))
-    // the initial history must dominate, or the later appends trip the
-    // >50%-changed-mass compaction threshold and legitimately rebuild
-    assert(DateStore.ensureIncrementalEvents(upTo("2024-01-15"), store) == "full")
-    // writer A holds generation 2 (fresh fence, mid-maintenance): writer
-    // B must fail LOUDLY, not bury A's work
-    plantFence(store, 2L)
-    val e = intercept[IllegalStateException] {
-      DateStore.ensureIncrementalEvents(upTo("2024-01-18"), store)
-    }
-    assert(e.getMessage.contains("concurrent writer"), e.getMessage)
-    // ... and B's failure wrote NOTHING: no __batch=2 data dir appeared
-    assert(!new java.io.File(s"$store/days/__batch=2").exists(),
-      "the losing writer must fail before its first shared-path write")
-    // A crashed instead: its fence goes stale past the lease — the next
-    // writer reclaims and proceeds
-    ageFence(store, 2L, ageMs = StoreDirs.staleFenceMs + 60000L)
-    assert(DateStore.ensureIncrementalEvents(upTo("2024-01-18"), store) == "incremental")
-    // B's original intent retries cleanly from the advanced state
-    assert(DateStore.ensureIncrementalEvents(upTo("2024-01-20"), store) == "incremental")
-    val got = DateStore.readEvents(spark, store).select("event_id")
-      .collect().map(_.getLong(0)).toSet
-    val want = upTo("2024-01-20").select("event_id").collect().map(_.getLong(0)).toSet
-    assert(got == want, "store must equal the winner plus the retry")
-  }
-
-  test("fence race: two simultaneous DateStore maintainers never interleave — at most one gen per number, loser loud, retry converges") {
-    import graft.sources.DateStore
-    val store = tmpDir("r11-daterace") + "/store"
-    val ev = graft.engine.Tables.events(spark, sfDir).localCheckpoint()
-    def upTo(d: String) = ev.filter(to_date(col("ts")) < lit(d))
-    assert(DateStore.ensureIncrementalEvents(upTo("2024-01-05"), store) == "full")
-    val evA = upTo("2024-01-15").localCheckpoint()
-    val evB = upTo("2024-01-20").localCheckpoint()
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val barrier = new java.util.concurrent.CyclicBarrier(2)
-    def run(evX: org.apache.spark.sql.DataFrame) = Future {
-      barrier.await()
-      try Right(DateStore.ensureIncrementalEvents(evX, store))
-      catch { case e: IllegalStateException => Left(e) }
-    }
-    // launch BOTH futures before awaiting either — the barrier needs
-    // two live parties
-    val (fa, fb) = (run(evA), run(evB))
-    val (ra, rb) = (Await.result(fa, Duration.Inf), Await.result(fb, Duration.Inf))
-    // invariant 1: any loss is LOUD (IllegalStateException), never silent
-    Seq(ra, rb).foreach {
-      case Left(e) => assert(e.getMessage.contains("concurrent writer") ||
-        e.getMessage.contains("store advanced"), e.getMessage)
-      case Right(m) => assert(Set("incremental", "full", "noop").contains(m))
-    }
-    // invariant 2: at least one writer succeeded
-    assert(Seq(ra, rb).exists(_.isRight), s"both failed: $ra / $rb")
-    // invariant 3: generation numbers are unique — no buried publish
-    val ks = generations(store)
-    assert(ks.distinct.size == ks.size, s"duplicate generation numbers: $ks")
-    // invariant 4: a retry from the settled state converges exactly
-    val m = DateStore.ensureIncrementalEvents(evB, store)
-    assert(m == "incremental" || m == "noop" || m == "full", m)
-    val got = DateStore.readEvents(spark, store).select("event_id")
-      .collect().map(_.getLong(0)).toSet
-    assert(got == evB.select("event_id").collect().map(_.getLong(0)).toSet)
-  }
-
-  test("ingest fence owner: exact-token debris reclaims immediately; a same-stream foreign process waits the restart lease; foreign writers wait the full lease") {
-    import graft.sources.DateStore
-    val store = tmpDir("r11-owner") + "/store"
-    val ev = graft.engine.Tables.events(spark, sfDir).localCheckpoint()
-    def upTo(d: String) = ev.filter(to_date(col("ts")) < lit(d))
-    assert(DateStore.appendEvents(upTo("2024-01-10"), store, 0L, Some("cpA"))
-      == "append-initial")
-    def plantOwner(k: Long, token: String): Unit = java.nio.file.Files.write(
-      java.nio.file.Paths.get(store, s".fence-$k"), token.getBytes("UTF-8"))
-    val batch = ev.filter(to_date(col("ts")) === lit("2024-01-10")).localCheckpoint()
-    // tier 2 (ADVICE r11): the owner PREFIX alone — what a live zombie
-    // driver replaying the same checkpoint would also stamp — must NOT
-    // bypass every lease. A young fence from a DIFFERENT process locks
-    // out even the same stream's replay...
-    plantOwner(2L, s"ingest-cpA-1@99999-${java.util.UUID.randomUUID()}")
-    val z = intercept[IllegalStateException] {
-      DateStore.appendEvents(batch, store, 1L, Some("cpA"))
-    }
-    assert(z.getMessage.contains("held by a live writer"), z.getMessage)
-    // ... and a FOREIGN writer (corpus-driven maintenance) too
-    val e = intercept[IllegalStateException] {
-      DateStore.ensureIncrementalEvents(upTo("2024-01-12"), store)
-    }
-    assert(e.getMessage.contains("held by a live writer"), e.getMessage)
-    // aged past the short RESTART lease (but far inside the full lease):
-    // the same stream's replay reclaims — a restarted driver recovers in
-    // restartMs, not a 15-minute crash-loop — while the foreign writer
-    // would still be locked out at this age
-    ageFence(store, 2L, StoreDirs.restartFenceMs + 60000L)
-    val e2 = intercept[IllegalStateException] {
-      DateStore.ensureIncrementalEvents(upTo("2024-01-12"), store)
-    }
-    assert(e2.getMessage.contains("held by a live writer"), e2.getMessage)
-    assert(DateStore.appendEvents(batch, store, 1L, Some("cpA")) == "append")
-    val got = DateStore.readEvents(spark, store).select("event_id")
-      .collect().map(_.getLong(0)).toSet
-    val want = upTo("2024-01-11").select("event_id").collect().map(_.getLong(0)).toSet
-    assert(got == want, "the replayed batch must have landed exactly once")
-    // tier 1: THIS process's own exact token (prefix + process token)
-    // reclaims with zero lease — the in-process retry fast path (batch 2
-    // claims generation 3 now that generation 2 is published)
-    plantOwner(3L, s"ingest-cpA-2@${StoreDirs.processToken}")
-    val batch2 = ev.filter(to_date(col("ts")) === lit("2024-01-11")).localCheckpoint()
-    assert(DateStore.appendEvents(batch2, store, 2L, Some("cpA")) == "append")
-  }
-
-  test("ingest fence: an aged same-stream fence with ACTIVE staging writes is a live zombie — not reclaimed") {
-    import graft.sources.DateStore
-    val store = tmpDir("r11-zombie") + "/store"
-    val ev = graft.engine.Tables.events(spark, sfDir).localCheckpoint()
-    def upTo(d: String) = ev.filter(to_date(col("ts")) < lit(d))
-    assert(DateStore.appendEvents(upTo("2024-01-10"), store, 0L, Some("cpA"))
-      == "append-initial")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(store, ".fence-2"),
-      s"ingest-cpA-1@99999-${java.util.UUID.randomUUID()}".getBytes("UTF-8"))
-    ageFence(store, 2L, StoreDirs.restartFenceMs + 60000L)
-    // the zombie is mid-write: a FRESH file under .staging-2 proves a
-    // writer is alive whatever the fence age says — reclaiming here
-    // would delete a tree the zombie's running job partially recreates
-    val stage = java.nio.file.Paths.get(store, ".staging-2")
-    java.nio.file.Files.createDirectories(stage)
-    java.nio.file.Files.write(stage.resolve("part-00000"), "x".getBytes("UTF-8"))
-    val batch = ev.filter(to_date(col("ts")) === lit("2024-01-10")).localCheckpoint()
-    val z = intercept[IllegalStateException] {
-      DateStore.appendEvents(batch, store, 1L, Some("cpA"))
-    }
-    assert(z.getMessage.contains("staging writes younger"), z.getMessage)
-    // once the staging goes quiet past the lease too, the reclaim lands
-    val oldTs = java.nio.file.attribute.FileTime.fromMillis(
-      System.currentTimeMillis() - StoreDirs.restartFenceMs - 60000L)
-    java.nio.file.Files.setLastModifiedTime(stage, oldTs)
-    java.nio.file.Files.setLastModifiedTime(stage.resolve("part-00000"), oldTs)
-    assert(DateStore.appendEvents(batch, store, 1L, Some("cpA")) == "append")
-  }
-
-  test("LabelStore and IvfStore fences: a held generation refuses the second maintainer before any index write") {
-    import graft.operators.{IvfStore, LabelStore}
-    // label store
-    val ldir = tmpDir("r11-labelfence")
-    val lstore = s"$ldir/store"
-    LabelStore.buildDocs(docs(20).localCheckpoint(), lstore)
-    plantFence(lstore, 2L)
-    val le = intercept[IllegalStateException] {
-      LabelStore.ensureIncrementalDocs(docs(25).localCheckpoint(), lstore)
-    }
-    assert(le.getMessage.contains("concurrent writer"), le.getMessage)
-    ageFence(lstore, 2L, StoreDirs.staleFenceMs + 60000L)
-    assert(LabelStore.ensureIncrementalDocs(docs(25).localCheckpoint(), lstore)
-      == "incremental")
-    // ivf store
-    val vstore = tmpDir("r11-ivffence") + "/store"
-    def vecs(n: Int) = (0L until n.toLong).map { i =>
-      (i, Seq(math.cos(i * 0.07).toFloat, math.sin(i * 0.07).toFloat, 0f, 0f), 0)
-    }.toDF("vec_id", "embedding", "label")
-    IvfStore.buildVecs(vecs(64), vstore)
-    plantFence(vstore, 2L)
-    val ve = intercept[IllegalStateException] {
-      IvfStore.ensureIncrementalVecs(vecs(80).localCheckpoint(), vstore)
-    }
-    assert(ve.getMessage.contains("concurrent writer"), ve.getMessage)
-    ageFence(vstore, 2L, StoreDirs.staleFenceMs + 60000L)
-    assert(IvfStore.ensureIncrementalVecs(vecs(80).localCheckpoint(), vstore)
-      == "incremental")
-  }
-
-  test("BandStore fence: a concurrent compaction fails loudly instead of nesting the published base") {
-    import graft.streaming.BandStore
-    val root = tmpDir("r11-bandfence")
-    val store = s"$root/store"
-    val admitted = s"$root/admitted"
-    def batch(ids: Range) = ids.map(i =>
-        (i.toLong, (0 until 20).map(j => s"b${i}_$j").mkString(" ")))
-      .toDF("doc_id", "text")
-    BandStore.admitBatch(batch(0 until 30), 0L, store, admitted)
-    BandStore.admitBatch(batch(30 until 60), 1L, store, admitted)
-    // a competitor holds the first base generation (-1) of bands/
-    plantFence(BandStore.bandsDir(store), -1L)
-    val e = intercept[IllegalStateException] { BandStore.compactStore(spark, store) }
-    assert(e.getMessage.contains("concurrent writer"), e.getMessage)
-    // stale competitor: reclaimed, compaction proceeds, store intact
-    ageFence(BandStore.bandsDir(store), -1L, StoreDirs.staleFenceMs + 60000L)
-    BandStore.compactStore(spark, store)
-    BandStore.reapRetired(spark, store, 0L)
-    val bands = spark.read.parquet(BandStore.bandsDir(store))
-    // the partition column reads back int-typed when its values fit
-    assert(bands.select(col("__batch").cast("long")).distinct().collect()
-      .map(_.getLong(0)).toSet == Set(-1L), "one compacted base generation")
-    assert(bands.select("doc_id").distinct().count() == 60)
-  }
-
-  test("StoreDirs.acquireGen: a bare ingest-<batchId> prefix match keeps the full lease; only a checkpoint-scoped prefix earns the restart lease") {
-    import graft.operators.StoreDirs
-    import org.apache.hadoop.fs.Path
-    val rootDir = tmpDir("r13-fence-scope")
-    val root = new Path(rootDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def plant(k: Long, content: String, ageMs: Long): Unit = {
-      val p = java.nio.file.Paths.get(rootDir, s".fence-$k")
-      java.nio.file.Files.write(p, content.getBytes("UTF-8"))
-      java.nio.file.Files.setLastModifiedTime(p,
-        java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - ageMs))
-    }
-    val age = StoreDirs.restartFenceMs + 60000L // past restart, inside full
-    // bare form: two unrelated batch-counter streams share `ingest-1` —
-    // a foreign live writer's fence must hold for the FULL lease
-    plant(1L, s"ingest-1@99999-${java.util.UUID.randomUUID()}", age)
-    val e = intercept[IllegalStateException] {
-      StoreDirs.acquireGen(fs, root, 1L, owner = Some("ingest-1"))
-    }
-    assert(e.getMessage.contains("held by a live writer"), e.getMessage)
-    // checkpoint-scoped form at the same age: only the stream's own
-    // incarnations can share the prefix — the restart lease applies
-    plant(2L, s"ingest-cpA-1@99999-${java.util.UUID.randomUUID()}", age)
-    StoreDirs.acquireGen(fs, root, 2L, owner = Some("ingest-cpA-1"))
-    assert(new java.io.File(rootDir, ".fence-2").exists(),
-      "the scoped same-stream claim must have reclaimed and re-fenced")
-    // and a scoped prefix MISMATCH stays foreign at that age
-    plant(3L, s"ingest-cpB-1@99999-${java.util.UUID.randomUUID()}", age)
-    val e2 = intercept[IllegalStateException] {
-      StoreDirs.acquireGen(fs, root, 3L, owner = Some("ingest-cpA-1"))
-    }
-    assert(e2.getMessage.contains("held by a live writer"), e2.getMessage)
-  }
-
-  test("fence under real concurrency: a second driver JVM racing the same LabelStore maintenance — loud loser, converged store") {
-    import graft.operators.LabelStore
-    val dir = tmpDir("r13-race-corpus")
-    writeRaceCorpus(dir, 0)
-    val root = tmpDir("r13-race-store")
-    val store = s"$root/store"
-    LabelStore.build(spark, dir, store)
-    writeRaceCorpus(dir, 1) // both racers now see an append delta
-    val ready = s"$root/ready"
-    val go = s"$root/go"
-    val outcome = s"$root/outcome"
-    val log = new java.io.File(s"$root/subprocess.log")
-    val proc = ChildJvm.start(log, "graft.FenceRaceMain", dir, store, ready, go, outcome)
-    try {
-      val bootDeadline = System.currentTimeMillis() + 120000L
-      while (!java.nio.file.Files.exists(java.nio.file.Paths.get(ready))) {
-        assert(proc.isAlive, s"subprocess died during boot — ${ChildJvm.logTail(log)}")
-        assert(System.currentTimeMillis() < bootDeadline, "subprocess boot timeout")
-        Thread.sleep(50)
-      }
-      // GO — the subprocess polls at 20 ms; the parent enters the same
-      // maintenance call immediately, so the two overlap for the whole
-      // multi-second run
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(go), "go")
-      val mine =
-        try Right(LabelStore.ensureCurrentIncremental(spark, dir, store))
-        catch {
-          // fence conflicts are IllegalStateException; the publish CAS's
-          // "store advanced" require is IllegalArgumentException — both
-          // are the loud-loss outcomes this test adjudicates
-          case e @ (_: IllegalStateException | _: IllegalArgumentException) =>
-            Left(e.getMessage)
-        }
-      ChildJvm.awaitSuccess(proc, 180, log, "fence-race subprocess")
-      val theirs = java.nio.file.Files.readString(java.nio.file.Paths.get(outcome))
-      val outcomes = Seq(mine.fold(m => s"conflict:$m", m => s"ok:$m"), theirs)
-      // invariant 1: every loss is LOUD — a conflict names the fence,
-      // never silent corruption; a crash: outcome already failed above
-      outcomes.foreach { o =>
-        assert(o.startsWith("ok:") ||
-          (o.startsWith("conflict:") && (o.contains("concurrent writer") ||
-            o.contains("store advanced"))), s"unadjudicated outcome: $o; log ${ChildJvm.logTail(log)}")
-      }
-      // invariant 2: at least one racer succeeded
-      assert(outcomes.exists(_.startsWith("ok:")), s"both failed: $outcomes")
-      // invariant 3: generation numbers unique — no buried publish
-      val ks = generations(store)
-      assert(ks.distinct.size == ks.size, s"duplicate generations: $ks")
-      // invariant 4: a retry from the settled state converges, and the
-      // converged labels equal a from-scratch build of the same corpus
-      val retry = LabelStore.ensureCurrentIncremental(spark, dir, store)
-      assert(Set("noop", "incremental", "full").contains(retry), retry)
-      val fresh = tmpDir("r13-race-fresh") + "/store"
-      LabelStore.build(spark, dir, fresh)
-      def labels(st: String): Set[(Long, Long)] =
-        LabelStore.read(spark, st).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(labels(store) == labels(fresh),
-        "the raced store must equal the winner-plus-retry (= from-scratch) labels")
-    } finally {
-      if (proc.isAlive) proc.destroyForcibly()
-    }
   }
 }

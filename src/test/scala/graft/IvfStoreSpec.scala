@@ -1,274 +1,12 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.IvfStore
 
-/** The materialized IVF index store ([[graft.operators.IvfStore]]): the
-  * served probe equals the self-contained query, incremental append,
-  * delete and re-train keep it corpus-current, log-driven ingest is
-  * exactly-once, and centroid training runs on a deterministic sample.
+/** The IVF index ([[graft.operators.IvfStore]] and
+  * [[graft.operators.Similarity.ivfIndex]]): centroid training runs on a
+  * deterministic sample.
   */
 class IvfStoreSpec extends SparkSpec {
-  import spark.implicits._
-
-  private def writeEmb(dir: String, vecs: Seq[(Long, Seq[Float])]): Unit =
-    vecs.toDF("vec_id", "embedding").withColumn("label", lit(0)).repartition(4)
-      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-
-  private def baseVecs: Seq[(Long, Seq[Float])] =
-    (0 until 64).map { i =>
-      (i.toLong, (0 until 64).map { j =>
-        if (j == i % 16) 3.0f
-        else if (j == (i * 7) % 64) 1.5f
-        else 0.1f * ((i + j) % 5)
-      })
-    }
-
-  private def vecFrame(rows: Seq[(Long, Seq[Float], Int)]) = rows.toDF("vec_id", "embedding", "label")
-
-  /** 64 spread directions; vec 7 carries `v7` (defaults to v0's exact
-    * direction, making it q0's guaranteed nearest neighbor).
-    */
-  private def vecCorpus(v7: Seq[Float]): Seq[(Long, Seq[Float], Int)] =
-    (0L until 64L).map { i =>
-      val v: Seq[Float] =
-        if (i == 7L) v7
-        else Seq(math.cos(i * 0.07).toFloat, math.sin(i * 0.07).toFloat, 0f, 0f)
-      (i, v, (i % 3).toInt)
-    }
-
-  test("X3c': the store-served probe equals the self-contained IVF query bit-for-bit") {
-    val store = tmpDir("r8-ivfstore") + "/store"
-    graft.operators.IvfStore.build(spark, sfDir, store)
-    val direct = graft.operators.Similarity.x3AnnIvf(spark, sfDir).collect().toSeq
-    val served = graft.operators.IvfStore.probe(spark, sfDir, store).collect().toSeq
-    assert(served == direct, "store round trip changed the ANN answer")
-    // validity by measurement: same corpus → no rebuild; the unit
-    // contract matching LabelStore's
-    assert(!graft.operators.IvfStore.ensureCurrent(spark, sfDir, store))
-  }
-
-  test("X3c': the probe's lists scan is partition-pruned to the probed cells") {
-    val store = tmpDir("r8-ivfprune") + "/store"
-    graft.operators.IvfStore.build(spark, sfDir, store)
-    // one query probes exactly IvfNProbe of the IvfNList cells — the
-    // pruned count is deterministic (the 10-query oracle surface can
-    // legitimately touch every cell on uniform fixtures)
-    val (_, lists) = graft.operators.IvfStore.probeInputs(spark, sfDir, store, maxQueryId = 1L)
-    val p = lists.queryExecution.explainString(
-      org.apache.spark.sql.execution.FormattedMode)
-    assert(p.contains("PartitionFilters: ["), p.take(1500))
-    val scanned = lists.queryExecution.executedPlan.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-        f.selectedPartitions.partitionCount
-    }
-    assert(scanned.nonEmpty, "no lists scan found")
-    assert(scanned.head == graft.operators.Similarity.IvfNProbe,
-      s"expected exactly ${graft.operators.Similarity.IvfNProbe} cells scanned, got ${scanned.head}")
-  }
-
-  test("X3c'': append runs incremental then noop, and leaves the store fingerprint-current") {
-    val dir = tmpDir("r9-ivf-append")
-    val store = tmpDir("r9-ivf-store") + "/store"
-    writeEmb(dir, baseVecs)
-    IvfStore.build(spark, dir, store)
-    // append 8 new vectors (mild directions — the quantizer stays fit)
-    writeEmb(dir, baseVecs ++ (64 until 72).map { i =>
-      (i.toLong, (0 until 64).map(j => if (j == i % 8) 2.0f else 0.2f))
-    })
-    assert(IvfStore.ensureCurrentIncremental(spark, dir, store) == "incremental")
-    assert(IvfStore.ensureCurrentIncremental(spark, dir, store) == "noop")
-    assert(!IvfStore.ensureCurrent(spark, dir, store),
-      "the appended store must be current by fingerprint")
-    // the maintained lists serve every corpus vector: each of the 10
-    // query vectors finds 5 neighbors among the 72
-    val served = IvfStore.probe(spark, dir, store)
-    assert(served.groupBy("q_id").count().filter(col("count") =!= 5).count() == 0)
-  }
-
-  test("X3c'': a mutated vector is not an append — full rebuild, then noop") {
-    val dir = tmpDir("r9-ivf-mut")
-    val store = tmpDir("r9-ivf-mutstore") + "/store"
-    writeEmb(dir, baseVecs)
-    IvfStore.build(spark, dir, store)
-    val mutated = baseVecs.map { case (id, v) =>
-      if (id == 3L) (id, v.map(_ * 1.5f)) else (id, v)
-    }
-    writeEmb(dir, mutated)
-    assert(IvfStore.ensureCurrentIncremental(spark, dir, store) == "full")
-    assert(IvfStore.ensureCurrentIncremental(spark, dir, store) == "noop")
-  }
-
-  test("X3c'': a deleted vector takes the tombstone path, then noop — and vanishes from probes") {
-    val dir = tmpDir("r9-ivf-del")
-    val store = tmpDir("r9-ivf-delstore") + "/store"
-    writeEmb(dir, baseVecs)
-    IvfStore.build(spark, dir, store)
-    // shrinking the corpus leaves index-only digest rows — the
-    // classifier routes them to the incremental delete (tombstone) path,
-    // never an "append" and (since round 10) no longer a full rebuild
-    writeEmb(dir, baseVecs.filterNot(_._1 == 5L))
-    assert(IvfStore.ensureCurrentIncremental(spark, dir, store) == "incremental-delete")
-    assert(IvfStore.ensureCurrentIncremental(spark, dir, store) == "noop")
-    assert(!IvfStore.ensureCurrent(spark, dir, store),
-      "the deleted store must be current by fingerprint")
-    val served = IvfStore.probe(spark, dir, store)
-    assert(served.filter(col("vec_id") === 5L).isEmpty,
-      "a tombstoned vector must never be served")
-    assert(served.groupBy("q_id").count().filter(col("count") =!= 5).count() == 0)
-  }
-
-  test("X3c'': a skewed append past the imbalance bound triggers the re-train") {
-    val dir = tmpDir("r9-ivf-skew")
-    val store = tmpDir("r9-ivf-skewstore") + "/store"
-    writeEmb(dir, baseVecs)
-    IvfStore.build(spark, dir, store)
-    // 40 near-identical vectors: all argmax into ONE cell of the frozen
-    // quantizer → that cell would hold 40+ of n=104, far past the
-    // 8 × n/nlist = 26 bound — the measured symptom that the centroids
-    // no longer fit the data, so the path must fall back to re-training
-    val skew = (100 until 140).map { i =>
-      (i.toLong, (0 until 64).map(j => if (j == 0) 5.0f else 0.01f * (i % 3)))
-    }
-    writeEmb(dir, baseVecs ++ skew)
-    assert(IvfStore.ensureCurrentIncremental(spark, dir, store) == "full")
-    assert(IvfStore.ensureCurrentIncremental(spark, dir, store) == "noop")
-  }
-
-  test("X3c'': the incremental oracle row takes the incremental path and emits the full surface") {
-    // the require inside x3AnnIvfIncremental pins mode == "incremental";
-    // here pin the output shape the oracle hashes
-    val out = IvfStore.x3AnnIvfIncremental(spark, sfDir)
-    assert(out.columns.toSeq == Seq("q_id", "rank", "vec_id", "cosine"))
-    assert(out.groupBy("q_id").count().filter(col("count") =!= 5).count() == 0)
-  }
-
-  test("X3c'''': successive deletes accumulate tombstones correctly; re-add revives the vector") {
-    val dir = tmpDir("r10-ivf-del")
-    val store = tmpDir("r10-ivf-delstore") + "/store"
-    writeEmb(dir, baseVecs)
-    IvfStore.build(spark, dir, store)
-    writeEmb(dir, baseVecs.filterNot(_._1 == 20L))
-    assert(IvfStore.ensureCurrentIncremental(spark, dir, store) == "incremental-delete")
-    writeEmb(dir, baseVecs.filterNot(v => v._1 == 20L || v._1 == 21L))
-    assert(IvfStore.ensureCurrentIncremental(spark, dir, store) == "incremental-delete")
-    assert(IvfStore.ensureCurrentIncremental(spark, dir, store) == "noop")
-    val probed = IvfStore.probe(spark, dir, store)
-    assert(probed.filter(col("vec_id").isin(20L, 21L)).isEmpty,
-      "tombstoned vectors must never be served")
-    // re-add vector 20: an append whose new list rows outrank its
-    // tombstone — served again, while 21 stays dead
-    writeEmb(dir, baseVecs.filterNot(_._1 == 21L))
-    assert(IvfStore.ensureCurrentIncremental(spark, dir, store) == "incremental")
-    val served = IvfStore.probe(spark, dir, store)
-    assert(served.filter(col("vec_id") === 21L).isEmpty)
-    assert(served.groupBy("q_id").count().filter(col("count") =!= 5).count() == 0)
-  }
-
-  test("X3c'''': mixed append+delete and past-half deletes fall back to the full rebuild") {
-    val dir = tmpDir("r10-ivf-mixed")
-    val store = tmpDir("r10-ivf-mixedstore") + "/store"
-    writeEmb(dir, baseVecs)
-    IvfStore.build(spark, dir, store)
-    writeEmb(dir, baseVecs.filterNot(_._1 == 7L) :+
-      (100L, (0 until 64).map(j => if (j == 3) 2.0f else 0.2f)))
-    assert(IvfStore.ensureCurrentIncremental(spark, dir, store) == "full")
-    assert(IvfStore.ensureCurrentIncremental(spark, dir, store) == "noop")
-    writeEmb(dir, baseVecs.take(8))
-    assert(IvfStore.ensureCurrentIncremental(spark, dir, store) == "full")
-    assert(IvfStore.ensureCurrentIncremental(spark, dir, store) == "noop")
-  }
-
-  test("X3c'''': the delete oracle row takes the delete path and serves no deleted vector") {
-    val out = IvfStore.x3AnnIvfDelete(spark, sfDir)
-    assert(out.columns.toSeq == Seq("q_id", "rank", "vec_id", "cosine"))
-    assert(out.filter(col("vec_id") % 5 === 3 && col("vec_id") >= 10).isEmpty,
-      "deleted vectors surfaced in the served top-k")
-    assert(out.groupBy("q_id").count().filter(col("count") =!= 5).count() == 0)
-  }
-
-  test("X3e: a log-driven restate replaces the served vector and stays corpus-consistent") {
-    import graft.operators.IvfStore
-    val dir = tmpDir("r10-ivfing")
-    val store = tmpDir("r10-ivfingstore") + "/store"
-    val v7old = Seq(1f, 0f, 0f, 0f)
-    val v7new = Seq(0f, 0f, 1f, 0f)
-    def landCorpus(v7: Seq[Float]): Unit =
-      vecFrame(vecCorpus(v7)).write.mode("overwrite")
-        .parquet(s"$dir/embeddings.parquet")
-    landCorpus(v7old)
-    assert(IvfStore.appendVectors(vecFrame(vecCorpus(v7old)), store, 0L)
-      == "ingest-initial")
-    def q0TopIds(): Seq[Long] = IvfStore.probe(spark, dir, store)
-      .filter(col("q_id") === 0).orderBy(col("rank"))
-      .select("vec_id").collect().map(_.getLong(0)).toSeq
-    assert(q0TopIds().head == 7L, "v7 == v0 must be q0's nearest neighbor")
-    // the re-embedded v7 replaces its predecessor in ONE publish
-    assert(IvfStore.appendVectors(
-      vecFrame(vecCorpus(v7new)).filter(col("vec_id") === 7), store, 1L) == "ingest")
-    landCorpus(v7new)
-    assert(IvfStore.ensureCurrentIncremental(spark, dir, store) == "noop",
-      "restated store must fingerprint as the restated corpus")
-    assert(!q0TopIds().contains(7L), "the predecessor embedding still serves")
-    // restate BACK: the doubly-restated vector revives under its old value
-    assert(IvfStore.appendVectors(
-      vecFrame(vecCorpus(v7old)).filter(col("vec_id") === 7), store, 2L) == "ingest")
-    landCorpus(v7old)
-    assert(IvfStore.ensureCurrentIncremental(spark, dir, store) == "noop")
-    assert(q0TopIds().head == 7L, "the re-restated vector must serve again")
-  }
-
-  test("X3e: skewed ingest re-trains from the store — no raw corpus needed") {
-    import graft.operators.IvfStore
-    val dir = tmpDir("r10-ivfretraindir")
-    val store = tmpDir("r10-ivfretrain") + "/store"
-    val spread = (0L until 64L).map(i => (i,
-      Seq(math.cos(i * 0.098).toFloat, math.sin(i * 0.098).toFloat, 0f, 0f): Seq[Float], 0))
-    assert(IvfStore.appendVectors(vecFrame(spread), store, 0L) == "ingest-initial")
-    // 64 near-identical arrivals crowd ONE cell (orthogonal to every
-    // xy-plane centroid → one argmax tie-broken cell): 64 > 8 × (128/32)
-    val crowd = (100L until 164L).map(i => (i,
-      Seq(0f, 0f, 1f, (i % 7) * 1e-4f): Seq[Float], 0))
-    assert(IvfStore.appendVectors(vecFrame(crowd), store, 1L) == "ingest-retrain")
-    // the re-trained store still fingerprints as the materialized corpus
-    vecFrame(spread ++ crowd).write.mode("overwrite")
-      .parquet(s"$dir/embeddings.parquet")
-    assert(IvfStore.ensureCurrentIncremental(spark, dir, store) == "noop",
-      "retrained store drifted from the corpus")
-    // and the NEW centroids absorb further appends incrementally
-    val more = Seq((200L, Seq(0.5f, 0.5f, 0.5f, 0f): Seq[Float], 0))
-    assert(IvfStore.appendVectors(vecFrame(more), store, 2L) == "ingest")
-  }
-
-  test("X3e: streaming vector ingest is exactly-once under checkpoint replay") {
-    import graft.operators.IvfStore
-    val dir = tmpDir("r10-ivfstreamdir")
-    val store = tmpDir("r10-ivfstream") + "/store"
-    val src = tmpDir("r10-ivfstreamsrc")
-    val ckpt = tmpDir("r10-ivfstreamckpt")
-    val a = (0L until 64L).map(i => (i,
-      Seq(math.cos(i * 0.098).toFloat, math.sin(i * 0.098).toFloat, 1f, 0f): Seq[Float], 0))
-    val b = (64L until 128L).map(i => (i,
-      Seq(math.cos(i * 0.049).toFloat, 1f, math.sin(i * 0.049).toFloat, 0f): Seq[Float], 0))
-    vecFrame(a).coalesce(1).write.mode("append").parquet(src)
-    vecFrame(b).coalesce(1).write.mode("append").parquet(src)
-    val schema = spark.read.parquet(src).schema
-    def runSink(): Unit = {
-      val q = IvfStore.ingestSinkVectors(
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src),
-        store, ckpt)
-      assert(q.awaitTermination(120000), "vector ingest query did not finish")
-    }
-    runSink()
-    vecFrame(a ++ b).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    assert(IvfStore.ensureCurrentIncremental(spark, dir, store) == "noop",
-      "streamed store drifted from the corpus")
-    // rerun on the same checkpoint: nothing reprocessed, floor holds
-    runSink()
-    assert(IvfStore.ensureCurrentIncremental(spark, dir, store) == "noop")
-    assert(IvfStore.appendVectors(vecFrame(b), store, 1L) == "skip",
-      "a committed micro-batch id must skip")
-  }
 
   test("IVF sampled training: centroids from a 10k corpus equal centroids from its md5-rank 8192-prefix; lists cover the full corpus") {
     import graft.operators.{Caches, Similarity}

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Dags, Dedup, GenStore, LabelStore}
+import graft.operators.{Dedup, GenStore, LabelStore}
 
 /** The materialized dedup-label store ([[graft.operators.LabelStore]]):
   * build and read equal the direct pipeline, incremental append and
@@ -10,439 +10,6 @@ import graft.operators.{Dags, Dedup, GenStore, LabelStore}
   * corpus composite and streaming maintenance serve the same labels.
   */
 class LabelStoreSpec extends SparkSpec {
-  import spark.implicits._
-
-  /** Corpus with real cluster structure: exact-dup group {0,1,2},
-    * near-dup pair {10,11} (3-shingle Jaccard 9/11 ≈ 0.82), distinct
-    * tails elsewhere.
-    */
-  private def writeClusteredCorpus(dir: String, extraDoc: Option[Long] = None): Unit = {
-    val base = (0 until 12).map(j => s"tok$j").mkString(" ")
-    def distinctText(i: Long) = (0 until 12).map(j => s"d${i}w$j").mkString(" ")
-    val rows: Seq[(Long, String)] =
-      Seq(0L -> base, 1L -> base, 2L -> base,
-          10L -> ((0 until 11).map(j => s"n$j").mkString(" ") + " tailA"),
-          11L -> ((0 until 11).map(j => s"n$j").mkString(" ") + " tailB")) ++
-        (20L until 30L).map(i => i -> distinctText(i)) ++
-        extraDoc.map(i => i -> distinctText(i)).toSeq
-    documentsOf(rows).repartition(3)
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-  }
-
-  /** Corpus for the incremental tests. Base (stage 0): exact group
-    * {0,1,2}; near pair {10,11} (J=9/11); two sub-threshold-adjacent
-    * clusters C1={20,21} and C2={22,23} (every cross pair < 0.8);
-    * distinct fillers 40–49. Stage 1 appends: 30 near-dup of the
-    * NON-rep 11 only (J(30,11)=9/11, J(30,10)=8/12), 32 bridging C1
-    * and C2 (J=9/11 with 20, 9/11 with 22), 33 an exact copy of doc
-    * 0's text, the fresh pair {34,35}, and the loner 36. Stage 2
-    * appends 37, a near-dup of the previously-appended 36. `mutate`
-    * rewrites doc 40's text in place (a non-append change).
-    */
-  private def writeIncCorpus(dir: String, stage: Int, mutate: Boolean = false): Unit = {
-    def toks(p: String, from: Int, to: Int) = (from to to).map(i => s"$p$i").mkString(" ")
-    val base: Seq[(Long, String)] = Seq(
-      0L -> toks("tok", 0, 11), 1L -> toks("tok", 0, 11), 2L -> toks("tok", 0, 11),
-      10L -> (toks("n", 0, 10) + " tailA"), 11L -> (toks("n", 0, 10) + " tailB"),
-      20L -> toks("m", 0, 11), 21L -> (toks("m", 0, 10) + " q"),
-      22L -> toks("m", 2, 13), 23L -> toks("m", 2, 12)) ++
-      (40L until 50L).map(i => i -> (0 until 12).map(j => s"d${i}w$j").mkString(" "))
-    val app1: Seq[(Long, String)] = Seq(
-      30L -> ("x0 " + toks("n", 1, 10) + " tailB"),
-      32L -> toks("m", 1, 12),
-      33L -> toks("tok", 0, 11),
-      34L -> toks("p", 0, 11), 35L -> (toks("p", 0, 10) + " r"),
-      36L -> toks("z", 0, 11))
-    val app2: Seq[(Long, String)] = Seq(37L -> (toks("z", 0, 10) + " y"))
-    val rows = (base ++ (if (stage >= 1) app1 else Nil) ++ (if (stage >= 2) app2 else Nil))
-      .map { case (id, t) => if (mutate && id == 40L) (id, t + " mutated") else (id, t) }
-    documentsOf(rows).repartition(3)
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-  }
-
-  private def labelMap(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
-    df.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-
-  /** Synthetic corpus with two planted structures:
-    *   - a CHAIN 10–11–12: 10≈11 and 11≈12 are near-dups (J ≈ 0.81)
-    *     but 10 vs 12 is not (J ≈ 0.65) — deleting 11 must SPLIT the
-    *     component and drop both survivors from the label table;
-    *   - a TRIANGLE 20, 21, 22, mutually near-dup — deleting the REP 20
-    *     must relabel {21, 22} under the new minimum 21.
-    * Texts are 30 unique tokens per structure (fillers fully disjoint),
-    * so no unplanned edges exist.
-    */
-  private def docRows(drop: Set[Long]): Seq[(Long, String)] = {
-    def toks(p: String, n: Int) = (0 until n).map(i => s"${p}$i")
-    val chainA = toks("ch", 30)
-    val chainB = chainA.updated(28, "chx28").updated(29, "chx29")
-    val chainC = chainB.updated(0, "chy0").updated(1, "chy1")
-    val triBase = toks("tr", 30)
-    val tri21 = triBase.updated(29, "trx29")
-    val tri22 = triBase.updated(28, "try28")
-    // enough fillers that the planted structures stay well under the
-    // touched-mass rebuild threshold (half the corpus)
-    val fillers = (100L until 120L).map(i => (i, toks(s"f${i}_", 30).mkString(" ")))
-    val planted = Seq(
-      10L -> chainA.mkString(" "), 11L -> chainB.mkString(" "),
-      12L -> chainC.mkString(" "),
-      20L -> triBase.mkString(" "), 21L -> tri21.mkString(" "),
-      22L -> tri22.mkString(" "))
-    (fillers ++ planted).filter { case (id, _) => !drop.contains(id) }
-  }
-
-  /** Write `rows` as `<dir>/documents.parquet` in two files. */
-  private def writeDocRows(dir: String, rows: Seq[(Long, String)]): Unit =
-    documentsOf(rows).repartition(2)
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-
-  private def labelSet(store: String): Set[(Long, Long)] =
-    LabelStore.read(spark, store).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-
-  test("LabelStore: publish/read/keepSet match the direct pipeline; rebuild fires on append only") {
-    val dir = tmpDir("r8-labelcorpus")
-    val store = tmpDir("r8-labelstore") + "/store"
-    writeClusteredCorpus(dir)
-
-    LabelStore.build(spark, dir, store)
-    def asMap(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val direct = asMap(Dedup.x2DupClusters(spark, dir))
-    assert(direct.nonEmpty && direct(1L) == 0L && direct(11L) == 10L,
-      s"planted clusters missing: $direct")
-    assert(asMap(LabelStore.read(spark, store)) == direct,
-      "store read must equal the direct pipeline")
-
-    // keep-set through the store == keep-set through the pipeline
-    val keepDirect = Dedup.x2DedupKeep(spark, dir).collect().map(_.getLong(0)).toSeq
-    val keepStore = LabelStore.keepSet(spark, dir, store).collect().map(_.getLong(0)).toSeq
-    assert(keepStore == keepDirect)
-    assert(!keepStore.contains(1L) && !keepStore.contains(11L) && keepStore.contains(10L))
-
-    // current corpus: no rebuild; appended corpus: rebuild, labels refresh
-    assert(!LabelStore.ensureCurrent(spark, dir, store), "unchanged corpus must not rebuild")
-    writeClusteredCorpus(dir, extraDoc = Some(30L))
-    assert(LabelStore.ensureCurrent(spark, dir, store), "appended corpus must rebuild")
-    assert(asMap(LabelStore.read(spark, store)) == asMap(Dedup.x2DupClusters(spark, dir)))
-    assert(!LabelStore.ensureCurrent(spark, dir, store), "fresh rebuild must be current")
-
-    // generation hygiene: after N rebuilds only the newest two are live
-    writeClusteredCorpus(dir, extraDoc = Some(31L))
-    assert(LabelStore.ensureCurrent(spark, dir, store))
-    val live = new java.io.File(store).listFiles().map(_.getName)
-      .filter(_.startsWith("gen=")).sorted
-    assert(live.length == 2, s"expected the newest two generations live, got ${live.toSeq}")
-  }
-
-  test("dag_corpus_build through the label store equals the storeless composite") {
-    val dir = tmpDir("r8-dagcorpus")
-    val store = tmpDir("r8-dagstore") + "/store"
-    writeClusteredCorpus(dir)
-    LabelStore.build(spark, dir, store)
-    val direct = Dags.dagCorpusBuild(spark, dir).collect().toSeq
-    val stored = Dags.dagCorpusBuildFrom(spark, dir, Some(store)).collect().toSeq
-    assert(stored == direct)
-  }
-
-  test("X2e'': incremental append equals the full rebuild — non-rep attach, bridge merge, exact dup, fresh pair") {
-    val dir = tmpDir("r8-inccorpus")
-    val store = tmpDir("r8-incstore") + "/store"
-    writeIncCorpus(dir, stage = 0)
-    LabelStore.build(spark, dir, store)
-    // sanity on the planted base structure
-    val base = labelMap(LabelStore.read(spark, store))
-    assert(base(23L) == 22L && base(21L) == 20L && base(20L) == 20L,
-      s"planted base clusters malformed: $base")
-
-    writeIncCorpus(dir, stage = 1)
-    assert(LabelStore.ensureCurrentIncremental(spark, dir, store) == "incremental")
-    val got = labelMap(LabelStore.read(spark, store))
-    val full = labelMap(Dedup.x2DupClusters(spark, dir))
-    assert(got == full, s"incremental diverged from full rebuild:\n$got\nvs\n$full")
-    // the shapes that MUST work and that the admission store cannot serve:
-    assert(got(30L) == 10L, "attach via a NON-rep cluster member")
-    assert(got(32L) == 20L && got(22L) == 20L && got(23L) == 20L,
-      "bridge doc must merge C1 and C2 and REMAP C2's old labels")
-    assert(got(33L) == 0L, "exact-dup append joins the exact group")
-    assert(got(35L) == 34L, "fresh appended pair clusters on its own")
-    assert(!got.contains(36L) && !got.contains(40L), "pairless docs carry no label")
-
-    // unchanged corpus: noop, no generation churn
-    val gensBefore = new java.io.File(store).listFiles().count(_.getName.startsWith("gen="))
-    assert(LabelStore.ensureCurrentIncremental(spark, dir, store) == "noop")
-    assert(new java.io.File(store).listFiles().count(_.getName.startsWith("gen=")) == gensBefore)
-  }
-
-  test("X2e'': a lost index batch self-heals on the next append; mutation falls back to full") {
-    val dir = tmpDir("r8-incheal")
-    val store = tmpDir("r8-inchealstore") + "/store"
-    writeIncCorpus(dir, stage = 0)
-    LabelStore.build(spark, dir, store)
-    writeIncCorpus(dir, stage = 1)
-    assert(LabelStore.ensureCurrentIncremental(spark, dir, store) == "incremental")
-    // simulate the crash window: labels generation 2 published, index
-    // append lost — every stage-1 doc is missing from the index
-    for (sub <- Seq("digests", "sigs", "bands")) {
-      val batches = new java.io.File(s"$store/index/$sub").listFiles()
-        .filter(_.getName.startsWith("__batch="))
-      val newest = batches.maxBy(_.getName.stripPrefix("__batch=").toLong)
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm); f.delete()
-      }
-      rm(newest)
-    }
-    // next append re-detects the lost docs as part of its delta and the
-    // re-merge is idempotent: contracted endpoints of already-labeled
-    // docs collapse to their reps, so replayed edges change nothing
-    writeIncCorpus(dir, stage = 2)
-    assert(LabelStore.ensureCurrentIncremental(spark, dir, store) == "incremental")
-    val got = labelMap(LabelStore.read(spark, store))
-    assert(got == labelMap(Dedup.x2DupClusters(spark, dir)),
-      "self-healed append diverged from the full rebuild")
-    assert(got(37L) == 36L, "the new pair over a previously-appended doc")
-
-    // a mutated doc is NOT an append: the path must fall back to the
-    // full pipeline (and the rebuilt store must still be right)
-    writeIncCorpus(dir, stage = 2, mutate = true)
-    assert(LabelStore.ensureCurrentIncremental(spark, dir, store) == "full")
-    assert(labelMap(LabelStore.read(spark, store)) == labelMap(Dedup.x2DupClusters(spark, dir)))
-    assert(LabelStore.ensureCurrentIncremental(spark, dir, store) == "noop")
-  }
-
-  test("X2e'': a deleted doc is not an append — label store takes the tombstone path, then noop") {
-    val dir = tmpDir("r9-label-del")
-    val store = tmpDir("r9-label-delstore") + "/store"
-    def corpus(drop: Option[Long]) = {
-      val rows = (0L until 40L).map(i =>
-        (i, (0 until 30).map(t => s"w${i}_$t").mkString(" ")))
-        .filterNot { case (i, _) => drop.contains(i) }
-      documentsOf(rows)
-    }
-    corpus(None).write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    graft.operators.LabelStore.build(spark, dir, store)
-    corpus(Some(7L)).write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    // a deleted doc routes to the tombstone path (since round 10, no
-    // longer a full rebuild); this corpus has zero near-dups, so the
-    // touched-component mass is 0 and the labels stay empty
-    assert(graft.operators.LabelStore.ensureCurrentIncremental(spark, dir, store) == "incremental-delete")
-    assert(graft.operators.LabelStore.ensureCurrentIncremental(spark, dir, store) == "noop")
-    // the noop above proves the published generation's fingerprint covers
-    // exactly the shrunken corpus; with zero near-dups its label table
-    // is empty by contract (labels hold only clustered docs)
-    assert(graft.operators.LabelStore.read(spark, store).isEmpty)
-  }
-
-  test("X2e''': deleting a bridge doc splits its cluster; deleting a rep relabels — equal to from-scratch") {
-    val dir = tmpDir("r10-label-del")
-    val store = tmpDir("r10-label-delstore") + "/store"
-    writeDocRows(dir, docRows(Set.empty))
-    LabelStore.build(spark, dir, store)
-    // sanity: chain and triangle each one component under min-label
-    assert(labelSet(store) == Set((10L, 10L), (11L, 10L), (12L, 10L),
-      (20L, 20L), (21L, 20L), (22L, 20L)))
-
-    writeDocRows(dir, docRows(drop = Set(11L, 20L)))
-    assert(LabelStore.ensureCurrentIncremental(spark, dir, store) == "incremental-delete")
-    assert(LabelStore.ensureCurrentIncremental(spark, dir, store) == "noop")
-    // chain split to singletons (out of the table); triangle relabeled
-    assert(labelSet(store) == Set((21L, 21L), (22L, 21L)))
-    // the real pin: equal to a from-scratch build on the reduced corpus
-    val scratch = tmpDir("r10-label-scratch") + "/store"
-    LabelStore.build(spark, dir, scratch)
-    assert(labelSet(store) == labelSet(scratch))
-  }
-
-  test("X2e''': a doc re-added after deletion is an append again and rejoins its cluster") {
-    val dir = tmpDir("r10-label-readd")
-    val store = tmpDir("r10-label-readdstore") + "/store"
-    writeDocRows(dir, docRows(Set.empty))
-    LabelStore.build(spark, dir, store)
-    writeDocRows(dir, docRows(drop = Set(11L)))
-    assert(LabelStore.ensureCurrentIncremental(spark, dir, store) == "incremental-delete")
-    // re-add the SAME doc: the batch-aware tombstone mask must keep the
-    // new rows live (its new batch outranks the tombstone) while the old
-    // dead rows stay masked — the chain re-forms exactly
-    writeDocRows(dir, docRows(Set.empty))
-    assert(LabelStore.ensureCurrentIncremental(spark, dir, store) == "incremental")
-    assert(LabelStore.ensureCurrentIncremental(spark, dir, store) == "noop")
-    assert(labelSet(store) == Set((10L, 10L), (11L, 10L), (12L, 10L),
-      (20L, 20L), (21L, 20L), (22L, 20L)))
-  }
-
-  test("X2e''': mixed append+delete and past-half deletes fall back to the full rebuild") {
-    val dir = tmpDir("r10-label-mixed")
-    val store = tmpDir("r10-label-mixedstore") + "/store"
-    writeDocRows(dir, docRows(Set.empty))
-    LabelStore.build(spark, dir, store)
-    // one doc out, one new doc in — mixed batch, full rebuild
-    writeDocRows(dir, docRows(drop = Set(21L)) :+ (30L -> "mx0 mx1 mx2 mx3 mx4"))
-    assert(LabelStore.ensureCurrentIncremental(spark, dir, store) == "full")
-    assert(LabelStore.ensureCurrentIncremental(spark, dir, store) == "noop")
-    // now delete far past the compaction threshold (9 of 12 docs)
-    writeDocRows(dir, (docRows(drop = Set(21L)) :+ (30L -> "mx0 mx1 mx2 mx3 mx4"))
-      .filter(_._1 >= 10L).take(3))
-    assert(LabelStore.ensureCurrentIncremental(spark, dir, store) == "full")
-    assert(LabelStore.ensureCurrentIncremental(spark, dir, store) == "noop")
-  }
-
-  test("review: an empty tombstones dir (crash before any commit / GC of the last batch) does not brick maintenance") {
-    val dir = tmpDir("r10-emptytombs")
-    val store = tmpDir("r10-emptytombsstore") + "/store"
-    writeDocRows(dir, docRows(Set.empty))
-    LabelStore.build(spark, dir, store)
-    // crash simulation: the tombstones dataset dir exists but holds no
-    // batch — only the debris a killed first delete leaves behind
-    val tp = new java.io.File(s"$store/index/tombstones")
-    assert(tp.mkdirs())
-    new java.io.File(tp, "_SUCCESS").createNewFile()
-    assert(LabelStore.ensureCurrentIncremental(spark, dir, store) == "noop")
-    // and a real delete still runs through it
-    writeDocRows(dir, docRows(drop = Set(11L)))
-    assert(LabelStore.ensureCurrentIncremental(spark, dir, store) == "incremental-delete")
-  }
-
-  test("review: a crashed append attempt's unpublished index batch is invisible to the retry and overwritten by it") {
-    val dir = tmpDir("r10-crashretry")
-    val store = tmpDir("r10-crashretrystore") + "/store"
-    writeDocRows(dir, docRows(Set.empty).filterNot(_._1 == 12L))
-    LabelStore.build(spark, dir, store)
-    // crash simulation: an append died after its sigs/bands landed as
-    // __batch=2 (digests last — never written), leaving garbage rows in
-    // the index. Clone batch 1 as the garbage: worst case, it duplicates
-    // every existing doc under the unpublished batch number.
-    import java.nio.file.{Files, Path => JPath}
-    import scala.jdk.CollectionConverters._
-    def clone1to2(ds: String): Unit = {
-      val src = JPath.of(s"$store/index/$ds/__batch=1")
-      val dst = JPath.of(s"$store/index/$ds/__batch=2")
-      Files.walk(src).iterator().asScala.toSeq.foreach { p =>
-        val t = dst.resolve(src.relativize(p).toString)
-        if (Files.isDirectory(p)) Files.createDirectories(t)
-        else Files.copy(p, t)
-      }
-    }
-    clone1to2("bands"); clone1to2("sigs")
-    // the retry: doc 12 arrives; the maintenance call must neither read
-    // the crashed batch (FNF race with its own concurrent rewrite) nor
-    // pair against its rows, and the merged labels must equal from-scratch
-    writeDocRows(dir, docRows(Set.empty))
-    assert(LabelStore.ensureCurrentIncremental(spark, dir, store) == "incremental")
-    assert(LabelStore.ensureCurrentIncremental(spark, dir, store) == "noop")
-    val scratch = tmpDir("r10-crashscratch") + "/store"
-    LabelStore.build(spark, dir, scratch)
-    assert(labelSet(store) == labelSet(scratch))
-  }
-
-  test("LabelStore geometry: an index created under non-default bucket confs labels identically and appends under its recorded counts") {
-    import graft.operators.LabelStore
-    def toks(p: String, from: Int, to: Int) = (from to to).map(i => s"$p$i").mkString(" ")
-    def corpus(stage: Int): Seq[(Long, String)] =
-      (Seq(
-        0L -> toks("tok", 0, 11), 1L -> toks("tok", 0, 11),
-        10L -> (toks("n", 0, 10) + " tailA"), 11L -> (toks("n", 0, 10) + " tailB")) ++
-        (40L until 50L).map(i => i -> (0 until 12).map(j => s"d${i}w$j").mkString(" ")) ++
-        (if (stage >= 1) Seq(30L -> ("x0 " + toks("n", 1, 10) + " tailB")) else Nil))
-    def writeCorpus(dir: String, stage: Int): Unit =
-      documentsOf(corpus(stage)).repartition(2)
-        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-
-    val dir = tmpDir("r12-lgeo-corpus")
-    writeCorpus(dir, 0)
-    val storeD = tmpDir("r12-lgeo-d") + "/store"
-    LabelStore.build(spark, dir, storeD)
-    val store8 = tmpDir("r12-lgeo-8") + "/store"
-    withConf(graft.streaming.BandStore.BandBucketsConf -> "8",
-             graft.streaming.BandStore.SigBucketsConf -> "4") {
-      LabelStore.build(spark, dir, store8)
-    }
-    assert(java.nio.file.Files.readString(
-      java.nio.file.Paths.get(store8, ".geometry")) == "bandBuckets=8 sigBuckets=4")
-    assert(labelSet(store8) == labelSet(storeD),
-      "index geometry must never change the labels")
-    val bb = spark.read.parquet(s"$store8/index/bands")
-      .select(col("__bb").cast("int")).distinct().collect().map(_.getInt(0))
-    assert(bb.forall(v => v >= 0 && v < 8), s"bands index layout: ${bb.toSeq.sorted}")
-    // incremental append WITHOUT the confs set: the recorded geometry
-    // must govern the delta writes and the bucket-pruned probes
-    writeCorpus(dir, 1)
-    assert(LabelStore.ensureCurrentIncremental(spark, dir, store8) == "incremental")
-    assert(LabelStore.ensureCurrentIncremental(spark, dir, storeD) == "incremental")
-    assert(labelSet(store8) == labelSet(storeD),
-      "post-append labels must be geometry-invariant")
-    assert(labelSet(store8).contains((30L, 10L)), "the appended near-dup must attach")
-    val bbAfter = spark.read.parquet(s"$store8/index/bands")
-      .select(col("__bb").cast("int")).distinct().collect().map(_.getInt(0))
-    assert(bbAfter.forall(v => v >= 0 && v < 8),
-      "the delta batch must land under the recorded 8-bucket layout")
-  }
-
-  test("composite lifecycle: dag_corpus_build_stored serves the maintained store across append and delete") {
-    // scratch corpus dir: the sf0.001 documents table copied, so the
-    // canonical store keyed by this path starts empty and the composite's
-    // ensureCurrentIncremental drives the real maintenance transitions
-    val dir = tmpDir("r10-lifecycle")
-    val docs0 = graft.engine.Tables.documents(spark, sfDir)
-    docs0.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    def storeless = Dags.dagCorpusBuildFrom(spark, dir, labelStore = None)
-      .collect().map(_.getLong(0)).toSet
-    def stored = Dags.dagCorpusBuildStored(spark, dir)
-      .collect().map(_.getLong(0)).toSet
-    assert(stored == storeless, "initial build")
-
-    // APPEND: duplicate the texts of docs 3 and 4 under new ids — they
-    // must join those docs' clusters and fall out of the keep set
-    val dupes = docs0.filter(col("doc_id").isin(3L, 4L))
-      .withColumn("doc_id", col("doc_id") + 100000L)
-    docs0.unionByName(dupes).write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    assert(stored == storeless, "after append")
-
-    // DELETE: drop the duplicates and a slice of originals — the stored
-    // composite must serve the reduced corpus via the tombstone path
-    docs0.filter(col("doc_id") % 9 =!= 5)
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    assert(stored == storeless, "after delete")
-  }
-
-  test("T13: streaming label maintenance merges a late near-dup into its stored cluster, replay-safe") {
-    import graft.streaming.Streams
-    val corpusStore = tmpDir("r10-lblcorpus") + "/store"
-    val labelStore = tmpDir("r10-lblstore") + "/store"
-    val src = tmpDir("r10-lblsrc")
-    val ckpt = tmpDir("r10-lblckpt")
-    val all = docRows(Set.empty)
-    // micro-batch 1: everything except doc 12; micro-batch 2: doc 12 (a
-    // near-dup of 11 — it must MERGE into the stored chain cluster via
-    // the band-index probe, never a rebuild) plus a re-delivery of 10
-    val b1 = all.filterNot(_._1 == 12L)
-    val b2 = all.filter(r => r._1 == 12L || r._1 == 10L)
-    documentsOf(b1).coalesce(1).write.mode("append").parquet(src)
-    documentsOf(b2).coalesce(1).write.mode("append").parquet(src)
-    val schema = spark.read.parquet(src).schema
-    def runSink(): Unit = {
-      val q = Streams.labelMaintainSink(
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src),
-        corpusStore, labelStore, ckpt)
-      assert(q.awaitTermination(120000), "label maintenance query did not finish")
-    }
-    runSink()
-    // the streamed lifecycle must equal a from-scratch build on the
-    // union corpus — including 12 joining the chain cluster rep 10
-    val dir = tmpDir("r10-lblscratchdir")
-    writeDocRows(dir, all)
-    val scratch = tmpDir("r10-lblscratch") + "/store"
-    LabelStore.build(spark, dir, scratch)
-    assert(labelSet(labelStore) == labelSet(scratch),
-      "streamed labels diverge from the from-scratch build")
-    assert(labelSet(labelStore).contains((12L, 10L)),
-      "the late near-dup did not merge into the stored cluster")
-    // replay: same checkpoint reprocesses nothing; a manual re-apply of
-    // the corpus is a fingerprint noop
-    runSink()
-    assert(labelSet(labelStore) == labelSet(scratch))
-    assert(LabelStore.ensureCurrentIncremental(spark, dir, labelStore) == "noop",
-      "replay must be a content-derived noop")
-  }
 
   test("a failed index write settles its sibling before the failure propagates") {
     // the sigs half fails at once (its dataset path is a plain file); the

@@ -264,11 +264,4 @@ class LlmOpsSpec extends SparkSpec {
     // second pass over the keepers: every keeper is its own group
     assert(d1.count() == d1.select("keeper_id").distinct().count())
   }
-
-  test("X3e: SQ8 recall@5 stays above 0.6 and quantized arrays are tinyint") {
-    val rec = Similarity.x3Sq8Recall(spark, sfDir)
-      .select(col("recall_at_5")).as[Double].collect()
-    assert(rec.nonEmpty)
-    assert(rec.forall(_ >= 0.6), rec.mkString(","))
-  }
 }

@@ -43,27 +43,21 @@ class Round10Spec extends SparkSpec {
     (fillers ++ planted).filter { case (id, _) => !drop.contains(id) }
   }
 
-  private def writeDocs(dir: String, rows: Seq[(Long, String)]): Unit =
-    rows.toDF("doc_id", "text")
-      .withColumn("source", lit("s")).withColumn("lang", lit("en"))
-      .withColumn("n_chars", length(col("text")).cast("long"))
-      .repartition(2)
+  /** Write `rows` as `<dir>/documents.parquet` in two files. */
+  private def writeDocRows(dir: String, rows: Seq[(Long, String)]): Unit =
+    documentsOf(rows).repartition(2)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-
-  private def labelSet(store: String): Set[(Long, Long)] =
-    LabelStore.read(spark, store).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
 
   test("X2e''': deleting a bridge doc splits its cluster; deleting a rep relabels — equal to from-scratch") {
     val dir = tmpDir("r10-label-del")
     val store = tmpDir("r10-label-delstore") + "/store"
-    writeDocs(dir, docRows(Set.empty))
+    writeDocRows(dir, docRows(Set.empty))
     LabelStore.build(spark, dir, store)
     // sanity: chain and triangle each one component under min-label
     assert(labelSet(store) == Set((10L, 10L), (11L, 10L), (12L, 10L),
       (20L, 20L), (21L, 20L), (22L, 20L)))
 
-    writeDocs(dir, docRows(drop = Set(11L, 20L)))
+    writeDocRows(dir, docRows(drop = Set(11L, 20L)))
     assert(LabelStore.ensureCurrentIncremental(spark, dir, store) == "incremental-delete")
     assert(LabelStore.ensureCurrentIncremental(spark, dir, store) == "noop")
     // chain split to singletons (out of the table); triangle relabeled
@@ -77,14 +71,14 @@ class Round10Spec extends SparkSpec {
   test("X2e''': a doc re-added after deletion is an append again and rejoins its cluster") {
     val dir = tmpDir("r10-label-readd")
     val store = tmpDir("r10-label-readdstore") + "/store"
-    writeDocs(dir, docRows(Set.empty))
+    writeDocRows(dir, docRows(Set.empty))
     LabelStore.build(spark, dir, store)
-    writeDocs(dir, docRows(drop = Set(11L)))
+    writeDocRows(dir, docRows(drop = Set(11L)))
     assert(LabelStore.ensureCurrentIncremental(spark, dir, store) == "incremental-delete")
     // re-add the SAME doc: the batch-aware tombstone mask must keep the
     // new rows live (its new batch outranks the tombstone) while the old
     // dead rows stay masked — the chain re-forms exactly
-    writeDocs(dir, docRows(Set.empty))
+    writeDocRows(dir, docRows(Set.empty))
     assert(LabelStore.ensureCurrentIncremental(spark, dir, store) == "incremental")
     assert(LabelStore.ensureCurrentIncremental(spark, dir, store) == "noop")
     assert(labelSet(store) == Set((10L, 10L), (11L, 10L), (12L, 10L),
@@ -94,14 +88,14 @@ class Round10Spec extends SparkSpec {
   test("X2e''': mixed append+delete and past-half deletes fall back to the full rebuild") {
     val dir = tmpDir("r10-label-mixed")
     val store = tmpDir("r10-label-mixedstore") + "/store"
-    writeDocs(dir, docRows(Set.empty))
+    writeDocRows(dir, docRows(Set.empty))
     LabelStore.build(spark, dir, store)
     // one doc out, one new doc in — mixed batch, full rebuild
-    writeDocs(dir, docRows(drop = Set(21L)) :+ (30L -> "mx0 mx1 mx2 mx3 mx4"))
+    writeDocRows(dir, docRows(drop = Set(21L)) :+ (30L -> "mx0 mx1 mx2 mx3 mx4"))
     assert(LabelStore.ensureCurrentIncremental(spark, dir, store) == "full")
     assert(LabelStore.ensureCurrentIncremental(spark, dir, store) == "noop")
     // now delete far past the compaction threshold (9 of 12 docs)
-    writeDocs(dir, (docRows(drop = Set(21L)) :+ (30L -> "mx0 mx1 mx2 mx3 mx4"))
+    writeDocRows(dir, (docRows(drop = Set(21L)) :+ (30L -> "mx0 mx1 mx2 mx3 mx4"))
       .filter(_._1 >= 10L).take(3))
     assert(LabelStore.ensureCurrentIncremental(spark, dir, store) == "full")
     assert(LabelStore.ensureCurrentIncremental(spark, dir, store) == "noop")
@@ -273,7 +267,7 @@ class Round10Spec extends SparkSpec {
   test("review: an empty tombstones dir (crash before any commit / GC of the last batch) does not brick maintenance") {
     val dir = tmpDir("r10-emptytombs")
     val store = tmpDir("r10-emptytombsstore") + "/store"
-    writeDocs(dir, docRows(Set.empty))
+    writeDocRows(dir, docRows(Set.empty))
     LabelStore.build(spark, dir, store)
     // crash simulation: the tombstones dataset dir exists but holds no
     // batch — only the debris a killed first delete leaves behind
@@ -282,14 +276,14 @@ class Round10Spec extends SparkSpec {
     new java.io.File(tp, "_SUCCESS").createNewFile()
     assert(LabelStore.ensureCurrentIncremental(spark, dir, store) == "noop")
     // and a real delete still runs through it
-    writeDocs(dir, docRows(drop = Set(11L)))
+    writeDocRows(dir, docRows(drop = Set(11L)))
     assert(LabelStore.ensureCurrentIncremental(spark, dir, store) == "incremental-delete")
   }
 
   test("review: a crashed append attempt's unpublished index batch is invisible to the retry and overwritten by it") {
     val dir = tmpDir("r10-crashretry")
     val store = tmpDir("r10-crashretrystore") + "/store"
-    writeDocs(dir, docRows(Set.empty).filterNot(_._1 == 12L))
+    writeDocRows(dir, docRows(Set.empty).filterNot(_._1 == 12L))
     LabelStore.build(spark, dir, store)
     // crash simulation: an append died after its sigs/bands landed as
     // __batch=2 (digests last — never written), leaving garbage rows in
@@ -310,7 +304,7 @@ class Round10Spec extends SparkSpec {
     // the retry: doc 12 arrives; the maintenance call must neither read
     // the crashed batch (FNF race with its own concurrent rewrite) nor
     // pair against its rows, and the merged labels must equal from-scratch
-    writeDocs(dir, docRows(Set.empty))
+    writeDocRows(dir, docRows(Set.empty))
     assert(LabelStore.ensureCurrentIncremental(spark, dir, store) == "incremental")
     assert(LabelStore.ensureCurrentIncremental(spark, dir, store) == "noop")
     val scratch = tmpDir("r10-crashscratch") + "/store"
@@ -709,19 +703,13 @@ class Round10Spec extends SparkSpec {
     val src = tmpDir("r10-lblsrc")
     val ckpt = tmpDir("r10-lblckpt")
     val all = docRows(Set.empty)
-    def docFrame(rows: Seq[(Long, String)]) = {
-      import spark.implicits._
-      rows.toDF("doc_id", "text")
-        .withColumn("source", lit("s")).withColumn("lang", lit("en"))
-        .withColumn("n_chars", length(col("text")).cast("long"))
-    }
     // micro-batch 1: everything except doc 12; micro-batch 2: doc 12 (a
     // near-dup of 11 — it must MERGE into the stored chain cluster via
     // the band-index probe, never a rebuild) plus a re-delivery of 10
     val b1 = all.filterNot(_._1 == 12L)
     val b2 = all.filter(r => r._1 == 12L || r._1 == 10L)
-    docFrame(b1).coalesce(1).write.mode("append").parquet(src)
-    docFrame(b2).coalesce(1).write.mode("append").parquet(src)
+    documentsOf(b1).coalesce(1).write.mode("append").parquet(src)
+    documentsOf(b2).coalesce(1).write.mode("append").parquet(src)
     val schema = spark.read.parquet(src).schema
     def runSink(): Unit = {
       val q = Streams.labelMaintainSink(
@@ -733,7 +721,7 @@ class Round10Spec extends SparkSpec {
     // the streamed lifecycle must equal a from-scratch build on the
     // union corpus — including 12 joining the chain cluster rep 10
     val dir = tmpDir("r10-lblscratchdir")
-    writeDocs(dir, all)
+    writeDocRows(dir, all)
     val scratch = tmpDir("r10-lblscratch") + "/store"
     LabelStore.build(spark, dir, scratch)
     assert(labelSet(labelStore) == labelSet(scratch),

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.FormattedMode
 import graft.operators.StoreDirs
+import Fixtures.{admittedIds, admittedIn, generations, text}
 
 /** Round-11 additions: the derived partsupp view closing the last
   * TPC-H capability hole (VERDICT r10 item 1), plan pins for the
@@ -74,6 +75,13 @@ class Round11Spec extends SparkSpec {
     Seq(bogusId).toDF("last_stream_batch").coalesce(1)
       .write.mode("overwrite").parquet(s"$storeRoot/.staging-$nextGen/ingest")
 
+  private def vecs(n: Int) = (0L until n.toLong).map { i =>
+    (i, Seq(math.cos(i * 0.07).toFloat, math.sin(i * 0.07).toFloat, 0f, 0f), (i % 3).toInt)
+  }.toDF("vec_id", "embedding", "label")
+
+  private def docs(n: Int) =
+    documentsOf((0L until n.toLong).map(i => (i, (0 until 30).map(j => s"d${i}_$j").mkString(" "))))
+
   private def genDirs(storeRoot: String): Seq[java.io.File] =
     Option(new java.io.File(storeRoot).listFiles()).getOrElse(Array.empty)
       .filter(f => f.getName.startsWith("gen=")).toSeq.sortBy(_.getName)
@@ -104,9 +112,6 @@ class Round11Spec extends SparkSpec {
   test("IvfStore: a crashed streaming attempt's staging ingest id does not ride into the next publish") {
     import graft.operators.IvfStore
     val store = tmpDir("r11-ivfstale") + "/store"
-    def vecs(n: Int) = (0L until n.toLong).map { i =>
-      (i, Seq(math.cos(i * 0.07).toFloat, math.sin(i * 0.07).toFloat, 0f, 0f), (i % 3).toInt)
-    }.toDF("vec_id", "embedding", "label")
     IvfStore.buildVecs(vecs(64), store)
     plantStaleIngest(store, nextGen = 2L, bogusId = 99L)
     // corpus-driven append path (ingestId = None) publishes gen 2
@@ -230,9 +235,7 @@ class Round11Spec extends SparkSpec {
     // invariant 2: at least one writer succeeded
     assert(Seq(ra, rb).exists(_.isRight), s"both failed: $ra / $rb")
     // invariant 3: generation numbers are unique — no buried publish
-    val ks = Option(new java.io.File(store).listFiles()).getOrElse(Array.empty)
-      .map(_.getName).filter(_.startsWith("gen=")).toSeq
-      .map(_.stripPrefix("gen=").takeWhile(_ != '_').toLong)
+    val ks = generations(store)
     assert(ks.distinct.size == ks.size, s"duplicate generation numbers: $ks")
     // invariant 4: a retry from the settled state converges exactly
     val m = DateStore.ensureIncrementalEvents(evB, store)
@@ -322,11 +325,6 @@ class Round11Spec extends SparkSpec {
     import graft.operators.{IvfStore, LabelStore}
     // label store
     val ldir = tmpDir("r11-labelfence")
-    def docs(n: Int) = (0L until n.toLong)
-      .map(i => (i, (0 until 30).map(j => s"d${i}_$j").mkString(" ")))
-      .toDF("doc_id", "text")
-      .withColumn("source", lit("s")).withColumn("lang", lit("en"))
-      .withColumn("n_chars", length(col("text")).cast("long"))
     val lstore = s"$ldir/store"
     LabelStore.buildDocs(docs(20).localCheckpoint(), lstore)
     plantFence(lstore, 2L)
@@ -490,30 +488,25 @@ class Round11Spec extends SparkSpec {
     val root = tmpDir("r11-evict")
     val store = s"$root/store"
     val admitted = s"$root/admitted"
-    def text(tag: String, i: Int) =
-      (0 until 25).map(j => s"${tag}_w${i}_$j").mkString(" ")
-    def frame(rows: Seq[(Long, String)]) = rows.toDF("doc_id", "text")
-    def admittedIds(): Set[Long] = spark.read.parquet(admitted)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
 
     // batch 0: the base corpus
     BandStore.admitBatch(frame((0 until 30).map(i => (i.toLong, text("a", i)))),
       0L, store, admitted)
     // batch 1: an exact copy of doc 3 under a new id — the store vetoes
     BandStore.admitBatch(frame(Seq((100L, text("a", 3)))), 1L, store, admitted)
-    assert(!admittedIds().contains(100L), "store veto must drop the copy of a live doc")
+    assert(!admittedIds(spark, admitted).contains(100L), "store veto must drop the copy of a live doc")
     // batch 2: doc 3 leaves the corpus (takedown)
     BandStore.evictDocs(Seq(3L).toDF("doc_id"), 2L, store)
     // batch 3: the SAME text is now admissible — its only peer is
     // evicted — while a copy of retained doc 7 still drops
     BandStore.admitBatch(frame(Seq((101L, text("a", 3)), (102L, text("a", 7)))),
       3L, store, admitted)
-    assert(admittedIds().contains(101L), "eviction must free the dedup memory")
-    assert(!admittedIds().contains(102L), "retained docs must keep vetoing")
+    assert(admittedIds(spark, admitted).contains(101L), "eviction must free the dedup memory")
+    assert(!admittedIds(spark, admitted).contains(102L), "retained docs must keep vetoing")
     // batch 4: doc 101's rows (batch 3) OUTRANK the batch-2 tombstone —
     // the revived text vetoes again
     BandStore.admitBatch(frame(Seq((103L, text("a", 3)))), 4L, store, admitted)
-    assert(!admittedIds().contains(103L),
+    assert(!admittedIds(spark, admitted).contains(103L),
       "re-admission must revive the veto (batch-gated mask)")
 
     // compaction absorbs the tombstone and physically drops the rows
@@ -537,21 +530,18 @@ class Round11Spec extends SparkSpec {
     // fresh doc lands
     BandStore.admitBatch(frame(Seq((104L, text("a", 12)), (105L, text("z", 1)))),
       5L, store, admitted)
-    assert(!admittedIds().contains(104L) && admittedIds().contains(105L))
+    assert(!admittedIds(spark, admitted).contains(104L) && admittedIds(spark, admitted).contains(105L))
 
     // same-id re-admission: the batch-gate (`__obatch >= __tb`) must let a
     // tombstoned doc_id's OWN newer rows outrank its tombstone — the
     // revive above (101) used a fresh id, which a mask that ignored the
     // gate would also pass
-    def admittedIn(b: Long): Set[Long] = spark.read.parquet(admitted)
-      .filter(col("__batch") === b)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
     BandStore.evictDocs(Seq(12L).toDF("doc_id"), 6L, store)
     BandStore.admitBatch(frame(Seq((12L, text("a", 12)))), 7L, store, admitted)
-    assert(admittedIn(7L).contains(12L),
+    assert(admittedIn(spark, admitted, 7L).contains(12L),
       "a tombstoned id must be re-admittable (its only peer is its own masked past)")
     BandStore.admitBatch(frame(Seq((106L, text("a", 12)))), 8L, store, admitted)
-    assert(admittedIn(8L).isEmpty,
+    assert(admittedIn(spark, admitted, 8L).isEmpty,
       "the re-admitted id's newer rows must outrank its tombstone and veto again")
   }
 

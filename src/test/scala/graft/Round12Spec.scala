@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import Fixtures.{admittedIn, text}
 
 /** Round-12 regressions — the four ADVICE r11 findings:
   * the compaction crash-window eviction bug (medium), the
@@ -24,19 +25,13 @@ class Round12Spec extends SparkSpec {
     val root = tmpDir("r12-crashwin")
     val store = s"$root/store"
     val admitted = s"$root/admitted"
-    def text(tag: String, i: Int) =
-      (0 until 25).map(j => s"${tag}_w${i}_$j").mkString(" ")
-    def frame(rows: Seq[(Long, String)]) = rows.toDF("doc_id", "text")
-    def admittedIn(b: Long): Set[Long] = spark.read.parquet(admitted)
-      .filter(col("__batch") === b)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
 
     // corpus adopted at batch 0; doc 3 evicted at batch 1; the SAME id
     // re-admitted at batch 2 (its only peer is its own masked past)
     BandStore.importCorpus(frame((0 until 20).map(i => (i.toLong, text("a", i)))), 0L, store)
     BandStore.evictDocs(Seq(3L).toDF("doc_id"), 1L, store)
     BandStore.admitBatch(frame(Seq((3L, text("a", 3)))), 2L, store, admitted)
-    assert(admittedIn(2L) == Set(3L), "the evicted id must be re-admittable")
+    assert(admittedIn(spark, admitted, 2L) == Set(3L), "the evicted id must be re-admittable")
 
     // full compaction: batches 0 and 2 fold into base −1, tombstone 1 is
     // absorbed and deleted
@@ -49,7 +44,7 @@ class Round12Spec extends SparkSpec {
     // (a) the doc's folded rows must still OUTRANK the stale tombstone:
     // a copy of its text is vetoed, not admitted
     BandStore.admitBatch(frame(Seq((200L, text("a", 3)))), 3L, store, admitted)
-    assert(admittedIn(3L).isEmpty,
+    assert(admittedIn(spark, admitted, 3L).isEmpty,
       "a re-admitted doc must keep vetoing across a crash-leftover tombstone")
 
     // (b) the next compaction's re-absorb must keep the rows (the old
@@ -71,7 +66,7 @@ class Round12Spec extends SparkSpec {
       "the leftover tombstone must be absorbed")
     // and the veto still stands afterwards
     BandStore.admitBatch(frame(Seq((201L, text("a", 3)))), 4L, store, admitted)
-    assert(admittedIn(4L).isEmpty, "the veto must survive the re-absorb")
+    assert(admittedIn(spark, admitted, 4L).isEmpty, "the veto must survive the re-absorb")
   }
 
   // ---------------------------------------------------------------
@@ -144,15 +139,9 @@ class Round12Spec extends SparkSpec {
 
   test("BandStore geometry: a store created under non-default bucket confs decides identically, prunes on its own counts, and survives compaction and eviction") {
     import graft.streaming.BandStore
-    def text(tag: String, i: Int) =
-      (0 until 25).map(j => s"${tag}_w${i}_$j").mkString(" ")
-    def frame(rows: Seq[(Long, String)]) = rows.toDF("doc_id", "text")
     val b0 = (0 until 20).map(i => (i.toLong, text("a", i)))
     // batch 1: an exact copy of doc 3 (must drop) and a fresh doc
     val b1 = Seq((100L, text("a", 3)), (101L, text("z", 1)))
-    def admittedIn(out: String, b: Long): Set[Long] = spark.read.parquet(out)
-      .filter(col("__batch") === b).select("doc_id")
-      .collect().map(_.getLong(0)).toSet
 
     // reference store at the default 64/16 geometry
     val rootD = tmpDir("r12-geo-default")
@@ -170,7 +159,7 @@ class Round12Spec extends SparkSpec {
       java.nio.file.Paths.get(store, ".geometry"))
       == "bandBuckets=8 sigBuckets=4 obatchEpoch=1")
     BandStore.admitBatch(frame(b1), 1L, store, s"$root/out")
-    assert(admittedIn(s"$root/out", 1L) == admittedIn(s"$rootD/out", 1L),
+    assert(admittedIn(spark, s"$root/out", 1L) == admittedIn(spark, s"$rootD/out", 1L),
       "bucket geometry must never change an admission decision")
     val bb = spark.read.parquet(BandStore.bandsDir(store))
       .select(col("__bb").cast("int")).distinct().collect().map(_.getInt(0))
@@ -193,7 +182,7 @@ class Round12Spec extends SparkSpec {
     // eviction + re-admission and compaction respect the geometry
     BandStore.evictDocs(Seq(3L).toDF("doc_id"), 2L, store)
     BandStore.admitBatch(frame(Seq((102L, text("a", 3)))), 3L, store, s"$root/out")
-    assert(admittedIn(s"$root/out", 3L) == Set(102L),
+    assert(admittedIn(spark, s"$root/out", 3L) == Set(102L),
       "eviction must free the text under the non-default geometry")
     BandStore.compactStore(spark, store, minLiveBatch = 4L)
     val bbAfter = spark.read.parquet(BandStore.bandsDir(store))
@@ -202,7 +191,7 @@ class Round12Spec extends SparkSpec {
       "compaction must preserve the recorded geometry")
     BandStore.admitBatch(frame(Seq((103L, text("a", 5)), (104L, text("q", 2)))),
       4L, store, s"$root/out")
-    assert(admittedIn(s"$root/out", 4L) == Set(104L),
+    assert(admittedIn(spark, s"$root/out", 4L) == Set(104L),
       "post-compaction decisions must be unchanged at 8/4 buckets")
   }
 
@@ -216,14 +205,8 @@ class Round12Spec extends SparkSpec {
         (40L until 50L).map(i => i -> (0 until 12).map(j => s"d${i}w$j").mkString(" ")) ++
         (if (stage >= 1) Seq(30L -> ("x0 " + toks("n", 1, 10) + " tailB")) else Nil))
     def writeCorpus(dir: String, stage: Int): Unit =
-      corpus(stage).toDF("doc_id", "text")
-        .withColumn("source", lit("s")).withColumn("lang", lit("en"))
-        .withColumn("n_chars", length(col("text")).cast("long"))
-        .repartition(2)
+      documentsOf(corpus(stage)).repartition(2)
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    def labels(store: String): Set[(Long, Long)] =
-      LabelStore.read(spark, store).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
 
     val dir = tmpDir("r12-lgeo-corpus")
     writeCorpus(dir, 0)
@@ -236,7 +219,7 @@ class Round12Spec extends SparkSpec {
     }
     assert(java.nio.file.Files.readString(
       java.nio.file.Paths.get(store8, ".geometry")) == "bandBuckets=8 sigBuckets=4")
-    assert(labels(store8) == labels(storeD),
+    assert(labelSet(store8) == labelSet(storeD),
       "index geometry must never change the labels")
     val bb = spark.read.parquet(s"$store8/index/bands")
       .select(col("__bb").cast("int")).distinct().collect().map(_.getInt(0))
@@ -246,9 +229,9 @@ class Round12Spec extends SparkSpec {
     writeCorpus(dir, 1)
     assert(LabelStore.ensureCurrentIncremental(spark, dir, store8) == "incremental")
     assert(LabelStore.ensureCurrentIncremental(spark, dir, storeD) == "incremental")
-    assert(labels(store8) == labels(storeD),
+    assert(labelSet(store8) == labelSet(storeD),
       "post-append labels must be geometry-invariant")
-    assert(labels(store8).contains((30L, 10L)), "the appended near-dup must attach")
+    assert(labelSet(store8).contains((30L, 10L)), "the appended near-dup must attach")
     val bbAfter = spark.read.parquet(s"$store8/index/bands")
       .select(col("__bb").cast("int")).distinct().collect().map(_.getInt(0))
     assert(bbAfter.forall(v => v >= 0 && v < 8),
@@ -259,7 +242,6 @@ class Round12Spec extends SparkSpec {
     import graft.streaming.BandStore
     val root = tmpDir("r12-geo-legacy")
     val store = s"$root/store"
-    def frame(rows: Seq[(Long, String)]) = rows.toDF("doc_id", "text")
     BandStore.admitBatch(
       frame((0 until 10).map(i => (i.toLong, (0 until 25).map(j => s"l${i}_$j").mkString(" ")))),
       0L, store, s"$root/out")

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import Fixtures.{admittedIn, generations, text}
 
 /** Round-13 regressions — the ADVICE r12 findings:
   * the eviction gate on pre-`__obatch` stores (medium: an upgrade must
@@ -52,12 +53,6 @@ class Round13Spec extends SparkSpec {
     val root = tmpDir("r13-legacy")
     val store = s"$root/store"
     val admitted = s"$root/admitted"
-    def text(tag: String, i: Int) =
-      (0 until 25).map(j => s"${tag}_w${i}_$j").mkString(" ")
-    def frame(rows: Seq[(Long, String)]) = rows.toDF("doc_id", "text")
-    def admittedIn(b: Long): Set[Long] = spark.read.parquet(admitted)
-      .filter(col("__batch") === b)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
 
     BandStore.importCorpus(frame((0 until 20).map(i => (i.toLong, text("a", i)))), 0L, store)
     downgradeStore(store)
@@ -70,18 +65,18 @@ class Round13Spec extends SparkSpec {
     // 0 < tombstone 1) — the pre-fix code threw AnalysisException here
     // (__obatch unresolvable on the legacy schema)
     BandStore.admitBatch(frame(Seq((100L, text("a", 3)))), 2L, store, admitted)
-    assert(admittedIn(2L) == Set(100L),
+    assert(admittedIn(spark, admitted, 2L) == Set(100L),
       "an evicted legacy doc must stop vetoing — the gate must rank " +
         "legacy rows by their partition batch, not throw")
     // …while every retained legacy doc keeps vetoing (mixed store now:
     // legacy batch-0 files next to post-upgrade batch-2 files)
     BandStore.admitBatch(frame(Seq((101L, text("a", 5)))), 3L, store, admitted)
-    assert(admittedIn(3L).isEmpty, "a retained legacy doc must keep vetoing")
+    assert(admittedIn(spark, admitted, 3L).isEmpty, "a retained legacy doc must keep vetoing")
     // the RE-ADMITTED doc's post-upgrade rows (__obatch=2 > tombstone 1)
     // must veto a later copy even though the store is mixed — the
     // pre-fix null-fails-the-gate hazard on exactly this shape
     BandStore.admitBatch(frame(Seq((102L, text("a", 3)))), 4L, store, admitted)
-    assert(admittedIn(4L).isEmpty,
+    assert(admittedIn(spark, admitted, 4L).isEmpty,
       "a re-admitted doc's rows must outrank the old tombstone in a mixed store")
 
     // compaction folds legacy + post-upgrade batches without throwing
@@ -103,7 +98,7 @@ class Round13Spec extends SparkSpec {
     // decisions unchanged after the migration
     BandStore.admitBatch(frame(Seq((103L, text("a", 3)), (104L, text("q", 1)))),
       5L, store, admitted)
-    assert(admittedIn(5L) == Set(104L),
+    assert(admittedIn(spark, admitted, 5L) == Set(104L),
       "post-migration: the re-admitted doc still vetoes, fresh text admits")
     // the PARTIAL compact above must NOT have upgraded the epoch (legacy
     // batches can survive above minLiveBatch in general)…
@@ -121,7 +116,7 @@ class Round13Spec extends SparkSpec {
     // and decisions are unchanged on the now plain-read store
     BandStore.admitBatch(frame(Seq((105L, text("a", 5)), (106L, text("z", 9)))),
       6L, store, admitted)
-    assert(admittedIn(6L) == Set(106L),
+    assert(admittedIn(spark, admitted, 6L) == Set(106L),
       "post-upgrade: retained docs veto, fresh text admits")
   }
 
@@ -276,15 +271,11 @@ class Round13Spec extends SparkSpec {
     val go = s"$root/go"
     val outcome = s"$root/outcome"
     val log = new java.io.File(s"$root/subprocess.log")
-    val cmd = Sessions.childJvm("graft.FenceRaceMain", dir, store, ready, go, outcome)
-    val proc = new ProcessBuilder(cmd: _*)
-      .redirectErrorStream(true)
-      .redirectOutput(log)
-      .start()
+    val proc = ChildJvm.start(log, "graft.FenceRaceMain", dir, store, ready, go, outcome)
     try {
       val bootDeadline = System.currentTimeMillis() + 120000L
       while (!java.nio.file.Files.exists(java.nio.file.Paths.get(ready))) {
-        assert(proc.isAlive, s"subprocess died during boot — ${readLog(log)}")
+        assert(proc.isAlive, s"subprocess died during boot — ${ChildJvm.logTail(log)}")
         assert(System.currentTimeMillis() < bootDeadline, "subprocess boot timeout")
         Thread.sleep(50)
       }
@@ -301,9 +292,7 @@ class Round13Spec extends SparkSpec {
           case e @ (_: IllegalStateException | _: IllegalArgumentException) =>
             Left(e.getMessage)
         }
-      assert(proc.waitFor(180, java.util.concurrent.TimeUnit.SECONDS),
-        "subprocess did not finish")
-      assert(proc.exitValue() == 0, s"subprocess crashed — ${readLog(log)}")
+      ChildJvm.awaitSuccess(proc, 180, log, "fence-race subprocess")
       val theirs = java.nio.file.Files.readString(java.nio.file.Paths.get(outcome))
       val outcomes = Seq(mine.fold(m => s"conflict:$m", m => s"ok:$m"), theirs)
       // invariant 1: every loss is LOUD — a conflict names the fence,
@@ -311,14 +300,12 @@ class Round13Spec extends SparkSpec {
       outcomes.foreach { o =>
         assert(o.startsWith("ok:") ||
           (o.startsWith("conflict:") && (o.contains("concurrent writer") ||
-            o.contains("store advanced"))), s"unadjudicated outcome: $o; log ${readLog(log)}")
+            o.contains("store advanced"))), s"unadjudicated outcome: $o; log ${ChildJvm.logTail(log)}")
       }
       // invariant 2: at least one racer succeeded
       assert(outcomes.exists(_.startsWith("ok:")), s"both failed: $outcomes")
       // invariant 3: generation numbers unique — no buried publish
-      val ks = Option(new java.io.File(store).listFiles()).getOrElse(Array.empty)
-        .map(_.getName).filter(_.startsWith("gen=")).toSeq
-        .map(_.stripPrefix("gen=").takeWhile(_ != '_').toLong)
+      val ks = generations(store)
       assert(ks.distinct.size == ks.size, s"duplicate generations: $ks")
       // invariant 4: a retry from the settled state converges, and the
       // converged labels equal a from-scratch build of the same corpus
@@ -334,10 +321,6 @@ class Round13Spec extends SparkSpec {
       if (proc.isAlive) proc.destroyForcibly()
     }
   }
-
-  private def readLog(f: java.io.File): String =
-    try scala.io.Source.fromFile(f).mkString.takeRight(800)
-    catch { case _: Throwable => "(no log)" }
 
   // ---------------------------------------------------------------
   // ADVICE r12 (low): the same-stream SHORT lease must require a

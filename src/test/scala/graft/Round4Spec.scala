@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.streaming.{BandStore, Streams}
+import Fixtures.{doc, docSchema, dropLatestCommit}
 
 /** Round-4 pins: bucket-pruned band-store probe, greedy within-batch
   * admission, and crash-replay idempotence of the foreachBatch sinks
@@ -26,22 +27,6 @@ class Round4Spec extends SparkSpec {
   private def contentOf(dir: String, cols: String*): Seq[String] = {
     val df = spark.read.parquet(dir)
     df.select(cols.map(col): _*).collect().map(_.toString).toSeq.sorted
-  }
-
-  /** Simulate a crash between the foreachBatch effects and the commit:
-    * the commit record for the latest batch never lands. The Hadoop
-    * local FS keeps a `.N.crc` checksum sibling per commit file — a real
-    * crash writes neither, so both go.
-    */
-  private def dropLatestCommit(ckpt: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    val commits = Paths.get(ckpt, "commits")
-    val latest = Files.list(commits).iterator().asScala
-      .map(_.getFileName.toString)
-      .filter(n => n.forall(_.isDigit))
-      .maxBy(_.toLong)
-    Files.delete(commits.resolve(latest))
-    Files.deleteIfExists(commits.resolve(s".$latest.crc"))
   }
 
   test("T11 probe reads only the touched __bb buckets of the band store (partition pruning)") {
@@ -398,10 +383,7 @@ class Round4Spec extends SparkSpec {
     val store = tmpDir("dcstore")
     val admitted = tmpDir("dcadmit")
     val ckpt = tmpDir("dcck")
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType)))
     def src() = spark.readStream.schema(docSchema).json(topic)
-    def doc(id: Long, text: String) = s"""{"doc_id":$id,"text":"$text"}"""
     Files.writeString(Paths.get(s"$topic/b1.json"),
       Seq(doc(1, toksA()), doc(2, (1 to 50).map(i => s"w$i").mkString(" "))).mkString("\n"))
     Streams.dedupAdmitSink(src(), store, admitted, ckpt).awaitTermination(60000)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, Similarity}
 import graft.streaming.BandStore
+import Fixtures.{admittedIds, admittedIn, template, tokens}
 
 /** Round-7 pins: the LSH boilerplate-skew guard (exact pre-collapse +
   * per-bucket population cap, VERDICT r6 item 1), age-based store
@@ -12,22 +13,6 @@ import graft.streaming.BandStore
   * convergence bound (item 6).
   */
 class Round7Spec extends SparkSpec {
-
-  private def writeDocs(docs: Seq[(Long, String)], dir: String): Unit = {
-    import spark.implicits._
-    docs.toDF("doc_id", "text")
-      .withColumn("source", lit("s"))
-      .withColumn("lang", lit("en"))
-      .withColumn("n_chars", length(col("text")).cast("long"))
-      .repartition(4)
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-  }
-
-  private def tokens(prefix: String, n: Int): String =
-    (0 until n).map(i => s"$prefix$i").mkString(" ")
-
-  // templates use disjoint vocabularies so cross-template Jaccard is 0
-  private def template(t: Int): String = tokens(s"t${t}w", 12)
 
   test("X2 skew guard: planted boilerplate corpus — guarded LSH equals exact all-pairs") {
     // 3 templates × 12 identical copies (exact pre-collapse territory),
@@ -108,8 +93,6 @@ class Round7Spec extends SparkSpec {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet").persist()
     def batchOf(b: Int): DataFrame =
       docs.filter(col("doc_id") >= b * 125 && col("doc_id") < (b + 1) * 125)
-    def admitted(out: String): Set[Long] =
-      spark.read.parquet(out).select("doc_id").collect().map(_.getLong(0)).toSet
 
     // serial reference: 4 batches, no compaction
     val (storeA, outA) = (tmpDir("r7-serA"), tmpDir("r7-serA-out"))
@@ -138,7 +121,7 @@ class Round7Spec extends SparkSpec {
     compactor.join()
     assert(retries == 0,
       s"manifest-pinned probes must not race retirement: $retries retries consumed")
-    assert(admitted(outA) == admitted(outB),
+    assert(admittedIds(spark, outA) == admittedIds(spark, outB),
       "admission decisions must be interleaving-invariant under compaction")
     // live batches were never touched: 2 and 3 still sit in their own
     // partitions; 0 and 1 were merged into the base generation
@@ -151,7 +134,7 @@ class Round7Spec extends SparkSpec {
     val (o2a, o2b) = (tmpDir("r7-probeA"), tmpDir("r7-probeB"))
     BandStore.admitBatch(probe, 9L, storeA, o2a)
     BandStore.admitBatch(probe, 9L, storeB, o2b)
-    assert(admitted(o2a) == admitted(o2b), "post-compaction probe decisions diverged")
+    assert(admittedIds(spark, o2a) == admittedIds(spark, o2b), "post-compaction probe decisions diverged")
     docs.unpersist()
   }
 
@@ -181,9 +164,7 @@ class Round7Spec extends SparkSpec {
     // once, the fresh doc is admitted — candidates/drops are distinct'd
     val b2 = Seq((500L, tokens("da0", 10)), (501L, tokens("zw", 10)))
     BandStore.admitBatch(frame(b2), 2L, store, out)
-    def admitted2: Set[Long] = spark.read.parquet(out)
-      .filter(col("__batch") === 2L).select("doc_id")
-      .collect().map(_.getLong(0)).toSet
+    def admitted2: Set[Long] = admittedIn(spark, out, 2L)
     assert(admitted2 == Set(501L), s"debris changed a decision: $admitted2")
     // compaction below the live watermark purges the trash and merges
     // batches {−1, 0, 1} into one new base generation with no duplicate

@@ -86,9 +86,7 @@ class Round9Spec extends SparkSpec {
       val rows = (0L until 40L).map(i =>
         (i, (0 until 30).map(t => s"w${i}_$t").mkString(" ")))
         .filterNot { case (i, _) => drop.contains(i) }
-      rows.toDF("doc_id", "text")
-        .withColumn("source", lit("s")).withColumn("lang", lit("en"))
-        .withColumn("n_chars", length(col("text")).cast("long"))
+      documentsOf(rows)
     }
     corpus(None).write.mode("overwrite").parquet(s"$dir/documents.parquet")
     graft.operators.LabelStore.build(spark, dir, store)

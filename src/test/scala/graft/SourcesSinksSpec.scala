@@ -148,151 +148,6 @@ class SourcesSinksSpec extends SparkSpec {
     assert(html.contains("<td>consumed</td><td>100</td>"))
   }
 
-  test("S10: ORC round-trips schema and values bit-exactly") {
-    val src = graft.engine.Tables.supplier(spark, sfDir)
-    val landing = tmpDir("graft-orc-test")
-    graft.sources.Sinks.writeOrc(src, landing)
-    val back = graft.sources.Sources.readOrc(spark, landing)
-    assert(back.schema == src.schema, s"${back.schema} != ${src.schema}")
-    assert(back.exceptAll(src).count() == 0 && src.exceptAll(back).count() == 0)
-  }
-
-  private def localFs(): org.apache.hadoop.fs.RawLocalFileSystem = {
-    val fs = new org.apache.hadoop.fs.RawLocalFileSystem()
-    fs.initialize(java.net.URI.create("file:///"), new org.apache.hadoop.conf.Configuration())
-    fs
-  }
-
-  test("Sinks.swapIn: a throwing swap rename restores the original; a false swap rename still does") {
-    import org.apache.hadoop.fs.Path
-    val root = tmpDir("r12-swap")
-    val path = new Path(s"$root/store")
-    val staging = new Path(s"$root/.store-compact-x")
-    val old = new Path(s"$root/.store-old-x")
-    def seed(): Unit = {
-      // the state compact() reaches before the swap: original moved
-      // aside to `old`, rewrite complete in `staging`, store path absent
-      new java.io.File(old.toString).mkdirs()
-      java.nio.file.Files.write(java.nio.file.Paths.get(old.toString, "data"),
-        "original".getBytes("UTF-8"))
-      new java.io.File(staging.toString).mkdirs()
-    }
-    seed()
-    val plain = localFs()
-    val throwing = new org.apache.hadoop.fs.RawLocalFileSystem() {
-      override def rename(src: Path, dst: Path): Boolean =
-        if (src.getName == staging.getName) throw new java.io.IOException("injected rename failure")
-        else super.rename(src, dst)
-    }
-    throwing.initialize(java.net.URI.create("file:///"), new org.apache.hadoop.conf.Configuration())
-    val e = intercept[java.io.IOException] {
-      graft.sources.Sinks.swapIn(throwing, staging, path, old)
-    }
-    assert(e.getMessage == "injected rename failure")
-    assert(plain.exists(path) &&
-      java.nio.file.Files.exists(java.nio.file.Paths.get(path.toString, "data")),
-      "a throwing swap must put the original back at the store path")
-    // the false branch keeps its restore too
-    plain.delete(path, true)
-    seed()
-    val refusing = new org.apache.hadoop.fs.RawLocalFileSystem() {
-      override def rename(src: Path, dst: Path): Boolean =
-        if (src.getName == staging.getName) false else super.rename(src, dst)
-    }
-    refusing.initialize(java.net.URI.create("file:///"), new org.apache.hadoop.conf.Configuration())
-    val e2 = intercept[IllegalStateException] {
-      graft.sources.Sinks.swapIn(refusing, staging, path, old)
-    }
-    assert(e2.getMessage.contains("could not swap"), e2.getMessage)
-    assert(plain.exists(path), "a refused swap must put the original back")
-  }
-
-  test("upsert-store geometry: non-default bucket count recorded at creation, honored by later merges, preserved across compaction") {
-    import graft.sources.Sinks
-    val root = tmpDir("r12-ugeo")
-    val store = s"$root/store"
-    withConf(Sinks.UpsertBucketsConf -> "4") {
-      Sinks.upsertByKey(
-        (0L until 40L).map(i => (i, i, s"v$i")).toDF("off", "id", "v"),
-        "id", "off", store)
-    }
-    // the file is a dot-SIBLING: the store root is the initial write's
-    // overwrite target and compact's swap victim
-    def geoFile = java.nio.file.Paths.get(root, ".store.geometry")
-    assert(java.nio.file.Files.readString(geoFile) == "upsertBuckets=4")
-    val buckets = new java.io.File(store).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("__bucket=")).map(_.getName)
-    assert(buckets.length <= 4 && buckets.nonEmpty, s"layout: ${buckets.toSeq}")
-    // a later merge WITHOUT the conf must bucket by the recorded count —
-    // a session-default pmod would route keys to partitions the store
-    // never reads back, duplicating them forever
-    Sinks.upsertByKey(Seq((100L, 3L, "v3b")).toDF("off", "id", "v"), "id", "off", store)
-    val got = spark.read.parquet(store).select("id", "v").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toMap
-    assert(got.size == 40 && got(3L) == "v3b",
-      "the merge must upsert under the recorded geometry, not duplicate")
-    // compaction swaps the whole store dir — the sibling file survives
-    Sinks.compact(spark, store, targetFileBytes = 1L << 30)
-    assert(java.nio.file.Files.readString(geoFile) == "upsertBuckets=4",
-      "compaction must not cost the store its recorded geometry")
-    Sinks.upsertByKey(Seq((200L, 7L, "v7b")).toDF("off", "id", "v"), "id", "off", store)
-    val after = spark.read.parquet(store).select("id", "v").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toMap
-    assert(after.size == 40 && after(7L) == "v7b",
-      "post-compaction merges must still honor the recorded geometry")
-  }
-
-  test("upsert-store geometry: deleting the store retires its recorded geometry — a recreated store takes the current confs") {
-    import graft.sources.Sinks
-    val root = tmpDir("r13-ugeo-recreate")
-    val store = s"$root/store"
-    def geoFile = java.nio.file.Paths.get(root, ".store.geometry")
-    withConf(Sinks.UpsertBucketsConf -> "4") {
-      Sinks.upsertByKey(
-        (0L until 40L).map(i => (i, i, s"v$i")).toDF("off", "id", "v"),
-        "id", "off", store)
-    }
-    assert(java.nio.file.Files.readString(geoFile) == "upsertBuckets=4")
-    // the store dies; its sibling geometry file survives by layout
-    def del(x: java.io.File): Unit = {
-      Option(x.listFiles()).getOrElse(Array.empty).foreach(del); x.delete()
-    }
-    del(new java.io.File(store))
-    assert(java.nio.file.Files.exists(geoFile),
-      "precondition: the sibling survives store deletion — that is the hazard"
-    )
-    // r14 lease semantics (ADVICE r13): a dead record is only
-    // force-replaced once it is OLDER than the restart lease — a fresh
-    // different-value record is presumed a racing live first writer and
-    // ADOPTED (the convergence that stops racers leaving record/layout
-    // disagreeing). Age the debris past the lease, as a real recreate
-    // would be.
-    def ageRecord(): Unit = java.nio.file.Files.setLastModifiedTime(geoFile,
-      java.nio.file.attribute.FileTime.fromMillis(
-        System.currentTimeMillis() - graft.operators.StoreDirs.restartFenceMs - 60000L))
-    ageRecord()
-    // a recreated store under a DIFFERENT conf must stamp fresh, not
-    // inherit the dead store's count
-    withConf(Sinks.UpsertBucketsConf -> "8") {
-      Sinks.upsertByKey(
-        (0L until 40L).map(i => (i, i, s"w$i")).toDF("off", "id", "v"),
-        "id", "off", store)
-    }
-    assert(java.nio.file.Files.readString(geoFile) == "upsertBuckets=8",
-      "a fresh store must take the current confs, not the dead store's record")
-    val buckets = new java.io.File(store).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("__bucket=")).map(_.getName)
-    assert(buckets.length > 4 && buckets.length <= 8,
-      s"the recreated layout must be 8-bucket: ${buckets.toSeq.sorted}")
-    // and with NO conf set, a recreated store falls back to the default
-    del(new java.io.File(store))
-    ageRecord()
-    Sinks.upsertByKey(Seq((1L, 1L, "x")).toDF("off", "id", "v"), "id", "off", store)
-    assert(java.nio.file.Files.readString(geoFile)
-      == s"upsertBuckets=${Sinks.UpsertBuckets}",
-      "an unconfigured fresh store must take the default, not the record")
-  }
-
   test("upsert-store geometry: a FRESH foreign record is adopted (racing first writers converge), and the layout matches it") {
     import graft.sources.Sinks
     val root = tmpDir("r14-ugeo-race")

@@ -25,6 +25,17 @@ abstract class SparkSpec extends AnyFunSuite {
       .withColumn("n_chars", length(col("text")).cast("long"))
   }
 
+  /** Admission-batch rows as a `(doc_id, text)` frame. */
+  protected def frame(docs: Seq[(Long, String)]): DataFrame = {
+    import spark.implicits._
+    docs.toDF("doc_id", "text")
+  }
+
+  /** A label store's `(doc_id, label)` pairs. */
+  protected def labelSet(store: String): Set[(Long, Long)] =
+    graft.operators.LabelStore.read(spark, store).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+
   /** Write `docs` as `<dir>/documents.parquet` in four files. */
   protected def writeDocs(docs: Seq[(Long, String)], dir: String): Unit =
     documentsOf(docs).repartition(4)

@@ -3,8 +3,6 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-import graft.engine.Tables
-import graft.operators.Temporal
 import graft.streaming.{BandStore, Streams}
 import Fixtures.{doc, docSchema, dropLatestCommit}
 
@@ -308,75 +306,5 @@ class StreamingSpec extends SparkSpec {
     val rows = spark.sql("SELECT * FROM running ORDER BY user_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(rows == Seq((1L, 2L, 1L), (2L, 1L, 2L)))
-  }
-
-  test("T5 upsert sink crash recovery: lost checkpoint commit replays to the uninterrupted state") {
-    import org.apache.spark.sql.types._
-    val lines = Seq(msg(10, 1, "a", 1.0, 1), msg(11, 1, "b", 1.0, 1), msg(12, 2, "c", 1.0, 1))
-
-    // uninterrupted run
-    val storeA = tmpDir("storeA")
-    Streams.upsertSink(Streams.subscribe(spark, writeTopic(lines)),
-      "user_id", "event_id", storeA, tmpDir("ckA")).awaitTermination(60000)
-
-    // crashed run: batch effects land, then the commit record is lost
-    // (crash between the foreachBatch body and the checkpoint commit);
-    // restart must replay the batch against the already-merged store
-    val storeB = tmpDir("storeB")
-    val topicB = writeTopic(lines)
-    val ckB = tmpDir("ckB")
-    Streams.upsertSink(Streams.subscribe(spark, topicB),
-      "user_id", "event_id", storeB, ckB).awaitTermination(60000)
-    dropLatestCommit(ckB)
-    Streams.upsertSink(Streams.subscribe(spark, topicB),
-      "user_id", "event_id", storeB, ckB).awaitTermination(60000)
-
-    def content(dir: String) = spark.read.parquet(dir)
-      .select("event_id", "user_id", "event_type").collect().map(_.toString).toSeq.sorted
-    assert(content(storeB) == content(storeA),
-      "replayed store diverged from the uninterrupted run")
-    assert(spark.read.parquet(storeB).groupBy("user_id").count()
-      .filter(col("count") > 1).count() == 0, "replay must not duplicate keys")
-  }
-
-  test("T8 parity: batch gap-sessionization equals streaming sessionize on the same events slice") {
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    // feed the fixture slice to the streaming operator as (user, epochUs):
-    // the stream gaps on the same integral microseconds the batch twin
-    // cuts on, so the two formulations must land on identical sessions
-    val slice = Tables.events(spark, sfDir).filter(col("user_id") < 15)
-      .select(col("user_id"), Tables.epochUs(col("ts")).as("us"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    val dir = tmpDir("r9-sess-parity")
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/p.json"),
-      slice.map { case (u, us) =>
-        s"""{"event_id":$us,"user_id":$u,"event_type":"c","value":1.0,"k":1}"""
-      }.mkString("\n"))
-    val stream = graft.streaming.Streams.subscribe(spark, dir)
-    val out = graft.streaming.Streams.sessionize(spark, stream,
-      gapEvents = 1800L * 1000000L)
-    val q = out.writeStream.format("memory").queryName("sess_parity")
-      .outputMode(OutputMode.Append()).trigger(Trigger.AvailableNow()).start()
-    assert(q.awaitTermination(120000),
-      "streaming sessionize query did not finish within 120s")
-    val streamed = spark.sql("SELECT * FROM sess_parity").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-
-    val batch = Temporal.t8SessionizeBatch(spark, sfDir)
-      .filter(col("user_id") < 15)
-      .select(col("user_id"), col("session_no"),
-        Tables.epochUs(col("session_start")).as("s"),
-        Tables.epochUs(col("session_end")).as("e"), col("n_events"))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-    // the streaming operator emits a session only when the NEXT one opens
-    // (each user's final session stays in state) — so streamed sessions
-    // must equal the batch sessions minus each user's last
-    val lastNo = batch.groupBy(_._1).view.mapValues(_.map(_._2).max).toMap
-    val expected = batch.filter(s => s._2 != lastNo(s._1))
-      .map(s => (s._1, s._3, s._4, s._5)).toSet
-    assert(streamed == expected,
-      s"streaming/batch sessionization drift: ${streamed.diff(expected)} vs ${expected.diff(streamed)}")
-    assert(expected.nonEmpty, "parity slice must exercise closed sessions")
   }
 }

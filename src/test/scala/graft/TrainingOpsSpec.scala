@@ -148,139 +148,4 @@ class TrainingOpsSpec extends SparkSpec {
       .map(r => r.getString(0) -> r.getDouble(2)).toMap
     rows.foreach(r => assert(r.getDouble(1) == exact(r.getString(0))))
   }
-
-  test("X6c: packing conserves docs and tokens; bins start at 0 per shard") {
-    val docs = graft.engine.Tables.documents(spark, sfDir)
-      .select(size(split(col("text"), " ")).cast("long").as("n"))
-      .agg(count(lit(1)), sum(col("n"))).as[(Long, Long)].head()
-    val packed = Sampling.x6PackSequences(spark, sfDir)
-    val (nDocs, nTokens) = packed
-      .agg(sum(col("n_docs")), sum(col("bin_tokens"))).as[(Long, Long)].head()
-    assert((nDocs, nTokens) == docs, "packing must be a partition of the corpus")
-    val badStart = packed.groupBy(col("lang"), col("source"))
-      .agg(min(col("bin_id")).as("m")).filter(col("m") =!= 0).count()
-    assert(badStart == 0, "every shard's first bin must be 0")
-    assert(packed.filter(col("n_docs") < 1).count() == 0)
-  }
-
-  test("X6d: mixture keeps every doc of rate-1.0 sources and thins the rest deterministically") {
-    val m = graft.operators.Sampling.x6Mixture(spark, sfDir)
-      .select("source", "n_docs", "n_kept").as[(String, Long, Long)].collect()
-    val full = m.filter(r => Set("src0", "src1", "src2", "src3", "src4")(r._1))
-    assert(full.nonEmpty && full.forall(r => r._2 == r._3))
-    val thinned = m.filter(r => !Set("src0", "src1", "src2", "src3", "src4")(r._1))
-    assert(thinned.forall(r => r._3 < r._2) && thinned.exists(r => r._3 > 0))
-    // deterministic: a second run draws the identical sample
-    val again = graft.operators.Sampling.x6Mixture(spark, sfDir)
-      .select("source", "n_docs", "n_kept").as[(String, Long, Long)].collect()
-    assert(m.sortBy(_._1).sameElements(again.sortBy(_._1)))
-  }
-
-  test("X6e: export shards partition the corpus with dense per-shard positions") {
-    val sh = graft.operators.Sampling.x6ExportShards(spark, sfDir)
-      .select("shard", "pos", "doc_id").as[(Long, Int, Long)].collect()
-    val nDocs = graft.engine.Tables.documents(spark, sfDir).count()
-    assert(sh.length == nDocs && sh.map(_._3).distinct.length == nDocs)
-    sh.groupBy(_._1).foreach { case (_, rows) =>
-      assert(rows.map(_._2).sorted.sameElements(1 to rows.length))
-    }
-    assert(sh.map(_._1).distinct.length == 8)
-  }
-
-  test("X4h: bigram log-likelihoods are non-positive and bigram counts add up") {
-    val lm = TextAnalysis.x4NgramLm(spark, sfDir)
-    assert(lm.filter(col("avg_logp") > 0).count() == 0,
-      "MLE bigram probability cannot exceed 1")
-    val fromLm = lm.agg(sum(col("n_bigrams")), count(lit(1))).as[(Long, Long)].head()
-    val expected = graft.engine.Tables.documents(spark, sfDir)
-      .select(size(split(col("text"), " ")).cast("long").as("n"))
-      .filter(col("n") >= 2)
-      .agg(sum(col("n") - 1), count(lit(1))).as[(Long, Long)].head()
-    assert(fromLm == expected, "each doc contributes exactly n_tokens - 1 bigrams")
-  }
-
-  test("X4j: repetition signals match hand-computed values; fixture keeps are mixed") {
-    // doc 1 "a b a b a b a b": 7 bigrams ("a b"×4, "b a"×3) → top
-    // 4/7 ≈ 0.571429; all 6 trigrams occur ≥2× → dup mass 1.0 → drop.
-    // doc 2: 30 distinct tokens → top bigram 1/29 ≈ 0.034483, zero
-    // duplicated trigrams → keep. doc 0 (2 tokens) is under the 3-token
-    // floor and must be absent.
-    val docs = Seq(
-      (0L, "a b"),
-      (1L, Seq.fill(4)("a b").mkString(" ")),
-      (2L, tokens("w", 30)))
-    val dir = tmpDir("r7-rep")
-    writeDocs(docs, dir)
-    val out = graft.operators.TextAnalysis.x4Repetition(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2), r.getBoolean(3)))
-    assert(out.toSeq == Seq(
-      (1L, 0.571429, 1.0, false),
-      (2L, 0.034483, 0.0, true)), s"got ${out.toSeq}")
-    // on the fixture corpus the 0.05 gates genuinely split the docs —
-    // the filter is a decision, not a constant
-    val fxDf = graft.operators.TextAnalysis.x4Repetition(spark, sfDir)
-    val fx = fxDf.groupBy(col("keep")).count().collect().map(r => r.getBoolean(0)).toSet
-    assert(fx == Set(true, false), s"fixture keep outcomes: $fx")
-    // plan pins: the scan reads only (doc_id, text) — no n_chars/source/
-    // lang columns for a 2-column consumer — and the gram aggregate is
-    // two-phase (partial map-side before its exchange), so a repetitive
-    // doc's gram rows collapse BEFORE they shuffle
-    val p = fxDf.queryExecution.explainString(
-      org.apache.spark.sql.execution.FormattedMode)
-    assert(p.contains("ReadSchema: struct<doc_id:bigint,text:string>"),
-      p.linesIterator.filter(_.contains("ReadSchema")).mkString("\n"))
-    val exec = fxDf.queryExecution.executedPlan.toString
-    assert("HashAggregate".r.findAllIn(exec).size >= 4, exec.take(800))
-  }
-
-  test("X4k prep funnel: every stage fires on a planted corpus, first-failure attribution") {
-    // one doc per stage, constructed to fail EXACTLY its own gate:
-    //   0 short: 2 tokens
-    //   1 quality: pure filler — diversity 2/8, filler ratio 1
-    //   2 repetition: 90 unique tokens + 'x y' ×6 → quality 0.97 but
-    //     top bigram 6/101 ≈ 0.0594 > 0.05
-    //   3/4 identical good text → min-id 3 keeps, 4 is exact_dup
-    //   5 unique good text → keep
-    val good = tokens("k", 60)
-    val docs = Seq(
-      (0L, "a b"),
-      (1L, Seq.fill(4)("the a").mkString(" ")),
-      (2L, tokens("q", 90) + " " + Seq.fill(6)("x y").mkString(" ")),
-      (3L, good),
-      (4L, good),
-      (5L, tokens("u", 60)))
-    val dir = tmpDir("r7-funnel")
-    writeDocs(docs, dir)
-    val out = graft.operators.TextAnalysis.x4PrepFunnel(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getString(4), r.getBoolean(5)))
-    assert(out.toSeq == Seq(
-      (0L, "short", false),
-      (1L, "quality", false),
-      (2L, "repetition", false),
-      (3L, "keep", true),
-      (4L, "exact_dup", false),
-      (5L, "keep", true)), s"got ${out.toSeq}")
-    // a gate a doc never reaches must not relabel it: doc 4's text is
-    // also high-quality and low-repetition, so only the dedup stage can
-    // claim it — and doc 3, bit-identical, must stay 'keep'
-    val fx = graft.operators.TextAnalysis.x4PrepFunnel(spark, sfDir)
-    val stages = fx.groupBy(col("stage")).count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    // the fixture corpus (all-distinct, no shorts) must split on the
-    // per-doc gates and keep a real remainder — the funnel is a
-    // decision, not a constant
-    assert(stages.keySet.subsetOf(Set("short", "quality", "repetition", "exact_dup", "keep")))
-    assert(stages.getOrElse("keep", 0L) > 0 &&
-      (stages.getOrElse("quality", 0L) > 0 || stages.getOrElse("repetition", 0L) > 0),
-      s"fixture stages: $stages")
-    // scale pins: the dedup stage shuffles the 128-bit digest, never the
-    // raw text — the window's partition expression is md5-keyed — and
-    // the scan reads only (doc_id, text) despite the 5-column table
-    val p = fx.queryExecution.executedPlan.toString
-    assert(p.contains("md5"), p.take(800))
-    val fmt = fx.queryExecution.explainString(
-      org.apache.spark.sql.execution.FormattedMode)
-    assert(fmt.contains("ReadSchema: struct<doc_id:bigint,text:string>"),
-      fmt.linesIterator.filter(_.contains("ReadSchema")).mkString("\n"))
-  }
 }
