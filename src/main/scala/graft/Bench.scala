@@ -1,4 +1,8 @@
 package graft
+
+import org.apache.spark.sql.SparkSession
+import graft.engine.Tables
+
 object Bench {
   /** The contract line's parallelism fields. `cpus` stays a JSON number
     * when it is one; any other width (`SPARK_GRAFT_CPUS="*"`) is written
@@ -9,19 +13,23 @@ object Bench {
     s""""cpus":${cpus.toIntOption.fold(str(cpus))(_.toString)},"default_parallelism":$defaultParallelism,"master":${str(master)}"""
   }
 
+  /** Warm the session once before timing, through the read the queries
+    * take: file listing, footer reads and scan-path JIT otherwise land
+    * entirely on whichever query happens to run first.
+    */
+  private[graft] def warmUp(spark: SparkSession, sfDir: String): Unit =
+    Seq("region", "nation", "customer", "supplier", "part", "orders",
+      "lineitem", "events", "documents", "embeddings").foreach { t =>
+      try Tables.table(spark, sfDir, t).count()
+      catch { case _: Throwable => () }
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse(Sessions.CpusEnv, "4")
     val spark = Sessions.start(Sessions.builder(Sessions.width(4))
       .config("spark.sql.adaptive.enabled", "true"), "WARN")
-    // warm the session once before timing: file-index + parquet footer
-    // reads and scan-path JIT otherwise land entirely on whichever query
-    // happens to run first
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "events", "documents", "embeddings").foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").count()
-      catch { case _: Throwable => () }
-    }
+    warmUp(spark, sfDir)
     // optional args = subset of query names to run (local iteration probe);
     // an unknown name is an ERROR — silently dropping it would write a
     // valid-looking artifact benchmarking nothing

@@ -25,11 +25,7 @@ object ProfileQuery {
     val spark = Sessions.start(Sessions.builder(Sessions.width(32))
       .config("spark.sql.adaptive.enabled", "true"), "WARN")
     // same warm-up as Bench so span attribution matches bench conditions
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "events", "documents", "embeddings").foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").count()
-      catch { case _: Throwable => () }
-    }
+    Bench.warmUp(spark, sfDir)
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, JobRow]()
     val stageToJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
     val listener = new SparkListener {

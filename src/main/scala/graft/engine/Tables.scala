@@ -1,37 +1,45 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.io.FileNotFoundException
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Column, DataFrame, DataFrameReader, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Fixture catalog (FIXTURES.md) with a pinned schema contract.
+/** Fixture catalog (FIXTURES.md) with a pinned schema contract, and the
+  * engine's one parquet read.
   *
-  * Tables are driver-generated Parquet at `$dir/<name>.parquet`. Parquet is
-  * self-describing, but the footers are NOT under this repo's control: a
-  * driver-side writer change between rounds silently flipped `events.ts`
-  * from `TIMESTAMP(NANOS, adjustedToUTC)` to `TIMESTAMP_NTZ(µs)` and took
-  * out an operator with zero code churn. So every read now passes through
-  * [[Tables.checked]], which asserts each column against the FIXTURES.md
-  * schema and fails loudly — naming the table and column — on any future
-  * drift, in ONE place instead of as a scattered analysis error.
+  * Tables are Parquet at `$dir/<name>.parquet`. Every read resolves its
+  * schema from one parquet footer, read on the driver ([[Tables.parquet]]):
+  * no Spark job runs to infer it. The footer is the one file Spark's own
+  * inference reads with `mergeSchema` off, converted under the reading
+  * session's SQL conf, so the frame's schema is the one an inferring read
+  * would give.
   *
-  * Event-time columns are the one family where the footer legitimately
-  * varies across driver regenerations, and the correctness oracle (DuckDB)
-  * reads the SAME footers directly. Hash symmetry therefore requires
-  * preserving the footer's UTC-adjustedness rather than forcing one Spark
-  * type: a naive/NTZ footer must stay `TimestampNTZType` (DuckDB renders
-  * it `2024-01-01 12:00:00`; a forced cast to `TimestampType` would write
-  * `isAdjustedToUTC` parquet that DuckDB renders `…+00:00` and every
-  * ts-emitting query would hash-mismatch), while an adjusted footer reads
-  * as `TimestampType` and stays that way. The nanos-as-long legacy shape
-  * (read under `spark.sql.legacy.parquet.nanosAsLong=true`) is normalized
-  * to microsecond `TimestampType`, matching the adjusted footers it came
-  * from. Arithmetic that needs an epoch (e.g. session-gap cuts) goes
+  * The footers are not under this repo's control, so every fixture read
+  * also passes through [[Tables.checked]]: each column is asserted against
+  * the FIXTURES.md schema, and any drift fails loudly, naming the table
+  * and column. The schema passed to the reader is the footer's own, never
+  * the pinned one, so a missing column still fails here rather than
+  * reading back as nulls.
+  *
+  * Event-time columns are the one family whose footer legitimately
+  * varies, and the correctness oracle (DuckDB) reads the same footers.
+  * Hash symmetry therefore keeps the footer's UTC-adjustedness: a naive
+  * footer stays `TimestampNTZType` and an adjusted one `TimestampType`.
+  * The nanos-as-long shape (read under
+  * `spark.sql.legacy.parquet.nanosAsLong=true`) is normalized to
+  * microsecond `TimestampType`. Arithmetic that needs an epoch goes
   * through [[Tables.epochUs]], which is total over both timestamp types.
   *
   * At 100 TB these reads are partition-parallel vectorized columnar scans;
-  * the contract is schema-only (no data pass), and filters/projections
-  * applied on top are pushed into the scan by Catalyst.
+  * the schema costs one directory listing per level and one footer, and
+  * filters and projections applied on top are pushed into the scan.
   */
 object Tables {
 
@@ -128,8 +136,61 @@ object Tables {
     * engines make identical cuts. No-op cast for TimestampType. */
   def epochUs(c: Column): Column = unix_micros(c.cast(TimestampType))
 
+  /** Spark's hidden-file rule: `_`/`.`-prefixed names (`_SUCCESS`,
+    * `.crc` sidecars) are not data, `_`-prefixed partition dirs are.
+    */
+  private[graft] def isDataName(nm: String): Boolean =
+    !nm.startsWith(".") && (!nm.startsWith("_") || nm.contains("="))
+
+  /** The data file Spark's schema inference reads with `mergeSchema` off:
+    * the first by full path among the data files under `roots` (a root
+    * that is a file is one). A depth-first walk in path order lists one
+    * dir per level; a dir sorts as `path/`, which is where its files'
+    * paths sort. None when no root exists or none holds a data file.
+    */
+  private def firstDataFile(fs: FileSystem, roots: Seq[Path]): Option[FileStatus] = {
+    def first(sts: Seq[FileStatus]): Option[FileStatus] =
+      sts.sortBy(st => st.getPath.toString + (if (st.isDirectory) "/" else ""))
+        .iterator.map { st =>
+          if (!st.isDirectory) Some(st)
+          else first(fs.listStatus(st.getPath).toSeq.filter(c => isDataName(c.getPath.getName)))
+        }.collectFirst { case Some(f) => f }
+    first(roots.flatMap(p =>
+      try Some(fs.getFileStatus(p)) catch { case _: FileNotFoundException => None }))
+  }
+
+  /** `spark.read.parquet(path)` with its schema resolved on the driver
+    * from the footer Spark's inference would read: no Spark job. The
+    * partition columns of a partitioned dataset stay out of the passed
+    * schema, so partition discovery types them as an inferring read
+    * does. A path with no data file reads without a schema and fails as
+    * such a read fails. Not for `mergeSchema` reads, which need every
+    * footer.
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    parquet(spark, spark.read, Seq(path))
+
+  /** [[parquet]] of several paths through `reader`, which carries the
+    * read's options (such as `basePath`).
+    */
+  private[graft] def parquet(spark: SparkSession, reader: DataFrameReader,
+                             paths: Seq[String]): DataFrame = {
+    val state = spark.sessionState
+    val conf = state.newHadoopConf()
+    val roots = paths.map(new Path(_))
+    firstDataFile(roots.head.getFileSystem(conf), roots) match {
+      case Some(st) =>
+        val footer = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(st, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        val schema = ParquetFileFormat.readSchemaFromFooter(
+          new Footer(st.getPath, footer), new ParquetToSparkSchemaConverter(state.conf))
+        reader.schema(schema).parquet(paths: _*)
+      case None => reader.parquet(paths: _*)
+    }
+  }
+
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
 
   private def load(s: SparkSession, d: String, name: String): DataFrame =
     checked(table(s, d, name), name)

@@ -1376,7 +1376,7 @@ object Dedup {
         try {
           val admitted = s"$store-admitted"
           BandStore.admitBatch(batch, 2L, store, admitted)
-          s.read.parquet(admitted)
+          Tables.parquet(s, admitted)
             .select(col("doc_id"), col("source"), col("n_chars"))
             .orderBy("doc_id")
             .localCheckpoint()

@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.engine.Tables
 
 /** The generational on-disk format shared by [[IvfStore]], [[LabelStore]]
   * and [[graft.sources.DateStore]]. Each store keeps only its codec (what
@@ -131,14 +132,14 @@ private[graft] final class GenStore(val spark: SparkSession, storeDir: String,
     val w = df.write.mode(SaveMode.Overwrite)
     (if (parts.isEmpty) w else w.partitionBy(parts: _*)).parquet(batchDir.toString)
     val holdsData =
-      try fs.listStatus(batchDir).exists(st => isDataName(st.getPath.getName))
+      try fs.listStatus(batchDir).exists(st => Tables.isDataName(st.getPath.getName))
       catch { case _: java.io.FileNotFoundException => true }
     if (!holdsData) fs.delete(batchDir, true)
   }
 
   /** Batches `[g.base, g.k]` of dataset `name`. */
   def readBatches(name: String, g: Gen): DataFrame =
-    spark.read.parquet(dataset(name).toString)
+    Tables.parquet(spark, dataset(name).toString)
       .filter(col("__batch") >= g.base && col("__batch") <= g.k)
 
   /** The tombstones generation `g` sees, if the dataset holds any batch. */
@@ -221,12 +222,6 @@ private[graft] object GenStore {
 
   private val Name = """gen=(\d+)__n=(\d+)__fp=([0-9a-f]+)(?:__b=(\d+))?(?:__d=(\d+))?""".r
   private val RetiredOrLive = """\.?gen=(\d+)__.*""".r
-
-  /** Spark's own hidden-file rule: `_`/`.`-prefixed names (`_SUCCESS`,
-    * `.crc` sidecars) are not data, `_`-prefixed partition dirs are.
-    */
-  private def isDataName(nm: String): Boolean =
-    !nm.startsWith(".") && (!nm.startsWith("_") || nm.contains("="))
 
   /** `(count, bit_xor(h))` over a digest frame — insensitive to row order
     * and partitioning, and XOR cannot overflow under ANSI mode.

@@ -201,7 +201,7 @@ object IvfStore {
       if (nDelta == 0 || nDelta != nNew + nDel || (nNew > 0 && nDel > 0)) {
         buildVecs(emb, storeDir); return "full"
       }
-      val cent = s.read.parquet(s"${gen.path}/centroids")
+      val cent = Tables.parquet(s, s"${gen.path}/centroids")
       val next = gen.k + 1
 
       if (nDel > 0) {
@@ -291,7 +291,7 @@ object IvfStore {
                                  maxQueryId: Long = 10L): (DataFrame, DataFrame) = {
     val gs = store(s, storeDir)
     val gen = gs.newest
-    val cent = s.read.parquet(s"${gen.path}/centroids")
+    val cent = Tables.parquet(s, s"${gen.path}/centroids")
     val queries = Similarity.normed(s, dir).filter(col("vec_id") < maxQueryId)
       .select(col("vec_id").as("q_id"), col("e").as("qe"), col("norm").as("qnorm"))
     val qCells = Similarity.ivfQueryCells(cent, queries)
@@ -527,7 +527,7 @@ object IvfStore {
       val upIds = classified.select(col("vec_id"))
       val reIds = classified.filter(col("is_restate")).select(col("vec_id"))
       val newVecs = cleaned.join(upIds, Seq("vec_id"), "left_semi")
-      val cent = s.read.parquet(s"${gen.path}/centroids")
+      val cent = Tables.parquet(s, s"${gen.path}/centroids")
       val assigned = Similarity.ivfAssign(Similarity.normedOf(newVecs), cent)
         .localCheckpoint()
       pinned += assigned

@@ -713,7 +713,7 @@ object LabelStore {
     * time.
     */
   def read(s: SparkSession, storeDir: String): DataFrame = {
-    s.read.parquet(store(s, storeDir).newest.path.toString)
+    Tables.parquet(s, store(s, storeDir).newest.path.toString)
   }
 
   /** [[Dedup.x2DedupKeep]] reading the STORE instead of recomputing the

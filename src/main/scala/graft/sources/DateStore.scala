@@ -365,7 +365,7 @@ object DateStore {
     val pred = manifest.groupBy(_._4).map { case (b, rows) =>
       col("__batch") === b && col("event_date").isin(rows.map(_._1): _*)
     }.reduce(_ || _)
-    s.read.parquet(gs.dataset(Days).toString).filter(pred).drop("__batch")
+    Tables.parquet(s, gs.dataset(Days).toString).filter(pred).drop("__batch")
   }
 
   /** The pruned scan [[s11DateRollup]] aggregates — exposed so PlanSpec

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.engine.Tables
 
 /** Sink surface (SURVEY.md §2.5 L1–L9).
   *
@@ -321,7 +322,7 @@ object Sinks {
     val touched = withBucket.select(col("__bucket")).distinct()
       .collect().map(_.getInt(0)).toSeq
     if (touched.isEmpty) return
-    val existingTouched = spark.read.parquet(storePath)
+    val existingTouched = Tables.parquet(spark, storePath)
       .filter(col("__bucket").isin(touched: _*))
     // null-safe (<=>) anti join: a NULL key is still A key — the plain
     // equi anti-join never matches NULL = NULL, so a null-keyed row would
@@ -336,7 +337,7 @@ object Sinks {
     // staging write — so repeated failures don't accumulate orphans
     try {
       merged.write.mode(SaveMode.Overwrite).parquet(staging.toString)
-      spark.read.parquet(staging.toString)
+      Tables.parquet(spark, staging.toString)
         .write.mode(SaveMode.Overwrite)
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("__bucket")
@@ -424,7 +425,7 @@ object Sinks {
     val old = new org.apache.hadoop.fs.Path(
       path.getParent, s".${path.getName}-old-${java.util.UUID.randomUUID}")
     try {
-      val src = spark.read.parquet(dir)
+      val src = Tables.parquet(spark, dir)
       val writer =
         if (partCols.isEmpty) src.repartition(nFiles).write
         else src.repartition(nFiles, partCols.toSeq.map(col): _*)

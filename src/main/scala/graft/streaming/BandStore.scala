@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.engine.Tables
 import graft.operators.Dedup
 
 /** Bucketed MinHash signature/band store backing the streaming dedup
@@ -707,24 +708,22 @@ object BandStore {
     */
   private def readLeaves(spark: SparkSession, dir: String, merge: Boolean,
                          buckets: Option[Set[String]]): DataFrame = {
-    def reader = {
-      val r = spark.read.option("basePath", dir)
-      if (merge) r.option("mergeSchema", "true") else r
-    }
     readManifest(spark, dir) match {
       case Some(leaves) if leaves.nonEmpty =>
         val sel = buckets.fold(leaves)(bs =>
           leaves.filter(_.leaf.forall(bs.contains)))
-        val pick = if (sel.nonEmpty) sel else leaves.take(1)
-        reader.parquet(pick.map(l => s"$dir/${l.relPath}"): _*)
+        val pick = (if (sel.nonEmpty) sel else leaves.take(1)).map(l => s"$dir/${l.relPath}")
+        val reader = spark.read.option("basePath", dir)
+        if (merge) reader.option("mergeSchema", "true").parquet(pick: _*)
+        else Tables.parquet(spark, reader, pick)
       case Some(_) =>
         // manifest present but empty: callers guard on hasBatches, so
         // this is unreachable in the engine — fail like a missing dir
         // would rather than inventing a schema
-        spark.read.parquet(dir)
+        Tables.parquet(spark, dir)
       case None =>
         if (merge) spark.read.option("mergeSchema", "true").parquet(dir)
-        else spark.read.parquet(dir)
+        else Tables.parquet(spark, dir)
     }
   }
 

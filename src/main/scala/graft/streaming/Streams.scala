@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
+import graft.engine.Tables
 
 /** Structured Streaming re-expression of the reference's Kafka
   * client-loop semantics (SURVEY.md §2.6 T1–T7).
@@ -261,7 +262,7 @@ object Streams {
               "of one doc_id — sequence upstream or route through upsertSink " +
               "with a real offset column")
           graft.sources.Sinks.upsertByKey(b, "doc_id", "doc_id", corpusStore)
-          val corpus = b.sparkSession.read.parquet(corpusStore).drop("__bucket")
+          val corpus = Tables.parquet(b.sparkSession, corpusStore).drop("__bucket")
           // lane-scoped fence owner: a hard crash between this lane's
           // fence claim and its publish must not lock the lane's own
           // replay out for a whole lease — micro-batches of one

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 import graft.engine.Tables
@@ -43,7 +44,7 @@ class FixtureContractSpec extends SparkSpec {
     assert(ntz.schema("ts").dataType == TimestampNTZType)
     assert(nanos.schema("ts").dataType == TimestampType)
     // and the instants agree exactly under the pinned UTC session TZ
-    def us(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+    def us(df: DataFrame): Seq[Long] =
       df.select(Tables.epochUs(col("ts"))).orderBy("ts").as[Long].collect().toSeq
     assert(us(ntz) == us(nanos))
     assert(us(ntz).head == 1704261600000000L) // 2024-01-03T06:00:00Z in µs
@@ -82,6 +83,35 @@ class FixtureContractSpec extends SparkSpec {
       Tables.lineitem(spark, sfDir), Tables.events(spark, sfDir),
       Tables.documents(spark, sfDir), Tables.embeddings(spark, sfDir)
     ).foreach(df => assert(df.schema.nonEmpty))
+  }
+
+  private val fixtures = Seq("region", "nation", "customer", "supplier", "part",
+    "orders", "lineitem", "events", "documents", "embeddings")
+
+  test("Tables: every sf0.001 fixture read resolves its schema without a Spark job") {
+    val loads: Seq[(SparkSession, String) => DataFrame] =
+      Seq(Tables.region, Tables.nation, Tables.customer, Tables.supplier, Tables.part,
+        Tables.orders, Tables.lineitem, Tables.events, Tables.documents, Tables.embeddings)
+    fixtures.zip(loads).foreach { case (t, load) =>
+      val (_, jobs) = jobsDuring(load(spark, sfDir))
+      assert(jobs == 0, s"Tables.$t ran $jobs job(s)")
+    }
+  }
+
+  test("Tables: each fixture's footer schema equals the one Spark infers") {
+    fixtures.foreach { t =>
+      assert(Tables.table(spark, sfDir, t).schema ==
+        spark.read.parquet(s"$sfDir/$t.parquet").schema, t)
+    }
+  }
+
+  test("Tables.customer: a footer without c_mktsegment is drift, not a null column") {
+    val dir = tmpDir("fix-missing")
+    Tables.customer(spark, sfDir).drop("c_mktsegment")
+      .write.mode("overwrite").parquet(s"$dir/customer.parquet")
+    val e = intercept[IllegalStateException](Tables.customer(spark, dir))
+    assert(e.getMessage.contains("fixture drift") && e.getMessage.contains("customer"),
+      e.getMessage)
   }
 
   test("Tables.epochUs is total over NTZ and LTZ and agrees across them") {

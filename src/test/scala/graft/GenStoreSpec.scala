@@ -84,4 +84,34 @@ class GenStoreSpec extends SparkSpec {
     gs.writeBatch(empty, "lone", 1L, Seq("p"))
     assert(!gs.hasBatches("lone"))
   }
+
+  test("readBatches resolves its schema from one footer: the inferred schema and rows, no job") {
+    val dir = tmpDir("genstore-footer")
+    val gs = new GenStore(spark, dir, "GenStoreSpec", Seq("ds"))
+    for (k <- 1L to 3L) gs.claim(k, None) {
+      gs.writeBatch(Seq((k, (k % 2).toInt, s"r$k"), (k + 10, 1, "s")).toDF("id", "p", "v"),
+        "ds", k, Seq("p"))
+      gs.publish(k, 1L, k, None, None, None, None, _ => true)(p => gs.fs.mkdirs(p))
+    }
+    val g = gs.newest
+    val (df, jobs) = jobsDuring(gs.readBatches("ds", g))
+    val inferred = spark.read.parquet(s"$dir/ds")
+      .filter(col("__batch") >= g.base && col("__batch") <= g.k)
+    assert(jobs == 0, s"$jobs job(s) to read the batches' schema")
+    assert(df.schema == inferred.schema)
+    assert(df.schema("__batch").dataType == inferred.schema("__batch").dataType)
+    assert(df.collect().toSet == inferred.collect().toSet)
+    assert(df.count() == 6)
+  }
+
+  test("readBatches of a dataset holding no data file still throws") {
+    val dir = tmpDir("genstore-nodata")
+    val gs = new GenStore(spark, dir, "GenStoreSpec", Seq("ds"))
+    gs.claim(1L, None) {
+      gs.publish(1L, 0L, 0L, None, None, None, None, _ => true)(p => gs.fs.mkdirs(p))
+    }
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir, "ds", "__batch=1"))
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "ds", "__batch=1", "_SUCCESS"), "")
+    intercept[org.apache.spark.sql.AnalysisException](gs.readBatches("ds", gs.newest).schema)
+  }
 }

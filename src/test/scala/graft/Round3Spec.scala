@@ -454,13 +454,16 @@ class Round3Spec extends SparkSpec {
     // getOrCreate() returns the already-active session without re-running
     // extension injection — so clear the singletons, build a sibling
     // session over the same SparkContext, and restore afterwards.
+    // The shared session is forced before the clear: resolved after it,
+    // the lazy session would be the sibling itself.
     import org.apache.spark.sql.classic.{SparkSession => CS}
+    val shared = spark.asInstanceOf[CS]
     CS.clearDefaultSession(); CS.clearActiveSession()
     val s2 =
       try CS.builder().withExtensions(e => new GraftExtensions().apply(e)).getOrCreate()
       finally {
-        CS.setDefaultSession(spark.asInstanceOf[CS])
-        CS.setActiveSession(spark.asInstanceOf[CS])
+        CS.setDefaultSession(shared)
+        CS.setActiveSession(shared)
       }
     val dot = s2.sql("SELECT dot_f64(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d")
       .collect().head.getDouble(0)

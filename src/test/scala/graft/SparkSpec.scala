@@ -41,6 +41,23 @@ abstract class SparkSpec extends AnyFunSuite {
     documentsOf(docs).repartition(4)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
 
+  /** `body`'s result and the number of Spark jobs started while it ran. */
+  protected def jobsDuring[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusAccess.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      val a = body
+      org.apache.spark.ListenerBusAccess.drain(sc)
+      (a, jobs.get)
+    } finally sc.removeSparkListener(l)
+  }
+
   /** Run `body` with session confs set, restoring (set-back or unset)
     * on every exit — the shared session must never leak one suite's
     * conf into the next. Hoisted here from seven identical per-suite
